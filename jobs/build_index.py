@@ -33,9 +33,6 @@ def main() -> None:
     ap.add_argument("--assume-unique", action="store_true",
                     help="input is unique by normalized url: skip the "
                          "upsert-dedup shuffle (bulk snapshot loads)")
-    ap.add_argument("--no-fused", action="store_true",
-                    help="A/B switch: legacy JVM explode→groupBy→doclens-"
-                         "join dataflow instead of the fused Arrow kernel")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -64,8 +61,7 @@ def main() -> None:
     # cache as a side effect (extract+tokenize+agg in ONE corpus pass);
     # the page count afterwards reads the cache only
     meta = store.build(spark, prepared, build_id=args.build_id,
-                       checkpoint_groups=args.checkpoint_groups,
-                       fused=not args.no_fused)
+                       checkpoint_groups=args.checkpoint_groups)
     n_pages = prepared.count()
     dt = time.time() - t0
 

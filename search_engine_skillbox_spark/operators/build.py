@@ -29,8 +29,6 @@ Scale notes (10^12 docs, 1000 executors):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -127,48 +125,18 @@ def postings_fused_docs(docs: DataFrame, doc_col: str = "doc_id",
     return docs.select(*cols).mapInPandas(_gen, schema)
 
 
-def explode_postings(docs_fused: DataFrame,
+def explode_postings(docs: DataFrame,
                      with_host: bool = False) -> DataFrame:
     """Flat (doc_id, term, tf, dl[, host]) posting view over a
     postings_fused_docs frame — JVM-side arrays_zip + explode, fully
     codegen'd; row order per doc is the arrays' order (= the flat
     kernel's historical emit order)."""
     cols = ["doc_id", "dl"] + (["host"] if with_host else [])
-    z = docs_fused.select(*cols,
-                          F.explode(F.arrays_zip("terms", "tfs"))
-                          .alias("p"))
+    z = docs.select(*cols,
+                    F.explode(F.arrays_zip("terms", "tfs")).alias("p"))
     return z.select("doc_id", F.col("p.terms").alias("term"),
                     F.col("p.tfs").alias("tf"), "dl",
                     *(["host"] if with_host else []))
-
-
-def postings_flat_fused(docs: DataFrame, doc_col: str = "doc_id",
-                        text_col: str = "text",
-                        host_col: str | None = None) -> DataFrame:
-    """(doc_id, term, tf, dl[, host]) in ONE Arrow pass — tokenize AND
-    per-doc tf aggregation inside the Python kernel (byte-identical
-    twin equality is pinned by the streaming≡batch test and the
-    index_block_roundtrip / search_wand_topk gate rows, which verify
-    blocks built THROUGH this path against a DuckDB recompute).
-
-    Why it exists: all terms of a doc live in its own input row, so tf
-    needs no (doc_id, term) exchange at all — this is a NARROW
-    transformation. It replaces the two widest shuffles of the physical
-    build: the explode→groupBy(doc,term) exchange (~Σdl rows) and the
-    doc-keyed doclens join that round 2 added to carry dl into every
-    posting for join-free BM25. The logical/oracle path (postings_flat)
-    stays JVM-side built-ins.
-
-    Since round 8 this is a thin flat view (explode_postings) over the
-    per-doc kernel (postings_fused_docs — see its docstring for why
-    doc-level values cross the Python boundary once, not per posting).
-
-    host_col: when set, the doc's host rides on every posting row the
-    same way dl does — the build's per-host statistics and the doclens
-    dimension then need NO doc-keyed join back to the corpus at all."""
-    return explode_postings(
-        postings_fused_docs(docs, doc_col, text_col, host_col),
-        with_host=host_col is not None)
 
 
 def doc_lengths(docs: DataFrame, doc_col: str = "doc_id",
@@ -199,13 +167,6 @@ def corpus_size(postings: DataFrame) -> int:
     """A4: N = number of docs with ≥1 indexed term (NOT all doc rows —
     ref repository/IndexRepository.java:46-47 counts over search_index)."""
     return postings.select("doc_id").distinct().count()
-
-
-@dataclass
-class IndexStats:
-    n_docs: int        # index-participating docs (A4 semantics)
-    avgdl: float       # average doc length over participating docs
-    n_terms: int       # distinct terms
 
 
 def build_index_frames(docs: DataFrame, doc_col: str = "doc_id",

@@ -188,6 +188,11 @@ def encode_runs_batch(ids: np.ndarray, tfs: np.ndarray,
     run_block_base: first block_id of each run (impact tiers encode a
     term's hot and cold segments as two runs with consecutive ids).
 
+    Precondition: the runs TILE the arrays — run_starts[1:] ==
+    run_ends[:-1] and run_ends[-1] == ids.size — because the per-block
+    statistics are reduceat segments, each ending where the next block
+    starts (a gap would fold foreign postings into a block's max).
+
     Returns a dict of per-block numpy/object arrays:
     {block_id, n, max_tf, first_doc, last_doc, docs, tfs, dls, max_imp,
     run_idx} — run_idx maps each block back to its run so the caller
@@ -205,6 +210,8 @@ def encode_runs_batch(ids: np.ndarray, tfs: np.ndarray,
                 "first_doc": empty_i, "last_doc": empty_i,
                 "docs": [], "tfs": [], "dls": None, "max_imp": None,
                 "run_idx": empty_i}
+    assert (np.array_equal(run_starts[1:], run_ends[:-1])
+            and run_ends[-1] == n_rows), "runs must tile the arrays"
     # expand runs → blocks: j = block index within its run
     run_idx = np.repeat(np.arange(nb_r.size, dtype=np.int64), nb_r)
     excl = np.zeros(nb_r.size, np.int64)

@@ -34,6 +34,7 @@ from __future__ import annotations
 import json
 import math
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -41,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import Lineage
-from .build import build_index_frames
+from .build import explode_postings, postings_fused_docs
 from .codec import BLOCK_SIZE, encode_runs_batch
 
 BLOCKS_SCHEMA = ("term string, salt int, tier int, block_id int, n int, "
@@ -67,16 +68,23 @@ FORMAT_VERSION = 6
 TIER0_POSTINGS = 2048  # per-(term,salt) hot-tier size (≥ 16 blocks)
 
 
+# Scale-adaptive docs/doclens layout: partition-dir counts derived from
+# corpus size (~12.5k docs per doc_bucket) and from DISTINCT host count,
+# each capped so a huge build keeps a sane directory count; the docs/
+# write runs one task per DOCS_PER_WRITE_TASK docs.
+DOCS_PER_BUCKET = 12_500
+MAX_DOC_BUCKETS = 1024
+HOSTS_PER_BUCKET = 1000
+MAX_HOST_BUCKETS = 256
+DOCS_PER_WRITE_TASK = 12_500
+
+
 def _adaptive_doc_buckets(n_docs: int) -> int:
     """docs/doclens partition-dir count derived from corpus size
-    (guide: partitioning must be scale-adaptive, file sizes sensible).
-    Defaults keep ≥ ~25k docs per doc_bucket; both knobs are env-
-    parameterized for cluster deployments (more buckets = finer
-    point-read pruning and more write parallelism, at the cost of
-    directory count)."""
-    per = int(os.environ.get("SPARK_GRAFT_DOCS_PER_BUCKET", "12500"))
-    cap = int(os.environ.get("SPARK_GRAFT_MAX_DOC_BUCKETS", "1024"))
-    return max(1, min(cap, -(-n_docs // max(1, per))))
+    (guide: partitioning must be scale-adaptive, file sizes sensible):
+    more buckets = finer point-read pruning and more write parallelism,
+    at the cost of directory count."""
+    return max(1, min(MAX_DOC_BUCKETS, -(-n_docs // DOCS_PER_BUCKET)))
 
 
 def _adaptive_host_buckets(n_hosts: int) -> int:
@@ -85,9 +93,7 @@ def _adaptive_host_buckets(n_hosts: int) -> int:
     host-sorted row-group stats, so one dir level avoids n_buckets×
     file multiplication; with many hosts (a real crawl), buckets come
     back so a site query prunes to 1/n_host_buckets of docs/."""
-    per = int(os.environ.get("SPARK_GRAFT_HOSTS_PER_BUCKET", "1000"))
-    cap = int(os.environ.get("SPARK_GRAFT_MAX_HOST_BUCKETS", "256"))
-    return max(1, min(cap, -(-n_hosts // max(1, per))))
+    return max(1, min(MAX_HOST_BUCKETS, -(-n_hosts // HOSTS_PER_BUCKET)))
 
 
 def make_block_encoder(avgdl: float | None,
@@ -203,7 +209,10 @@ def make_block_encoder(avgdl: float | None,
         return pd.DataFrame(out)
 
     def _encode_partition(batches):
-        carry: tuple | None = None  # (terms, salts, ids, tfs, dls)
+        # chunks of the open (term, salt) group — it may continue in the
+        # next batch; concatenated once, when its end is found, so a
+        # group spanning many batches is copied once, not per batch
+        carry: list[tuple] = []
         got_any = False
         for pdf in batches:
             if pdf.empty:
@@ -213,27 +222,32 @@ def make_block_encoder(avgdl: float | None,
                     pdf["doc_id"].to_numpy(np.int64),
                     pdf["tf"].to_numpy(np.int64),
                     pdf["dl"].to_numpy(np.int64))
-            if carry is not None:
-                cols = tuple(np.concatenate((c, b))
-                             for c, b in zip(carry, cols))
             terms, salts = cols[0], cols[1]
             change = np.empty(terms.size, bool)
-            change[0] = True
+            change[0] = (not carry or terms[0] != carry[-1][0][-1]
+                         or salts[0] != carry[-1][1][-1])
             change[1:] = ((terms[1:] != terms[:-1])
                           | (salts[1:] != salts[:-1]))
-            gstarts = np.flatnonzero(change)
-            if gstarts.size == 1:
-                carry = cols  # one (possibly incomplete) group
+            bounds = np.flatnonzero(change)
+            if bounds.size == 0:
+                carry.append(cols)  # the whole batch extends the group
                 continue
-            # hold back the last group — it may continue in the next
-            # batch (the carry in the old per-group loop)
-            cut = int(gstarts[-1])
-            carry = tuple(c[cut:] for c in cols)
-            yield _encode_complete(*(c[:cut] for c in cols),
-                                   gstarts[:-1])
-            got_any = True
-        if carry is not None and carry[0].size:
-            yield _encode_complete(*carry, np.zeros(1, np.int64))
+            # hold back the last group; everything before it is complete
+            cut = int(bounds[-1])
+            n_open = sum(c[0].size for c in carry)
+            gstarts = bounds[:-1] + n_open
+            if n_open:
+                gstarts = np.concatenate(([0], gstarts))
+            if gstarts.size:
+                yield _encode_complete(
+                    *(np.concatenate([c[k] for c in carry] + [col[:cut]])
+                      for k, col in enumerate(cols)), gstarts)
+                got_any = True
+            carry = [tuple(c[cut:] for c in cols)]
+        if carry:
+            yield _encode_complete(
+                *(np.concatenate([c[k] for c in carry]) for k in range(5)),
+                np.zeros(1, np.int64))
             got_any = True
         if not got_any:
             yield pd.DataFrame(
@@ -295,49 +309,34 @@ class IndexStore:
 
     def build(self, spark: SparkSession, prepared: DataFrame,
               build_id: str = "b0", checkpoint_groups: int = 4,
-              fail_after_group: int | None = None,
-              fused: bool = True) -> dict:
+              fail_after_group: int | None = None) -> dict:
         """prepared: output of sources.pages.prepare_pages.
 
-        checkpoint_groups: number of sequential bucket groups, each one
-        an atomic resume unit with a lineage row. fail_after_group is a
-        test hook to simulate a crash mid-build.
+        checkpoint_groups: number of bucket groups, each one an atomic
+        resume unit with a lineage row. fail_after_group is a test hook
+        to simulate a crash mid-build.
 
-        fused=True tokenizes + tf-aggregates in one Arrow kernel
+        Tokenize + tf-aggregate run in one Arrow kernel
         (build.postings_fused_docs): ONE cached row per doc carrying
         dl, host and the (terms, tfs) arrays, so the (doc,term) groupBy
-        exchange and the doc-keyed doclens join both disappear from the
+        exchange and the doc-keyed doclens join both stay out of the
         plan, doc-level values cross the Python boundary once instead
         of once per posting, and the doclens dimension is a column
         SELECT of the cache (no aggregation). Flat posting rows are a
         JVM-side explode view materialized only where consumed.
-        fused=False keeps the JVM explode → groupBy → doclens-join
-        dataflow (A/B + oracle-shaped twin).
         """
         lineage = Lineage(os.path.join(self.path, "lineage.jsonl"))
         done = lineage.done_partitions(build_id)
 
-        docs_fused: DataFrame | None = None
-        if fused:
-            from .build import explode_postings, postings_fused_docs
-            # host rides out of the kernel with dl: the doclens
-            # dimension and the per-host stats below then never join
-            # back to the corpus (two doc-keyed joins removed from the
-            # round-7 plan; the host column is projected away before
-            # the (term, salt) block exchange). The CACHE holds the
-            # per-doc array form (~40 % smaller than flat posting rows
-            # — no repeated doc_id/dl/host); every flat consumer
-            # re-derives rows via codegen'd explode at scan time.
-            docs_fused = postings_fused_docs(prepared,
-                                             host_col="host").persist()
-            postings = explode_postings(docs_fused, with_host=True)
-        else:
-            p = build_index_frames(prepared)[0]
-            dls = p.groupBy("doc_id").agg(
-                F.sum("tf").cast("long").alias("dl"))
-            postings = (p.join(dls, "doc_id")
-                        .join(prepared.select("doc_id", "host"), "doc_id")
-                        .persist())
+        # host rides out of the kernel with dl: the doclens dimension
+        # and the per-host stats below then never join back to the
+        # corpus (the host column is projected away before the
+        # (term, salt) block exchange). The CACHE holds the per-doc
+        # array form (~40 % smaller than flat posting rows — no
+        # repeated doc_id/dl/host); every flat consumer re-derives rows
+        # via codegen'd explode at scan time.
+        docs_fused = postings_fused_docs(prepared, host_col="host").persist()
+        postings = explode_postings(docs_fused, with_host=True)
         bucket = F.pmod(F.xxhash64(F.col("term")), F.lit(self.n_buckets))
         # ONE terms aggregation carrying df+cf+max_tf together (round 1
         # ran a (df,cf) agg plus a separate max_tf agg plus a join — two
@@ -360,10 +359,9 @@ class IndexStore:
         # Materialize the caches before the dims/blocks threads fork: two
         # lazy threads racing an unmaterialized persist() compute the whole
         # lineage twice (observed as duplicated 128-task stages). ONE job
-        # suffices — computing terms scans the posting source (docs_fused
-        # in fused mode, flat postings otherwise), which scans prepared,
-        # so every cache fills in the same pass. Lineage-timed so the
-        # scaling report can decompose the serial tail per phase.
+        # suffices — computing terms scans docs_fused, which scans
+        # prepared, so every cache fills in the same pass. Lineage-timed
+        # so the scaling report can decompose the serial tail per phase.
         t_mat = lineage.start(build_id, "materialize")
         # one agg fills the cache AND yields the dashboard lemma count
         # plus the max df — the latter decides below whether any term
@@ -373,33 +371,20 @@ class IndexStore:
         n_terms_total = int(_mrow["n"])
         max_df = int(_mrow["mdf"] or 0)
         lineage.done(build_id, "materialize", t_mat, rows=0, nbytes=0)
-        # The doclens dimension (doc_id, dl, host): in fused mode the
-        # cache already holds ONE row per doc, so this is a column
-        # SELECT — no aggregation, no separate persist (each scan is a
-        # cheap projection of the docs_fused cache; measured 0.6 s at
-        # 4M docs vs 15.0 s for the flat-row groupBy it replaces). The
-        # non-fused twin keeps the per-doc agg over flat posting rows
-        # (map-side combine; docs never span input partitions).
-        # Zero-term docs have no row and BM25 never weights them.
-        if docs_fused is not None:
-            doclens = docs_fused.select(
-                "doc_id", F.col("dl").cast("int").alias("dl"), "host")
-        else:
-            doclens = postings.groupBy("doc_id").agg(
-                F.max("dl").cast("int").alias("dl"),
-                # min(), not first(): every posting of a doc SHOULD
-                # carry one host, but this twin path attaches host via
-                # a doc_id join, and a doc_id hash collision (two
-                # url_norms → one id) would make first() run-order
-                # nondeterministic where min() stays reproducible; the
-                # per-row string compare only runs on this A/B path
-                F.min("host").alias("host")).persist()
+        # The doclens dimension (doc_id, dl, host): the cache already
+        # holds ONE row per doc, so this is a column SELECT — no
+        # aggregation, no separate persist (each scan is a cheap
+        # projection of the docs_fused cache; measured 0.6 s at 4M docs
+        # vs 15.0 s for a flat-row groupBy). Zero-term docs have no row
+        # and BM25 never weights them.
+        doclens = docs_fused.select(
+            "doc_id", F.col("dl").cast("int").alias("dl"), "host")
         # ONE pre-fork job yields N / Σdl / avgdl AND the per-host doc
         # counts (meta n_docs_by_host — host cardinality is bounded by
-        # the meta contract); in fused mode it aggregates n_docs rows
-        # (the per-doc cache projection), not posting rows. avgdl is
-        # the impact basis the block encoder stamps into max_imp (BM25
-        # block pruning). Round 7 ran a global agg here plus a separate
+        # the meta contract); it aggregates n_docs rows (the per-doc
+        # cache projection), not posting rows. avgdl is the impact
+        # basis the block encoder stamps into max_imp (BM25 block
+        # pruning). Round 7 ran a global agg here plus a separate
         # per-host countDistinct-over-postings job in the dims phase.
         per_host_rows = (doclens.groupBy("host")
                          .agg(F.count(F.lit(1)).alias("nd"),
@@ -523,10 +508,9 @@ class IndexStore:
                     # distinct key values). Result: ~2 files per dir
                     # at any scale instead of tasks × dirs.
                     n_dirs = self.n_host_buckets * self.n_doc_buckets
-                    per_task = int(os.environ.get(
-                        "SPARK_GRAFT_DOCS_PER_WRITE_TASK", "12500"))
-                    w_tasks = max(1, min(shuffle_parts,
-                                         -(-n_docs_total // per_task)))
+                    w_tasks = max(1, min(
+                        shuffle_parts,
+                        -(-n_docs_total // DOCS_PER_WRITE_TASK)))
                     sub = max(1, -(-2 * w_tasks // n_dirs))
                     base = base.repartition(
                         w_tasks, F.col("host_bucket"), F.col("doc_bucket"),
@@ -572,7 +556,6 @@ class IndexStore:
                                                for r in prows}
 
                 stats["per_host"] = dict(nd_by_host)
-                from concurrent.futures import ThreadPoolExecutor
                 with ThreadPoolExecutor(5) as pool:
                     futs = [pool.submit(f) for f in
                             (w_terms, w_doclens, w_docs, agg_host,
@@ -605,10 +588,6 @@ class IndexStore:
                 lineage.failed(build_id, pid, t0, str(e))
                 raise
 
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-        dims_pool = _TPE(1)
-        dims_fut = dims_pool.submit(run_dims)
-
         def encode_pipeline(src: DataFrame) -> DataFrame:
             return (src
                     .repartition(shuffle_parts, "term", "salt")
@@ -620,54 +599,16 @@ class IndexStore:
                         F.pmod(F.xxhash64(F.col("term")),
                                F.lit(self.n_buckets)).cast("int")))
 
-        # SMALL builds (bench/gate scale): the per-group exchange +
-        # sort + Python encode stage is pure fixed cost repeated
-        # checkpoint_groups times over a few hundred thousand rows —
-        # encode ONCE over every not-yet-done bucket into a persisted
-        # frame, then each group writes its slice from the cache. Group
-        # atomicity is untouched (same per-group writes + lineage rows;
-        # a crash still leaves a resumable subset). LARGE builds keep
-        # the per-group streaming pipelines — MEASURED at 4M docs
-        # (round 8 session 2): each group's exchange already carries
-        # only that group's bucket slice, so the shared pass moves the
-        # same total bytes and the wall is identical (253.8 s shared vs
-        # 230.8-253.7 s streaming) while the extra encoded cache pushed
-        # a 16 GB local driver toward heap OOM. Raising the gate via
-        # env therefore buys nothing at this shape; if raised anyway,
-        # the cache tier above SPARK_GRAFT_SHARED_ENCODE_MEM_DOCS
-        # (default 2M) is DISK_ONLY so encoded batches never compete
-        # for heap with the corpus + per-doc caches.
-        small_docs = int(os.environ.get(
-            "SPARK_GRAFT_SHARED_ENCODE_MEM_DOCS", "2000000"))
-        shared_docs = int(os.environ.get(
-            "SPARK_GRAFT_SHARED_ENCODE_MAX_DOCS", "2000000"))
-        undone_buckets = [b for gi, bs in enumerate(groups)
-                          if f"blocks-g{gi}" not in done for b in bs]
-        encoded_all: DataFrame | None = None
-        if len(groups) > 1 and undone_buckets \
-                and n_docs_total <= shared_docs:
-            from pyspark import StorageLevel
-            lvl = (StorageLevel.MEMORY_AND_DISK
-                   if n_docs_total <= small_docs
-                   else StorageLevel.DISK_ONLY)
-            encoded_all = encode_pipeline(
-                salted.filter(F.col("bucket").isin(undone_buckets))
-            ).persist(lvl)
-            # materialize BEFORE the group threads fork — concurrent
-            # readers of an unmaterialized persist compute it once each
-            encoded_all.count()
-
         def run_group(gi: int, buckets: list[int]) -> None:
             pid = f"blocks-g{gi}"
             if pid in done:
                 return
             t0 = lineage.start(build_id, pid)
             try:
-                if encoded_all is not None:
-                    part = encoded_all.filter(F.col("bucket").isin(buckets))
-                else:
-                    part = encode_pipeline(
-                        salted.filter(F.col("bucket").isin(buckets)))
+                # each group's exchange carries only its own bucket
+                # slice, so the groups together move each posting once
+                part = encode_pipeline(
+                    salted.filter(F.col("bucket").isin(buckets)))
                 target = os.path.join(self.path, "blocks")
                 # coalesce encoded (small, compressed) rows to one task
                 # per bucket: 32 output files instead of tasks×buckets,
@@ -702,50 +643,26 @@ class IndexStore:
                 lineage.failed(build_id, pid, t0, str(e))
                 raise
 
-        # Groups run CONCURRENTLY (each still an atomic lineage unit over
-        # disjoint bucket partitions): one group's shuffle/encode overlaps
-        # another's write-commit + the dims phase, filling the stage-tail
-        # idle slots that capped N→4N scaling at 0.61 in round 1. A crash
+        # Groups run CONCURRENTLY with each other and with dims on one
+        # pool (each still an atomic lineage unit over disjoint bucket
+        # partitions): one group's shuffle/encode overlaps another's
+        # write-commit + the dims phase, filling the stage-tail idle
+        # slots that capped N→4N scaling at 0.61 in round 1. A crash
         # leaves an arbitrary subset of groups DONE — resume (done-skip)
         # is order-independent, so semantics are unchanged.
-        blocks_err: Exception | None = None
-        try:
-            if len(groups) == 1:
-                run_group(0, groups[0])
-            else:
-                with _TPE(min(4, len(groups))) as gpool:
-                    futs = {gpool.submit(run_group, gi, b): gi
-                            for gi, b in enumerate(groups)}
-                    for f in futs:
-                        try:
-                            f.result()
-                        except Exception as e:
-                            if blocks_err is None:
-                                blocks_err = e
-            if blocks_err is not None:
-                raise blocks_err
-        finally:
-            try:
-                dims_fut.result()
-            except Exception:
-                if blocks_err is None:
-                    dims_pool.shutdown()
-                    raise
-            dims_pool.shutdown()
+        with ThreadPoolExecutor(min(4, len(groups)) + 1) as pool:
+            dims_fut = pool.submit(run_dims)
+            futs = [pool.submit(run_group, gi, b)
+                    for gi, b in enumerate(groups)]
+        # the first failed group's error wins; dims' only if none failed
+        for f in futs + [dims_fut]:
+            if f.exception() is not None:
+                raise f.exception()
 
-        if encoded_all is not None:
-            # blocking: the build's caches are corpus-scale — release
-            # their blocks BEFORE the caller's next job allocates, so
-            # a 16 GB local driver isn't holding two generations of
-            # cache across the boundary (post-build heap OOM observed
-            # at 4M with async unpersist + the shared encoded cache)
-            encoded_all.unpersist(blocking=True)
-        if docs_fused is not None:
-            # fused: postings/doclens are views over this one cache
-            docs_fused.unpersist(blocking=True)
-        else:
-            postings.unpersist(blocking=True)
-            doclens.unpersist(blocking=True)
+        # blocking: the build's caches are corpus-scale — release them
+        # BEFORE the caller's next job allocates (postings/doclens are
+        # views over this one cache)
+        docs_fused.unpersist(blocking=True)
         terms_full.unpersist()
         self.invalidate_reads()
         return self.meta()

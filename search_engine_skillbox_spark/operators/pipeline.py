@@ -515,6 +515,17 @@ def _parquet_stats(path: str) -> tuple[int, int]:
     return rows, nbytes
 
 
+def _read_marker(marker: str) -> str | None:
+    """The build_id in a stage dir's _BUILD_ID marker; None when it is
+    missing or unreadable, which the resume treats as a mismatch (the
+    stage re-runs) instead of aborting."""
+    try:
+        with open(marker) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 def clean_corpus(spark, input_path: str, workdir: str,
                  stages=None, build_id: str | None = None,
                  extra_sig: str = "") -> dict:
@@ -576,8 +587,7 @@ def clean_corpus(spark, input_path: str, workdir: str,
         marker = os.path.join(out, "_BUILD_ID")
         if (name in done
                 and os.path.exists(os.path.join(out, "_SUCCESS"))
-                and os.path.exists(marker)
-                and open(marker).read() == build_id):
+                and _read_marker(marker) == build_id):
             rows, nbytes = _parquet_stats(out)
             results.append({"stage": name, "path": out, "sec": 0.0,
                             "skipped": True, "rows_out": rows,

@@ -204,6 +204,40 @@ def test_resume(spark, prepared, index_frames, tmp_path):
     assert _flat(decoded_postings(st.blocks(spark))) == _flat(postings)
 
 
+def test_layout_independent_of_group_split(spark, prepared, tmp_path):
+    """The store does not depend on how the build is split into
+    checkpoint groups: one group and four groups (salted branch on,
+    salt_threshold=50) write identical blocks/, terms/ and doclens/
+    rows — every column, encoded bytes included — and the same meta."""
+    import json
+    import os
+
+    def build(groups):
+        st = IndexStore(str(tmp_path / f"g{groups}"), n_buckets=8,
+                        salt_threshold=50)
+        st.build(spark, prepared, checkpoint_groups=groups)
+        st.close()
+        return st.path
+
+    def rows(path, table):
+        df = spark.read.parquet(os.path.join(path, table))
+        return sorted(tuple(r) for r in
+                      df.select(sorted(df.columns)).collect())
+
+    def meta(path):
+        with open(os.path.join(path, "meta.json")) as f:
+            m = json.load(f)
+        m.pop("build_id")
+        return m
+
+    one, four = build(1), build(4)
+    assert spark.read.parquet(os.path.join(one, "blocks")) \
+        .filter(F.col("salt") > 0).count() > 0, "salting must run"
+    for table in ("blocks", "terms", "doclens"):
+        assert rows(one, table) == rows(four, table), table
+    assert meta(one) == meta(four)
+
+
 @pytest.mark.parametrize("mode", ["compat", "bm25"])
 def test_wand_arrow_lookup_equals_plain(spark, store, index_frames, mode,
                                         qterms_idx):

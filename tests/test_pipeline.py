@@ -491,3 +491,30 @@ def test_external_bench_resume_identity(spark, tmp_path):
     sig_b = default_clean_stages(bench=spark.read.parquet(bench_b),
                                  gopher_structural_only=True).params_sig
     assert sig_a == sig_b
+
+
+def test_unreadable_build_id_marker_reruns_stage(spark, tmp_path):
+    """A _BUILD_ID marker that cannot be read (here: a directory at the
+    marker path) counts as a build mismatch — the resume re-runs that
+    stage and rewrites the marker instead of aborting."""
+    import os
+
+    from search_engine_skillbox_spark.operators.pipeline import (
+        clean_corpus, default_clean_stages)
+
+    raw = _clean_input(spark, tmp_path, n=120)
+    stages = list(default_clean_stages(gopher_structural_only=True))[:2]
+    work = str(tmp_path / "work_marker")
+    first = clean_corpus(spark, raw, work, stages=stages)
+    assert not any(s["skipped"] for s in first["stages"])
+
+    marker = os.path.join(first["stages"][1]["path"], "_BUILD_ID")
+    os.remove(marker)
+    os.mkdir(marker)
+    res = clean_corpus(spark, raw, work, stages=stages)
+    assert [s["skipped"] for s in res["stages"]] == [True, False]
+    assert ([s["rows_out"] for s in res["stages"]]
+            == [s["rows_out"] for s in first["stages"]])
+    assert os.path.isfile(marker)
+    again = clean_corpus(spark, raw, work, stages=stages)
+    assert all(s["skipped"] for s in again["stages"])
