@@ -90,8 +90,9 @@ def main() -> None:
 
     # ---- site-filtered profile (T9, VERDICT r3 #1 done-criterion):
     # a site+stopword query must DECODE a small fraction of the
-    # stopword's posting list — the serve_site_lookup debug mark
-    # reports blocks/postings actually decoded vs the term's df.
+    # stopword's posting list — the point reader (serving.
+    # _lookup_postings) fills the serve_site_lookup debug mark with the
+    # blocks/postings it actually decoded, against the term's df.
     from search_engine_skillbox_spark.operators.wand import site_topk
     meta = store.meta()
     by_host = sorted(meta.get("n_docs_by_host", {}).items(),

@@ -742,109 +742,6 @@ class IndexStore:
                 .filter(F.col("bucket").isin(buckets))
                 .filter(F.col("term").isin(q_terms)))
 
-    def lookup_postings_arrow(self, term: str,
-                              cand_salts: list[tuple[int, int]]):
-        """SERVING-TIER point lookup, driver-side: decode `term`'s
-        postings for the candidate docs WITHOUT a Spark job.
-
-        cand_salts: [(doc_id, gen0_salt_of_doc)] — a small set (the
-        MaxScore lookup candidates). The bucket file is term-sorted with
-        small row groups, so the parquet footer statistics locate the
-        term's row groups directly; metadata columns (ranges/salt/gen)
-        are read first and the binary posting columns are fetched only
-        for row groups that actually contain a covering block. This is
-        the physical shape of a point-read: a top-k serving layer does
-        these from an index node, not with a cluster scan — wand_topk
-        falls back to the distributed range join when tombstones exist
-        (lookup must see deletes) or the candidate set is large.
-
-        Returns (doc_ids, tfs, dls) numpy arrays of matching postings
-        (gen-0 blocks matched on salt+range, gen>0 on range alone),
-        restricted to candidate doc_ids."""
-        from .serving import borrow_files
-        with borrow_files(self):
-            return self._lookup_postings_arrow(term, cand_salts)
-
-    def _lookup_postings_arrow(self, term: str,
-                               cand_salts: list[tuple[int, int]]):
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        from ..functions.hashing import term_bucket
-        from .codec import decode_block
-        b = term_bucket(term, self.n_buckets)
-        bdir = os.path.join(self.path, "blocks", f"bucket={b}")
-        cand_all = np.sort(np.array([d for d, _ in cand_salts], np.int64))
-        by_salt: dict[int, np.ndarray] = {}
-        for d, s in cand_salts:
-            by_salt.setdefault(s, []).append(d)
-        by_salt = {s: np.sort(np.array(v, np.int64))
-                   for s, v in by_salt.items()}
-
-        def _covers(arr: np.ndarray, fd: int, ld: int) -> bool:
-            i = int(np.searchsorted(arr, fd, "left"))
-            return i < arr.size and int(arr[i]) <= ld
-
-        ids_out, tfs_out, dls_out = [], [], []
-        n_blocks = n_postings = 0
-        meta_cols = ["term", "salt", "gen", "first_doc", "last_doc"]
-        from .serving import _bucket_files
-        # memoized handles (closed via close()/invalidate_reads) — a
-        # per-call open would leak one fd per file until GC
-        for pf in _bucket_files(self, "blocks", b):
-            md = pf.metadata
-            tcol = next(i for i in range(md.num_columns)
-                        if md.schema.column(i).name == "term")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(tcol).statistics
-                if (st is not None and st.has_min_max
-                        and not (st.min <= term <= st.max)):
-                    continue
-                from .serving import _read_rg
-                mtbl = _read_rg(pf, rg, meta_cols)
-                terms_a = mtbl.column("term").to_pylist()
-                salts_a = mtbl.column("salt").to_pylist()
-                gens_a = mtbl.column("gen").to_pylist()
-                fds = mtbl.column("first_doc").to_pylist()
-                lds = mtbl.column("last_doc").to_pylist()
-                idxs = []
-                for i in range(len(terms_a)):
-                    if terms_a[i] != term:
-                        continue
-                    fd, ld = fds[i], lds[i]
-                    if gens_a[i] != 0:
-                        if _covers(cand_all, fd, ld):
-                            idxs.append(i)
-                    else:
-                        arr = by_salt.get(salts_a[i])
-                        if arr is not None and _covers(arr, fd, ld):
-                            idxs.append(i)
-                if not idxs:
-                    continue
-                btbl = _read_rg(
-                    pf, rg, ["docs", "tfs", "dls"]).take(idxs)
-                for j in range(len(idxs)):
-                    d, t, dl = decode_block(
-                        btbl.column("docs")[j].as_py(),
-                        btbl.column("tfs")[j].as_py(),
-                        btbl.column("dls")[j].as_py())
-                    n_blocks += 1
-                    n_postings += int(d.size)
-                    keep = np.isin(d, cand_all, assume_unique=False)
-                    if keep.any():
-                        ids_out.append(d[keep])
-                        tfs_out.append(t[keep])
-                        dls_out.append(dl[keep])
-        # decode-volume telemetry for profiling (jobs/query_profile.py):
-        # how much of the term's list a point lookup actually touched
-        self._last_lookup_stats = {"blocks_decoded": n_blocks,
-                                   "postings_decoded": n_postings}
-        if not ids_out:
-            empty = np.empty(0, np.int64)
-            return empty, empty, empty
-        return (np.concatenate(ids_out), np.concatenate(tfs_out),
-                np.concatenate(dls_out))
-
     def query_terms_rows(self, spark: SparkSession, q_terms: list[str]):
         """terms-table rows for the query terms, bucket-pruned the same
         way. MEMOIZED per term driver-side: repeat queries over the same

@@ -21,7 +21,6 @@ per-site rebuild; cost bounded by the query terms' posting lists.
 from __future__ import annotations
 
 import numpy as np
-import os as _os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +28,7 @@ from ..functions.textprep import distinct_query_terms, query_words
 from ..functions.urlutils import site_name_py
 from .index_store import IndexStore
 from .present import build_result_url, build_snippet, build_title
+from .serving import serving_enabled
 from .wand import site_topk, wand_topk
 
 
@@ -55,7 +55,7 @@ def search_service(spark: SparkSession, store: IndexStore, query: str,
     offset = max(0, offset)
     k = offset + limit
 
-    serving_on = _os.environ.get("SPARK_GRAFT_NO_SERVING") != "1"
+    serving_on = serving_enabled()
     has_tomb = store.has_tombstones()
 
     # top-k: serving tier FIRST, called directly — wand_topk/site_topk

@@ -13,11 +13,12 @@ not by decode volume, so the engine now mirrors the reference's
 serving shape: when every read the query needs is provably bounded,
 the driver answers it directly from the store's parquet files.
 
-Exactness: this module re-executes the SAME MaxScore/block-max
-algorithm as wand_topk — same seed/θ/demote/prune/lookup phases, the
-same score expressions (operators/score.py formulas in float64), the
-same tie-breaks — pinned by equality tests against both the plain
-scorer and the distributed WAND path (tests/test_index_store.py).
+Exactness: this module executes the SAME MaxScore/block-max plan as
+wand_topk (score.MaxScorePlan: idf, UBmax, t*, demotion, per-block
+thresholds) — same seed/θ/prune/lookup phases, the same score
+expressions (operators/score.py formulas in float64), the same
+tie-breaks — pinned by equality tests against both the plain scorer
+and the distributed WAND path (tests/test_index_store.py).
 
 Scale discipline (what keeps this 100 TB-safe):
   * gated OFF for tombstoned stores (deletes must be observed by every
@@ -39,7 +40,7 @@ from __future__ import annotations
 import os
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 import numpy as np
 
@@ -88,6 +89,13 @@ META_COLS = ["term", "salt", "tier", "gen", "n", "max_tf",
              "first_doc", "last_doc", "max_imp"]
 
 
+def serving_enabled() -> bool:
+    """False when SPARK_GRAFT_NO_SERVING=1: every request then takes the
+    distributed Spark path (the served-vs-distributed A/B switch). Read
+    per call, so a running process can flip it."""
+    return os.environ.get("SPARK_GRAFT_NO_SERVING") != "1"
+
+
 def _scache(store: IndexStore) -> dict:
     c = getattr(store, "_serve_cache", None)
     if c is None:
@@ -114,15 +122,15 @@ def _slock(store: IndexStore) -> threading.RLock:
     return lk
 
 
-def _read_rg(pf, rg: int, columns):
-    """read_row_group serialized per handle: one pyarrow ParquetFile's
-    reader state is not safe under concurrent reads (distinct handles
-    are). Memoized handles carry _sx_lock; ad-hoc per-call handles
-    don't need one."""
-    lk = getattr(pf, "_sx_lock", None)
-    if lk is None:
-        return pf.read_row_group(rg, columns=columns)
-    with lk:
+def _read(pf, columns, rg: int | None = None):
+    """One row group (or, with rg=None, the whole file), serialized per
+    handle: one pyarrow ParquetFile's reader state is not safe under
+    concurrent reads (distinct handles are). Memoized handles carry
+    _sx_lock; ad-hoc per-call handles are single-threaded by
+    construction and need none."""
+    with getattr(pf, "_sx_lock", None) or nullcontext():
+        if rg is None:
+            return pf.read(columns=columns)
         return pf.read_row_group(rg, columns=columns)
 
 
@@ -139,9 +147,9 @@ def borrow_files(store: IndexStore):
     indefinitely, ADVICE r5), the memo now exceeds FILE_HANDLE_CAP only
     by entries actively referenced right now, which is the correct
     bound: those fds cannot be closed without breaking an in-flight
-    read. Every serving entry point (including terms_rows_arrow and the
-    store's lookup_postings_arrow) wraps itself in this guard, so
-    single-threaded use costs one lock acquisition and nothing else.
+    read. Every serving entry point (including terms_rows_arrow) wraps
+    itself in this guard, so single-threaded use costs one lock
+    acquisition and nothing else.
 
     The borrow registry lives on the store OBJECT (like the lock), NOT
     inside _serve_cache: invalidate_reads swaps the cache dict
@@ -273,17 +281,7 @@ def _terms_rows_arrow(store: IndexStore, q_terms: list[str]):
             for pf in _bucket_files(store, "terms", b):
                 if pf.metadata.num_rows > TERMS_BUCKET_ROWS_CAP:
                     return None
-                # mirrors _read_rg: memoized handles carry _sx_lock;
-                # an ad-hoc handle without one is single-threaded by
-                # construction (minting a fresh lock here would READ as
-                # protection while excluding nothing — ADVICE r5)
-                lk = getattr(pf, "_sx_lock", None)
-                cols = ["term", "df", "cf", "max_tf", "n_salt"]
-                if lk is None:
-                    tbl = pf.read(columns=cols)
-                else:
-                    with lk:
-                        tbl = pf.read(columns=cols)
+                tbl = _read(pf, ["term", "df", "cf", "max_tf", "n_salt"])
                 mask = pc.is_in(tbl.column("term"),
                                 value_set=pa.array(terms))
                 hit = tbl.filter(mask)
@@ -333,7 +331,7 @@ def _term_meta(store: IndexStore, term: str):
             if (st is not None and st.has_min_max
                     and not (st.min <= term <= st.max)):
                 continue
-            tbl = _read_rg(pf, rg, META_COLS)
+            tbl = _read(pf, META_COLS, rg)
             idxs = np.flatnonzero(
                 pc.equal(tbl.column("term"), term).to_numpy(
                     zero_copy_only=False))
@@ -399,7 +397,7 @@ def _decode_selected(store: IndexStore, metas: list[tuple[dict, np.ndarray]],
                 i = j
 
             # one memoized ParquetFile handle is not thread-safe, so
-            # same-handle reads serialize (_read_rg lock); distinct
+            # same-handle reads serialize (_read lock); distinct
             # handles on the same file ARE independent readers. Group
             # spans by file, and when the files alone can't saturate
             # the pool (the large-site shape: ONE bucket file, many row
@@ -461,7 +459,7 @@ def _decode_selected(store: IndexStore, metas: list[tuple[dict, np.ndarray]],
                                 pf.close()
                             except Exception:
                                 pass
-                return [_read_rg(files[fi], rg, cols).take(take)
+                return [_read(files[fi], cols, rg).take(take)
                         for _, rg, take in chunk]
             if len(units) > 1:
                 from concurrent.futures import ThreadPoolExecutor
@@ -549,6 +547,53 @@ def _sorted_membership(sorted_small: np.ndarray, values: np.ndarray):
         return np.concatenate(list(pool.map(_chunk, chunks)))
 
 
+def _covering_blocks(tm: dict, cand_ids: np.ndarray, n_salt: int):
+    """Mask over one term's block metadata: blocks whose [first_doc,
+    last_doc] holds a candidate (cand_ids sorted, unique). Each doc
+    lives in exactly one gen-0 salt, pmod(xxhash64(doc), n_salt), so a
+    gen-0 block only counts candidates of its own salt; incremental
+    appends (gen > 0, always salt 0) count every candidate."""
+    n = cand_ids.size
+    if n == 0:
+        return np.zeros(tm["fi"].size, bool)
+    # candidates inside each block's range = ranks [lo, hi)
+    lo = np.searchsorted(cand_ids, tm["first_doc"], "left")
+    hi = np.searchsorted(cand_ids, tm["last_doc"], "right")
+    cover = hi > lo
+    gen0 = tm["gen"] == 0
+    if gen0.any():
+        from ..functions.hashing import spark_xxhash64_long_np
+        # one sorted key per candidate, salt-major: salt·(n+1) + rank
+        salts = spark_xxhash64_long_np(cand_ids) % n_salt
+        keys = np.sort(salts * (n + 1) + np.arange(n))
+        base = tm["salt"][gen0].astype(np.int64) * (n + 1)
+        i = np.searchsorted(keys, base + lo[gen0], "left")
+        cover[gen0] = ((i < n)
+                       & (keys[np.minimum(i, n - 1)] < base + hi[gen0]))
+    return cover
+
+
+def _lookup_postings(store: IndexStore, term: str, n_salt: int,
+                     cand_ids: np.ndarray, need_dls: bool = True,
+                     stats: dict | None = None):
+    """Point lookup: (doc_ids, tfs, dls) of `term` restricted to the
+    sorted, unique cand_ids. Decodes only the blocks that cover a
+    candidate (_covering_blocks) — ~1 block per candidate per tier,
+    whatever the term's df. Returns None when the term's metadata
+    exceeds META_ROWS_CAP rows (→ the distributed path). `stats`, when
+    given, receives blocks_decoded / postings_decoded."""
+    tm = _term_meta(store, term)
+    if tm is None:
+        return None
+    mask = _covering_blocks(tm, cand_ids, n_salt)
+    (ids, tfs, dls), = _decode_selected(store, [(tm, mask)], need_dls)
+    if stats is not None:
+        stats.update(blocks_decoded=int(mask.sum()),
+                     postings_decoded=int(ids.size))
+    keep = _sorted_membership(cand_ids, ids)
+    return ids[keep], tfs[keep], (dls[keep] if dls is not None else None)
+
+
 def _host_doc_ids(store: IndexStore, host: str):
     """Sorted doc_ids of one host, read driver-side from the docs/
     host-bucket slice (only the doc_id + host columns of the
@@ -627,7 +672,7 @@ def _site_term_postings(store: IndexStore, term: str, trow: dict,
               membership test against the (sorted) host ids — right when df_global is comparable to (or
               smaller than) the site.
       lookup  parquet point reads keyed by the HOST's doc ids
-              (lookup_postings_arrow): each host doc lives in exactly
+              (_lookup_postings): each host doc lives in exactly
               one gen-0 salt, so only blocks whose [first_doc,last_doc]
               covers a host doc in its salt are decoded — ~1 block per
               host doc per tier. Cost tracks the SITE, not the term: a
@@ -638,27 +683,19 @@ def _site_term_postings(store: IndexStore, term: str, trow: dict,
     mode_budget = [remaining_decode_budget]; mutated. Returns None on a
     budget/cap breach → the caller falls back to distributed."""
     df_g = int(trow["df"])
-    use_lookup = (df_g > lookup_factor * host_ids.size
-                  and host_ids.size <= SITE_LOOKUP_IDS_CAP
-                  # the point reader's metadata sweep is a driver-side
-                  # loop over the term's block rows — bounded like
-                  # _term_meta (beyond it: distributed two-phase path)
-                  and df_g // 64 <= META_ROWS_CAP)
-    if use_lookup:
+    if (df_g > lookup_factor * host_ids.size
+            and host_ids.size <= SITE_LOOKUP_IDS_CAP):
         est = min(df_g, BLOCK_LOOKUP_EST * host_ids.size)
         mode_budget[0] -= est
         if mode_budget[0] < 0:
             return None
-        from ..functions.hashing import spark_xxhash64_long_np
-        nsalt = max(1, int(trow["n_salt"]))
-        salts = spark_xxhash64_long_np(host_ids) % nsalt
-        cands = list(zip(host_ids.tolist(), salts.tolist()))
-        ids, tfs, dls = store.lookup_postings_arrow(term, cands)
-        if debug is not None:
+        stats: dict = {}
+        got = _lookup_postings(store, term, max(1, int(trow["n_salt"])),
+                               host_ids, need_dls, stats)
+        if got is not None and debug is not None:
             debug.setdefault("serve_site_lookup", {})[term] = {
-                "matched": int(ids.size), "df": df_g,
-                **getattr(store, "_last_lookup_stats", {})}
-        return ids, tfs, dls
+                "matched": int(got[0].size), "df": df_g, **stats}
+        return got
     mode_budget[0] -= df_g
     if mode_budget[0] < 0:
         return None
@@ -819,9 +856,10 @@ def _serve_match_count(store: IndexStore, q_terms: list[str],
 
 
 def serve_topk(store: IndexStore, q_terms: list[str], k: int,
-               mode: str = "compat", exhaustive_budget: int = 200_000,
-               lookup_min_df: int = 100_000,
-               lookup_cand_cap: int = 100_000,
+               mode: str = "compat",
+               exhaustive_budget: int = S.EXHAUSTIVE_POSTINGS_BUDGET,
+               lookup_min_df: int = S.LOOKUP_MIN_DF,
+               lookup_cand_cap: int = S.LOOKUP_CAND_CAP,
                debug: dict | None = None):
     with borrow_files(store):
         return _serve_topk(store, q_terms, k, mode, exhaustive_budget,
@@ -829,16 +867,16 @@ def serve_topk(store: IndexStore, q_terms: list[str], k: int,
 
 
 def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
-                mode: str = "compat", exhaustive_budget: int = 200_000,
-                lookup_min_df: int = 100_000,
-                lookup_cand_cap: int = 100_000,
+                mode: str = "compat",
+                exhaustive_budget: int = S.EXHAUSTIVE_POSTINGS_BUDGET,
+                lookup_min_df: int = S.LOOKUP_MIN_DF,
+                lookup_cand_cap: int = S.LOOKUP_CAND_CAP,
                 debug: dict | None = None):
     """Bounded driver-side top-k. Returns [(doc_id, score)] (possibly
     empty) or None when any read bound would be exceeded / the result
     needs the zero-score tier — the caller then runs distributed WAND.
     Caller guarantees the store has no tombstones."""
     meta = store.meta()
-    n_docs = meta["n_docs"]
     avgdl = float(meta.get("avgdl", 0.0) or 0.0)
 
     tmap = terms_rows_arrow(store, q_terms)
@@ -847,64 +885,51 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
     present = [t for t in q_terms if tmap.get(t) is not None]
     if not present:
         return []
-    tstats = {t: (int(tmap[t]["df"]), int(tmap[t]["max_tf"]))
-              for t in present}
-    n_salt0 = {t: max(1, int(tmap[t]["n_salt"])) for t in present}
-
-    if mode == "compat":
-        idf = {t: S.idf_compat_py(tstats[t][0], n_docs) for t in present}
-        ubmax = {t: tstats[t][1] * idf[t] for t in present}
-    else:
-        idf = {t: S.idf_bm25_py(tstats[t][0], n_docs) for t in present}
-        ubmax = {t: S.upper_bound_bm25(tstats[t][1], idf[t])
-                 for t in present}
-    sum_df = sum(tstats[t][0] for t in present)
+    plan = S.MaxScorePlan(
+        mode, {t: (int(tmap[t]["df"]), int(tmap[t]["max_tf"]))
+               for t in present}, meta)
+    idf = plan.idf
+    need_dls = mode != "compat"
 
     def _mark(name, **extra):
         if debug is not None:
             debug[f"serve_{name}"] = extra or True
 
-    # ---- small / zero-idf: exhaustive decode of every query-term list
-    # (bounded by Σ df ≤ budget; includes score-0 docs — the reference's
-    # OR semantics admits them, SearchServiceImpl.java:139-160)
-    if sum_df <= min(exhaustive_budget, DECODE_CAP):
-        metas = []
-        for t in present:
-            tm = _term_meta(store, t)
-            if tm is None:
-                return None
-            metas.append((tm, np.ones(tm["fi"].size, bool)))
-        parts_i, parts_c = [], []
-        for t, (ids, tfs, dls) in zip(
-                present, _decode_selected(store, metas,
-                                          need_dls=(mode != "compat"))):
-            parts_i.append(ids)
-            parts_c.append(_contrib(tfs, dls, idf[t], mode, avgdl))
-        if not parts_i:
-            return []
-        uids, tot = _aggregate(parts_i, parts_c)
-        _mark("small", n=int(uids.size))
-        return _topk(uids, tot, k)
-    if max(ubmax.values()) <= 0:
+    small = plan.sum_df <= min(exhaustive_budget, DECODE_CAP)
+    if not small and plan.zero_bound:
         return None  # zero-idf over a big list → distributed exhaustive
-
-    # ---- seed: hot tier (tier = 0) of t*; bounded a priori by
-    # n_salt·TIER_SIZE postings, checked against DECODE_CAP via the
-    # metadata `n` before any binary is read
-    t_star = max(present, key=lambda t: ubmax[t])
     tmeta: dict[str, dict] = {}
     for t in present:
         tm = _term_meta(store, t)
         if tm is None:
             return None
         tmeta[t] = tm
+
+    # ---- small: exhaustive decode of every query-term list (bounded by
+    # Σ df ≤ budget; includes score-0 docs — the reference's OR
+    # semantics admits them, SearchServiceImpl.java:139-160)
+    if small:
+        parts_i, parts_c = [], []
+        for t, (ids, tfs, dls) in zip(present, _decode_selected(
+                store, [(tmeta[t], np.ones(tmeta[t]["fi"].size, bool))
+                        for t in present], need_dls)):
+            parts_i.append(ids)
+            parts_c.append(_contrib(tfs, dls, idf[t], mode, avgdl))
+        uids, tot = _aggregate(parts_i, parts_c)
+        _mark("small", n=int(uids.size))
+        return _topk(uids, tot, k)
+
+    # ---- seed: hot tier (tier = 0) of t*; bounded a priori by
+    # n_salt·TIER_SIZE postings, checked against DECODE_CAP via the
+    # metadata `n` before any binary is read
+    t_star = plan.t_star
     ts = tmeta[t_star]
     seed_mask = ts["tier"] == 0
     budget_left = DECODE_CAP - int(ts["n"][seed_mask].sum())
     if budget_left < 0:
         return None
     (seed_ids, seed_tfs, seed_dls), = _decode_selected(
-        store, [(ts, seed_mask)], need_dls=(mode != "compat"))
+        store, [(ts, seed_mask)], need_dls)
     p1_ids, p1_tot = _aggregate(
         [seed_ids], [_contrib(seed_tfs, seed_dls, idf[t_star], mode,
                               avgdl)])
@@ -915,49 +940,28 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         theta = float("-inf")
     _mark("theta", theta=theta, seeds=int(seed_ids.size))
 
-    # ---- MaxScore demotion (identical rule to wand_topk)
-    non_ess: list[str] = []
-    ne_sum = 0.0
-    for t in sorted(present, key=lambda x: ubmax[x]):
-        if tstats[t][0] > lookup_min_df and ne_sum + ubmax[t] < theta:
-            non_ess.append(t)
-            ne_sum += ubmax[t]
-    ess = [t for t in present if t not in non_ess]
-
-    # ---- block-max prune over essential terms (numpy over metadata —
-    # the same per-block bound test the distributed scan pushes into
-    # parquet row groups)
-    basis_corr = 1.0
-    if mode != "compat":
-        mb = float(meta.get("min_imp_basis", avgdl) or 0.0)
-        if mb > 0 and avgdl > mb:
-            basis_corr = mb / avgdl
-    from .wand import _min_maxtf  # lazy: avoids a module cycle
-    sum_all = sum(ubmax[t] for t in present)
+    # ---- MaxScore demotion, then the block-max prune over essential
+    # terms (numpy over metadata — the same per-block bound test the
+    # distributed scan pushes into parquet row groups)
+    ess, non_ess, ne_sum = plan.demote(theta, lookup_min_df)
     sel: list[tuple[dict, np.ndarray]] = []
-    sel_terms: list[str] = []
     for t in ess:
         tm = tmeta[t]
-        lo = theta - (sum_all - ubmax[t])
-        if mode == "compat":
-            thr = _min_maxtf(mode, idf[t], tstats[t][1], lo)
-            mask = tm["max_tf"] >= thr
-        else:
-            thr = 0.0 if lo <= 0 else (lo / idf[t]) * basis_corr
-            mi = tm["max_imp"].astype(np.float64)
-            mask = (mi >= thr) | np.isnan(mi)  # NULL bound: never prune
-        if t == t_star:
-            mask = mask & (tm["tier"] != 0)  # hot tier already decoded
+        cut = plan.block_cut(t, theta)
+        bound = tm[cut.column].astype(np.float64)
+        mask = bound >= cut.min_bound
+        if cut.keep_null:
+            mask |= np.isnan(bound)
+        if cut.skip_hot:
+            mask &= tm["tier"] != 0  # hot tier already decoded
         sel.append((tm, mask))
-        sel_terms.append(t)
         budget_left -= int(tm["n"][mask].sum())
         if budget_left < 0:
             return None
     parts_i: list[np.ndarray] = [p1_ids]
     parts_c: list[np.ndarray] = [p1_tot]
-    for t, (ids, tfs, dls) in zip(
-            sel_terms, _decode_selected(store, sel,
-                                        need_dls=(mode != "compat"))):
+    for t, (ids, tfs, dls) in zip(ess, _decode_selected(store, sel,
+                                                        need_dls)):
         parts_i.append(ids)
         parts_c.append(_contrib(tfs, dls, idf[t], mode, avgdl))
     cand_ids, cand_tot = _aggregate(parts_i, parts_c)
@@ -968,35 +972,34 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         rows = _topk(cand_ids, cand_tot, k)
     else:
         # Exactness: every doc with true ≥ θ has an essential term, so
-        # cand_* is a complete candidate set (wand.py:412-421 argument)
+        # cand_* is a complete candidate set (the wand_topk argument)
         keep = cand_tot >= (theta - ne_sum)
         if int(keep.sum()) >= lookup_cand_cap:
             return None  # pathological volume → distributed exhaustive
         lk_ids = cand_ids[keep]
         lk_tot = cand_tot[keep]
         order = np.lexsort((lk_ids, -lk_tot))
-        lk_ids, lk_tot = lk_ids[order], lk_tot[order]
-        theta2 = (max(theta, float(lk_tot[k - 1]))
+        theta2 = (max(theta, float(lk_tot[order[k - 1]]))
                   if lk_ids.size >= k else theta)
+        # cand_ids come sorted out of np.unique, so the survivors are
+        # the sorted candidate list the point reader takes
         live = lk_tot >= (theta2 - ne_sum)
         lk_ids, lk_tot = lk_ids[live], lk_tot[live]
-        from ..functions.hashing import spark_xxhash64_long
-        totals = {int(d): float(p) for d, p in zip(lk_ids, lk_tot)}
         for t in non_ess:
-            nsalt = n_salt0[t]
-            cands = [(int(d), spark_xxhash64_long(int(d)) % nsalt)
-                     for d in lk_ids]
-            ids_a, tfs_a, dls_a = store.lookup_postings_arrow(t, cands)
-            contrib = _contrib(tfs_a, dls_a, idf[t], mode, avgdl)
-            for d, c in zip(ids_a.tolist(), contrib.tolist()):
-                totals[d] = totals.get(d, 0.0) + c
-        best = sorted(totals.items(), key=lambda x: (-x[1], x[0]))[:k]
-        rows = [(int(d), float(s)) for d, s in best]
+            got = _lookup_postings(store, t,
+                                   max(1, int(tmap[t]["n_salt"])),
+                                   lk_ids, need_dls)
+            if got is None:
+                return None
+            ids_a, tfs_a, dls_a = got
+            np.add.at(lk_tot, np.searchsorted(lk_ids, ids_a),
+                      _contrib(tfs_a, dls_a, idf[t], mode, avgdl))
+        rows = _topk(lk_ids, lk_tot, k)
         _mark("lookup", lk=int(lk_ids.size))
 
-    # zero-score tier (wand.py:521-527): pruning is exact only while
-    # the k-th score is positive — hand the rare case to the
-    # distributed exhaustive fallback
+    # zero-score tier (see wand_topk): pruning is exact only while the
+    # k-th score is positive — hand the rare case to the distributed
+    # exhaustive fallback
     if len(rows) < k or (rows and rows[-1][1] <= 0):
         return None
     return rows
@@ -1042,7 +1045,7 @@ def _hosts_for_ids(store: IndexStore, doc_ids: list[int]):
                 budget -= md.row_group(rg).num_rows
                 if budget < 0:
                     return None
-                tbl = _read_rg(pf, rg, ["doc_id", "host"])
+                tbl = _read(pf, ["doc_id", "host"], rg)
                 got = tbl.column("doc_id").to_numpy(zero_copy_only=False)
                 keep = np.flatnonzero(_sorted_membership(want, got))
                 hosts = tbl.column("host")
@@ -1108,12 +1111,7 @@ def serve_doc_rows(store: IndexStore, doc_ids: list[int]):
                 budget -= md.num_rows
                 if budget < 0:
                     return None
-                lk = getattr(pf, "_sx_lock", None)
-                if lk is None:
-                    probe = pf.read(columns=["doc_id"])
-                else:
-                    with lk:
-                        probe = pf.read(columns=["doc_id"])
+                probe = _read(pf, ["doc_id"])
                 got = probe.column("doc_id").to_numpy(
                     zero_copy_only=False)
                 keep = np.flatnonzero(_sorted_membership(want, got))
@@ -1129,7 +1127,7 @@ def serve_doc_rows(store: IndexStore, doc_ids: list[int]):
                     local = int(ridx - (bounds[rg - 1] if rg else 0))
                     by_rg.setdefault(rg, []).append(local)
                 for rg, locals_ in by_rg.items():
-                    tbl = _read_rg(pf, rg, cols).take(locals_)
+                    tbl = _read(pf, cols, rg).take(locals_)
                     for j in range(tbl.num_rows):
                         r = {c: tbl.column(c)[j].as_py() for c in cols}
                         out[int(r["doc_id"])] = r

@@ -34,7 +34,6 @@ query.py) on every fixture query.
 from __future__ import annotations
 
 import numpy as np
-import os
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +43,7 @@ import logging
 from . import score as S
 from .codec import decode_block
 from .index_store import IndexStore
+from .serving import SITE_LOOKUP_FACTOR, serving_enabled
 
 log = logging.getLogger(__name__)
 
@@ -134,10 +134,6 @@ def live_docids(spark: SparkSession, store: IndexStore,
             .select("doc_id"))
 
 
-# distributed site path: a term's blocks are gathered via the host
-# range semi-join (decode only blocks covering a host doc) once its
-# global list is this many times bigger than the site
-SITE_LOOKUP_FACTOR_DIST = 64
 # host doc sets larger than this are not broadcast into the semi-join
 # (full decode is then the cheaper plan anyway: df/|site| small)
 SITE_HIT_JOIN_CAP = 4_000_000
@@ -165,7 +161,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
 def site_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
               k: int, host: str, mode: str = "compat",
               serving: bool = True,
-              lookup_factor: int = SITE_LOOKUP_FACTOR_DIST,
+              lookup_factor: int = SITE_LOOKUP_FACTOR,
               debug: dict | None = None) -> DataFrame:
     """T9/J2: site-filtered exact top-k served FROM the physical index
     (no per-site rebuild).
@@ -202,8 +198,7 @@ def site_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
     # driver-side — host-bucket docs slice point read + per-term
     # decode-or-point-lookup, zero Spark jobs; None on any bound
     # breach → the distributed partition-pruned path below
-    if (serving and not store.has_tombstones()
-            and os.environ.get("SPARK_GRAFT_NO_SERVING") != "1"):
+    if serving and serving_enabled() and not store.has_tombstones():
         from .serving import serve_site_topk
         served = serve_site_topk(store, q_terms, k, host, mode,
                                  debug=debug)
@@ -288,7 +283,7 @@ def _site_candidates(spark, store, present, dhost, df_g, n_salt0,
 
 def site_match_count(spark: SparkSession, store: IndexStore,
                      q_terms: list[str], host: str,
-                     lookup_factor: int = SITE_LOOKUP_FACTOR_DIST) -> int:
+                     lookup_factor: int = SITE_LOOKUP_FACTOR) -> int:
     """Distributed total-match count within a site (distinct docs of
     the host containing ANY query term) with the same block-coverage
     pruning as site_topk — the service layer's fallback when
@@ -346,33 +341,10 @@ def _site_topk_dist(spark, store, meta, present, k, mode,
         cand.unpersist()
 
 
-EXHAUSTIVE_POSTINGS_BUDGET = 200_000
-LOOKUP_MIN_DF = 100_000    # only stopword-scale terms are demoted to lookups
-LOOKUP_CAND_CAP = 100_000  # collected-candidate bound; above → exhaustive
-
-
-def _min_maxtf(mode: str, idf_t: float, max_tf_t: int, lo: float) -> float:
-    """Smallest per-block max_tf whose upper bound can still reach `lo`
-    (block UB inversions; blocks below it are exact skips)."""
-    if lo <= 0:
-        return 0.0
-    if mode == "compat":
-        # UB(b) = max_tf · idf_t
-        if idf_t <= 0:
-            return float(max_tf_t + 1)  # zero contribution — skip all
-        return lo / idf_t
-    # bm25: bound(m) = idf·m·A/(m+C), A=k1+1, C=k1(1−b), monotone in m
-    A = S.K1_DEFAULT + 1.0
-    C = S.K1_DEFAULT * (1.0 - S.B_DEFAULT)
-    if idf_t * A - lo <= 0:
-        return float(max_tf_t + 1)  # sup(bound) < lo: skip all
-    return lo * C / (idf_t * A - lo)
-
-
 def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
               k: int, mode: str = "compat",
-              exhaustive_budget: int = EXHAUSTIVE_POSTINGS_BUDGET,
-              lookup_min_df: int = LOOKUP_MIN_DF,
+              exhaustive_budget: int = S.EXHAUSTIVE_POSTINGS_BUDGET,
+              lookup_min_df: int = S.LOOKUP_MIN_DF,
               serving: bool = True,
               debug: dict | None = None) -> DataFrame:
     """Exact top-k (doc_id, score) using block-max pruning, SEEDED from
@@ -403,11 +375,11 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
       lookup  (MaxScore essential lists) stopword-scale terms whose
               summed UBmax stays below θ never generate candidates at
               all — their tf is point-looked-up for only the candidates
-              that can still win: driver-side parquet point reads on a
-              tombstone-free store (zero Spark jobs — the serving-tier
-              shape), else a distributed [first_doc, last_doc] range
-              join. A mixed rare+stopword query then never decodes the
-              stopword's full posting list.
+              that can still win, through a [first_doc, last_doc]
+              range semi-join (exact with or without tombstones; the
+              serving tier answers tombstone-free stores driver-side
+              before this path runs). A mixed rare+stopword query then
+              never decodes the stopword's full posting list.
 
     Adaptive: when Σ df is below exhaustive_budget a single decode+agg
     job wins on scheduling overhead (plans result-identical, verified in
@@ -433,17 +405,14 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
     # from parquet point reads with ZERO Spark jobs — the index-node
     # serving shape (the reference serves every query from B-tree
     # lookups the same way, IndexRepository.java:26-50). serve_topk
-    # re-executes THIS algorithm (same phases, same float64 math,
+    # runs the same score.MaxScorePlan (same phases, same float64 math,
     # equality-pinned in tests) and returns None on any bound breach
     # or the zero-score tier → the distributed path below runs.
-    if (serving and not store.has_tombstones()
-            and os.environ.get("SPARK_GRAFT_NO_SERVING") != "1"):
+    if serving and serving_enabled() and not store.has_tombstones():
         from .serving import serve_topk
         served = serve_topk(store, q_terms, k, mode,
                             exhaustive_budget=exhaustive_budget,
-                            lookup_min_df=lookup_min_df,
-                            lookup_cand_cap=LOOKUP_CAND_CAP,
-                            debug=debug)
+                            lookup_min_df=lookup_min_df, debug=debug)
         if served is not None:
             _mark("served")
             return local_rows_df(
@@ -451,7 +420,6 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
                 "doc_id long, score double")
 
     meta = store.meta()
-    n_docs = meta["n_docs"]
     trows = store.query_terms_rows(spark, q_terms)
     _mark("terms")
     tstats = {r["term"]: (r["df"], r["max_tf"]) for r in trows}
@@ -462,16 +430,8 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
     present = [t for t in q_terms if t in tstats]
     if not present:
         return spark.createDataFrame([], "doc_id long, score double")
-
-    if mode == "compat":
-        idf = {t: S.idf_compat_py(tstats[t][0], n_docs) for t in present}
-        ubmax = {t: tstats[t][1] * idf[t] for t in present}
-    else:
-        idf = {t: S.idf_bm25_py(tstats[t][0], n_docs) for t in present}
-        ubmax = {t: S.upper_bound_bm25(tstats[t][1], idf[t]) for t in present}
-
-    sum_df = sum(tstats[t][0] for t in present)
-    small = sum_df <= exhaustive_budget or max(ubmax.values()) <= 0
+    plan = S.MaxScorePlan(mode, {t: tstats[t] for t in present}, meta)
+    small = plan.sum_df <= exhaustive_budget or plan.zero_bound
 
     # NOT persisted: each phase's scan pushes its OWN predicates (term,
     # bound threshold, doc ranges) into parquet row groups — caching
@@ -481,7 +441,8 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
     p1 = None
     try:
         idf_df = F.broadcast(spark.createDataFrame(
-            [(t, float(idf[t])) for t in present], "term string, idf double"))
+            [(t, float(plan.idf[t])) for t in present],
+            "term string, idf double"))
 
         def contributions(decoded: DataFrame) -> DataFrame:
             c = decoded.join(idf_df, "term")
@@ -499,29 +460,13 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
                     .collect())
             return local_rows_df(spark, rows, "doc_id long, score double")
 
-        t_star = max(present, key=lambda t: ubmax[t])
-
-        # mode-specific per-block bound column: compat prunes on raw
-        # max_tf (score is tf·idf); bm25 prunes on the STORED exact
-        # per-block impact bound max_imp (max tf-norm over the block's
-        # (tf, dl) pairs — max_tf alone cannot prune bm25 when tf
-        # correlates with dl). If avgdl drifted UP since encode, stored
-        # bounds are scaled sound via min_imp_basis (see codec).
-        bcol = "max_tf" if mode == "compat" else "max_imp"
-        basis_corr = 1.0
-        if mode != "compat":
-            now = float(meta.get("avgdl", 0.0) or 0.0)
-            mb = float(meta.get("min_imp_basis", now) or 0.0)
-            if mb > 0 and now > mb:
-                basis_corr = mb / now
-
         # ---- seed: t*'s HOT tier — impact tier 0, the top-tf postings
         # of every salt run, materialized as a column at build time. No
         # metadata job at all (round 2 spent one histogram job per term
         # picking a bound cutoff): the tier predicate prunes straight
         # to the hot row groups of the (term, tier, bound)-sorted
         # bucket file, in BOTH modes.
-        seeds = qblocks.filter((F.col("term") == t_star)
+        seeds = qblocks.filter((F.col("term") == plan.t_star)
                                & (F.col("tier") == 0))
         p1 = (contributions(live_postings(spark, store, seeds))
               .groupBy("doc_id").agg(F.sum("contrib").alias("contrib"))
@@ -532,38 +477,18 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
                  else float("-inf"))
         _mark("theta")
 
-        # ---- MaxScore demotion: stopword-scale terms (df > LOOKUP_MIN_DF)
-        # whose SUMMED upper bounds stay below θ become LOOKUP terms — a
-        # doc containing only them cannot reach θ, so they never generate
-        # candidates; their tf is fetched later for the few candidates
-        # that can still win. t* is never demoted (UBmax(t*) ≥ θ by
-        # construction: θ is a seed partial ≤ UBmax(t*)).
-        non_ess: list[str] = []
-        ne_sum = 0.0
-        for t in sorted(present, key=lambda x: ubmax[x]):
-            if tstats[t][0] > lookup_min_df and ne_sum + ubmax[t] < theta:
-                non_ess.append(t)
-                ne_sum += ubmax[t]
-        ess = [t for t in present if t not in non_ess]
-
-        # ---- block-max prune over the ESSENTIAL terms (pushed into the
-        # parquet scan; row-group stats on max_tf skip pruned binaries)
-        sum_all = sum(ubmax[t] for t in present)
+        # ---- MaxScore demotion, then the block-max prune over the
+        # ESSENTIAL terms (pushed into the parquet scan; row-group stats
+        # on the bound column skip pruned binaries)
+        ess, non_ess, ne_sum = plan.demote(theta, lookup_min_df)
         keep = None
         for t in ess:
-            lo = theta - (sum_all - ubmax[t])
-            if mode == "compat":
-                thr = _min_maxtf(mode, idf[t], tstats[t][1], lo)
-            else:
-                # block survives iff idf·max_imp·(1/basis_corr) ≥ lo
-                thr = 0.0 if lo <= 0 else (lo / idf[t]) * basis_corr
-            sv = F.col(bcol) >= float(thr)
-            if t == t_star:  # the hot tier is already decoded (seeds)
+            cut = plan.block_cut(t, theta)
+            sv = F.col(cut.column) >= cut.min_bound
+            if cut.keep_null:
+                sv = sv | F.col(cut.column).isNull()
+            if cut.skip_hot:
                 sv = sv & (F.col("tier") != 0)
-            if mode != "compat":
-                # a block with no stored impact bound can never be
-                # pruned (NULL comparisons would silently drop it)
-                sv = sv | F.col(bcol).isNull()
             cond = (F.col("term") == t) & sv
             keep = cond if keep is None else (keep | cond)
 
@@ -592,9 +517,9 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
             crows = (cand.filter(
                 F.col("partial") >= float(theta - ne_sum))
                 .orderBy(F.desc("partial"), F.asc("doc_id"))
-                .limit(LOOKUP_CAND_CAP).collect())
+                .limit(S.LOOKUP_CAND_CAP).collect())
             _mark("cand", n=len(crows))
-            if len(crows) >= LOOKUP_CAND_CAP:
+            if len(crows) >= S.LOOKUP_CAND_CAP:
                 # pathological candidate volume (θ barely above Σ_ne):
                 # the truncated list cannot bound θ2 soundly → exact
                 # exhaustive fallback
@@ -616,76 +541,35 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
                 # matched by range alone. Decode ONLY blocks whose
                 # [first_doc, last_doc] covers a candidate in the right
                 # salt (per impact tier: ≤ tiers blocks per candidate).
+                # live_postings drops tombstoned generations.
                 from ..functions.hashing import spark_xxhash64_long
-                _mark("lookup_mode",
-                      arrow=store.tombstones(spark) is None)
-                if store.tombstones(spark) is None:
-                    # SERVING-TIER path: the whole lookup+merge phase is
-                    # parquet point reads on the driver — zero Spark
-                    # jobs (a top-k serving layer does point lookups
-                    # from an index node, not with a cluster scan).
-                    # Guarded: tombstoned stores use the distributed
-                    # path below (lookups must observe deletes), and
-                    # the candidate set is bounded by LOOKUP_CAND_CAP.
-                    totals = {d: p for d, p in lk_rows}
-                    for t in non_ess:
-                        nsalt = max(1, n_salt0.get(t, 1))
-                        cands = [(d, spark_xxhash64_long(d) % nsalt)
-                                 for d, _ in lk_rows]
-                        ids_a, tfs_a, dls_a = store.lookup_postings_arrow(
-                            t, cands)
-                        tf = tfs_a.astype("float64")
-                        if mode == "compat":
-                            w = tf  # tf_weight_compat: raw tf as double
-                        else:
-                            # mirrors score.tf_weight_bm25's expression
-                            # tree exactly: tf·(k1+1) / (tf + k1·((1−b)
-                            # + (b·dl)/avgdl))
-                            k1, b_ = S.K1_DEFAULT, S.B_DEFAULT
-                            denom = tf + k1 * (
-                                (1.0 - b_)
-                                + (b_ * dls_a.astype("float64"))
-                                / float(meta["avgdl"]))
-                            w = tf * (k1 + 1.0) / denom
-                        contrib = w * idf[t]
-                        for d, c in zip(ids_a.tolist(), contrib.tolist()):
-                            totals[d] = totals.get(d, 0.0) + c
-                    best = sorted(totals.items(),
-                                  key=lambda x: (-x[1], x[0]))[:k]
-                    from pyspark.sql import Row as _Row
-                    rows = [_Row(doc_id=int(d), score=float(s))
-                            for d, s in best]
-                else:
-                    lk_ids = F.broadcast(spark.createDataFrame(
-                        [(d,) for d, _ in lk_rows], "doc_id long"))
-                    parts = [spark.createDataFrame(
-                        lk_rows, "doc_id long, contrib double")]
-                    for t in non_ess:
-                        nsalt = max(1, n_salt0.get(t, 1))
-                        cs = F.broadcast(spark.createDataFrame(
-                            [(d, spark_xxhash64_long(d) % nsalt)
-                             for d, _ in lk_rows], "doc_id long, csalt int"))
-                        hit = (qblocks.filter(F.col("term") == t).alias("b")
-                               .join(cs.alias("c"),
-                                     (F.col("b.first_doc")
-                                      <= F.col("c.doc_id"))
-                                     & (F.col("c.doc_id")
-                                        <= F.col("b.last_doc"))
-                                     & ((F.col("b.gen") != 0)
-                                        | (F.col("b.salt")
-                                           == F.col("c.csalt"))),
-                                     "left_semi"))
-                        parts.append(
-                            contributions(live_postings(spark, store, hit))
-                            .join(lk_ids, "doc_id")
-                            .select("doc_id", "contrib"))
-                    total = parts[0]
-                    for p in parts[1:]:
-                        total = total.unionAll(p)
-                    rows = (total.groupBy("doc_id")
-                            .agg(F.sum("contrib").alias("score"))
-                            .orderBy(F.desc("score"), F.asc("doc_id"))
-                            .limit(k).collect())
+                lk_ids = F.broadcast(spark.createDataFrame(
+                    [(d,) for d, _ in lk_rows], "doc_id long"))
+                parts = [spark.createDataFrame(
+                    lk_rows, "doc_id long, contrib double")]
+                for t in non_ess:
+                    nsalt = max(1, n_salt0.get(t, 1))
+                    cs = F.broadcast(spark.createDataFrame(
+                        [(d, spark_xxhash64_long(d) % nsalt)
+                         for d, _ in lk_rows], "doc_id long, csalt int"))
+                    hit = (qblocks.filter(F.col("term") == t).alias("b")
+                           .join(cs.alias("c"),
+                                 (F.col("b.first_doc") <= F.col("c.doc_id"))
+                                 & (F.col("c.doc_id") <= F.col("b.last_doc"))
+                                 & ((F.col("b.gen") != 0)
+                                    | (F.col("b.salt") == F.col("c.csalt"))),
+                                 "left_semi"))
+                    parts.append(
+                        contributions(live_postings(spark, store, hit))
+                        .join(lk_ids, "doc_id")
+                        .select("doc_id", "contrib"))
+                total = parts[0]
+                for p in parts[1:]:
+                    total = total.unionAll(p)
+                rows = (total.groupBy("doc_id")
+                        .agg(F.sum("contrib").alias("score"))
+                        .orderBy(F.desc("score"), F.asc("doc_id"))
+                        .limit(k).collect())
                 _mark("final", lk=len(lk_rows))
 
         # Zero tier: the reference's OR semantics admits docs whose every

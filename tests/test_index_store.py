@@ -122,6 +122,44 @@ def test_wand_lookup_path_equals_plain(spark, store, index_frames, mode, k,
         assert gd == wd and np.isclose(gs, ws, rtol=1e-12), (gd, wd, gs, ws)
 
 
+@pytest.mark.parametrize("serving", [True, False])
+@pytest.mark.parametrize("mode", ["compat", "bm25"])
+def test_wand_demoted_lookup_equals_plain(spark, store, index_frames,
+                                          oracle, mode, serving):
+    """[stopword, df-3 term] at k=3 with lookup_min_df=1: θ from the
+    rare term's seeds exceeds the stopword's UBmax, so the stopword is
+    demoted and only looked up for the surviving candidates — through
+    the point reader on the serving tier, through the range semi-join
+    on the distributed path. Both must run and stay top-k identical to
+    the plain path."""
+    from search_engine_skillbox_spark.sources.corpus import STOPWORDS
+    p, t, dls = index_frames
+    n = B.corpus_size(p)
+    heavy = max(STOPWORDS, key=lambda w: oracle.df.get(w, 0))
+    rare = min(w for w, d in oracle.df.items() if d == 3)
+    q, k = [heavy, rare], 3
+    if mode == "compat":
+        plain = Q.candidate_scores(p, t, n, q, "compat")
+    else:
+        part = dls.filter(F.col("dl") > 0)
+        avgdl = float(part.agg(F.avg("dl")).first()[0])
+        plain = Q.candidate_scores(p, t, n, q, "bm25", doclens=part,
+                                   avgdl=avgdl)
+    want = [(r["doc_id"], r["score"]) for r in Q.topk(plain, k).collect()]
+    dbg: dict = {}
+    got = [(r["doc_id"], r["score"]) for r in
+           wand_topk(spark, store, q, k, mode, exhaustive_budget=0,
+                     lookup_min_df=1, serving=serving,
+                     debug=dbg).collect()]
+    if serving:
+        assert "serve_lookup" in dbg
+    else:
+        assert dbg["plan"]["non_ess"] == [heavy]
+    assert len(got) == len(want) == k
+    for (gd, gs), (wd, ws) in zip(got, want):
+        assert gd == wd and np.isclose(gs, ws, rtol=1e-12), (gd, wd, gs, ws)
+
+
 def test_wand_single_and_absent(spark, store, qterms_idx):
     got = wand_topk(spark, store, [qterms_idx[2]], 10).collect()
     assert len(got) >= 1
@@ -236,62 +274,6 @@ def test_layout_independent_of_group_split(spark, prepared, tmp_path):
     for table in ("blocks", "terms", "doclens"):
         assert rows(one, table) == rows(four, table), table
     assert meta(one) == meta(four)
-
-
-@pytest.mark.parametrize("mode", ["compat", "bm25"])
-def test_wand_arrow_lookup_equals_plain(spark, store, index_frames, mode,
-                                        qterms_idx):
-    """The driver-side parquet point-read lookup (tombstone-free store)
-    must actually RUN (asserted via the debug mark) and stay top-k
-    identical to the plain path."""
-    p, t, dls = index_frames
-    n = B.corpus_size(p)
-    q = qterms_idx
-    if mode == "compat":
-        plain = Q.candidate_scores(p, t, n, q, "compat")
-    else:
-        part = dls.filter(F.col("dl") > 0)
-        avgdl = float(part.agg(F.avg("dl")).first()[0])
-        plain = Q.candidate_scores(p, t, n, q, "bm25", doclens=part,
-                                   avgdl=avgdl)
-    k = 5
-    want = [(r["doc_id"], r["score"]) for r in Q.topk(plain, k).collect()]
-    dbg: dict = {}
-    # serving=False: this test pins the DISTRIBUTED path's arrow-lookup
-    # branch (the serving tier would intercept the whole query first)
-    got = [(r["doc_id"], r["score"]) for r in
-           wand_topk(spark, store, q, k, mode, exhaustive_budget=0,
-                     lookup_min_df=1, serving=False, debug=dbg).collect()]
-    assert len(got) == len(want)
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert gd == wd and np.isclose(gs, ws, rtol=1e-12), (gd, wd, gs, ws)
-    # the lookup phase must have run, and on this tombstone-free store
-    # it must have taken the arrow point-read branch
-    if "lookup_mode" in dbg:
-        assert dbg["lookup_mode"]["arrow"] is True
-    else:
-        # no term was demoted on this corpus/mode — the path was not hit;
-        # exercise the point reader directly against decoded truth
-        heavy = q[0]
-        from search_engine_skillbox_spark.functions.hashing import (
-            spark_xxhash64_long)
-        trow = [r for r in store.terms(spark).collect()
-                if r["term"] == heavy][0]
-        ns = int(trow["n_salt"])
-        docs = [r["doc_id"] for r in
-                decoded_postings(store.blocks(spark))
-                .filter(F.col("term") == heavy)
-                .select("doc_id").limit(7).collect()]
-        cands = [(d, spark_xxhash64_long(d) % ns) for d in docs]
-        ids_a, tfs_a, dls_a = store.lookup_postings_arrow(heavy, cands)
-        assert sorted(ids_a.tolist()) == sorted(docs)
-        truth = {r["doc_id"]: (r["tf"], r["dl"]) for r in
-                 decoded_postings(store.blocks(spark))
-                 .filter(F.col("term") == heavy).collect()
-                 if r["doc_id"] in set(docs)}
-        for d, tf_, dl_ in zip(ids_a.tolist(), tfs_a.tolist(),
-                               dls_a.tolist()):
-            assert truth[d] == (tf_, dl_)
 
 
 def test_site_topk_distributed_semi_join_equals_full(spark, store,
