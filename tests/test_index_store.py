@@ -122,6 +122,51 @@ def test_wand_lookup_path_equals_plain(spark, store, index_frames, mode, k,
         assert gd == wd and np.isclose(gs, ws, rtol=1e-12), (gd, wd, gs, ws)
 
 
+@pytest.mark.parametrize("mode", ["compat", "bm25"])
+def test_wand_arrow_lookup_equals_plain(spark, store, index_frames, mode,
+                                        qterms_idx):
+    """The driver-side parquet point-read lookup (tombstone-free store)
+    must stay top-k identical to the plain path; when the query demotes
+    a term the serving tier's lookup branch must actually run (debug
+    mark), otherwise the point reader is checked against decoded truth
+    directly."""
+    import search_engine_skillbox_spark.operators.serving as sv
+    p, t, dls = index_frames
+    n = B.corpus_size(p)
+    q = qterms_idx
+    if mode == "compat":
+        plain = Q.candidate_scores(p, t, n, q, "compat")
+    else:
+        part = dls.filter(F.col("dl") > 0)
+        avgdl = float(part.agg(F.avg("dl")).first()[0])
+        plain = Q.candidate_scores(p, t, n, q, "bm25", doclens=part,
+                                   avgdl=avgdl)
+    k = 5
+    want = [(r["doc_id"], r["score"]) for r in Q.topk(plain, k).collect()]
+    dbg: dict = {}
+    got = [(r["doc_id"], r["score"]) for r in
+           wand_topk(spark, store, q, k, mode, exhaustive_budget=0,
+                     lookup_min_df=1, serving=True, debug=dbg).collect()]
+    assert len(got) == len(want)
+    for (gd, gs), (wd, ws) in zip(got, want):
+        assert gd == wd and np.isclose(gs, ws, rtol=1e-12), (gd, wd, gs, ws)
+    if "serve_lookup" not in dbg:
+        # no term was demoted on this corpus/mode — the path was not hit;
+        # exercise the point reader directly against decoded truth
+        heavy = q[0]
+        ns = int(sv.terms_rows_arrow(store, [heavy])[heavy]["n_salt"])
+        truth = {r["doc_id"]: (r["tf"], r["dl"]) for r in
+                 decoded_postings(store.blocks(spark))
+                 .filter(F.col("term") == heavy).collect()}
+        docs = sorted(truth)[:7]
+        ids_a, tfs_a, dls_a = sv._lookup_postings(
+            store, heavy, ns, np.array(docs, np.int64))
+        assert sorted(ids_a.tolist()) == docs
+        for d, tf_, dl_ in zip(ids_a.tolist(), tfs_a.tolist(),
+                               dls_a.tolist()):
+            assert truth[d] == (tf_, dl_)
+
+
 @pytest.mark.parametrize("serving", [True, False])
 @pytest.mark.parametrize("mode", ["compat", "bm25"])
 def test_wand_demoted_lookup_equals_plain(spark, store, index_frames,
