@@ -861,19 +861,24 @@ def check_consistency(spark: SparkSession, store: IndexStore) -> dict:
     recomputed from LIVE postings (blocks minus tombstones) must equal
     the terms table, and n_docs/sum_dl must match meta. Returns
     {"consistent": bool, "term_mismatches": n, "meta_mismatches": [...]};
-    repair = compact(). Cost: one pass over the blocks (the same work as
-    one full-index scan) — an offline audit, not a query-path check."""
+    repair = compact(). Cost: one decode of every block (the same work as
+    one full-index scan), persisted for the two aggregates that read it
+    — an offline audit, not a query-path check."""
     from .wand import live_postings
-    live = live_postings(spark, store, store.blocks(spark))
-    got = (live.groupBy("term")
-           .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")))
-    terms = store.terms(spark).select("term", "df", "cf")
-    bad = (got.join(terms, "term", "full")
-           .filter((F.coalesce(got["df"], F.lit(0)) != F.coalesce(terms["df"], F.lit(0)))
-                   | (F.coalesce(got["cf"], F.lit(0)) != F.coalesce(terms["cf"], F.lit(0))))
-           .count())
-    agg = live.agg(F.countDistinct("doc_id").alias("n"),
-                   F.sum("tf").alias("s")).first()
+    live = (live_postings(spark, store, store.blocks(spark))
+            .select("term", "doc_id", "tf").persist())
+    try:
+        got = (live.groupBy("term")
+               .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")))
+        terms = store.terms(spark).select("term", "df", "cf")
+        bad = (got.join(terms, "term", "full")
+               .filter((F.coalesce(got["df"], F.lit(0)) != F.coalesce(terms["df"], F.lit(0)))
+                       | (F.coalesce(got["cf"], F.lit(0)) != F.coalesce(terms["cf"], F.lit(0))))
+               .count())
+        agg = live.agg(F.countDistinct("doc_id").alias("n"),
+                       F.sum("tf").alias("s")).first()
+    finally:
+        live.unpersist()
     meta = store.meta()
     meta_bad = []
     if int(agg["n"] or 0) != int(meta.get("n_docs", 0)):

@@ -28,7 +28,7 @@ from ..functions.textprep import distinct_query_terms, query_words
 from ..functions.urlutils import site_name_py
 from .index_store import IndexStore
 from .present import build_result_url, build_snippet, build_title
-from .serving import serving_enabled
+from .serving import serving_enabled, store_meta
 from .wand import site_topk, wand_topk
 
 
@@ -42,7 +42,7 @@ def search_service(spark: SparkSession, store: IndexStore, query: str,
     q_terms = distinct_query_terms(query)
     if not q_terms:
         return {"result": True, "count": 0, "data": []}
-    meta = store.meta()
+    meta = store_meta(store)
     site = site.strip() if site else None
     if site:
         n_scope = int(meta.get("n_docs_by_host", {}).get(site, 0))
@@ -198,7 +198,7 @@ def statistics_service(spark: SparkSession, store: IndexStore) -> dict:
     import os as _os
 
     from ..plans.checkpoint import Lineage
-    meta = store.meta()
+    meta = store_meta(store)
     life = Lineage(_os.path.join(store.path, "lineage.jsonl")).summary()
     # dashboard pages = ALL saved pages (the reference counts page rows,
     # including zero-term docs that never enter the index)

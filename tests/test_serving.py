@@ -314,6 +314,124 @@ def test_serve_doc_rows_cap_declines(spark, store, monkeypatch):
     assert sv.serve_doc_rows(store, ids) is None
 
 
+def _split_row_groups(st, rows: int) -> str:
+    """Rewrite every docs/ and doclens/ file of `st` with `rows`-row row
+    groups (same rows, same order) and return the docs file with the
+    most rows — a store whose hydrate files have many row groups."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from search_engine_skillbox_spark.operators.index_store import (
+        walk_parquet_files)
+    biggest, most = None, 0
+    for table in ("docs", "doclens"):
+        for fp in walk_parquet_files(f"{st.path}/{table}"):
+            tbl = pq.read_table(fp)
+            pq.write_table(tbl, fp, row_group_size=rows)
+            # Spark's local filesystem verifies the writer's checksum
+            d, name = os.path.split(fp)
+            crc = os.path.join(d, f".{name}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+            if table == "docs" and tbl.num_rows > most:
+                biggest, most = fp, tbl.num_rows
+    st.invalidate_reads()
+    return biggest
+
+
+def _docs_rows(spark, st, ids):
+    return {r["doc_id"]: (r["url_norm"], r["host"], r["path"], r["text"])
+            for r in st.docs(spark)
+            .select("doc_id", "url_norm", "host", "path", "text")
+            .collect() if r["doc_id"] in set(ids)}
+
+
+def test_serve_doc_rows_takes_hits_from_every_row_group(spark, mk_store):
+    """The batched hydrate reads a file's hit row groups in one call and
+    takes the hit rows from their concatenation: ids drawn from every
+    row group of a multi-row-group docs file (plus an absent id) must
+    come back as exactly their docs/ rows."""
+    import pyarrow.parquet as pq
+    st = mk_store("rowgroups")
+    fp = _split_row_groups(st, 5)
+    # zero-term pages are stored in docs/ but never indexed (no doclens
+    # row), so they are never a top-k hit to hydrate
+    indexed = set(pq.read_table(f"{st.path}/doclens", columns=["doc_id"])
+                  .column("doc_id").to_pylist())
+    pf = pq.ParquetFile(fp)
+    assert pf.metadata.num_row_groups >= 4
+    ids = []
+    for rg in range(pf.metadata.num_row_groups):
+        col = [d for d in pf.read_row_group(rg, columns=["doc_id"])
+               .column("doc_id").to_pylist() if d in indexed]
+        assert col, rg
+        ids += [col[0], col[-1]]
+    pf.close()
+    got = sv.serve_doc_rows(st, ids + [10 ** 17 + 3])
+    want = _docs_rows(spark, st, ids)
+    assert got is not None and set(want) == set(ids)
+    assert {d: (r["url_norm"], r["host"], r["path"], r["text"])
+            for d, r in got.items()} == want
+
+
+def test_hydrate_budget_charges_hit_row_groups(spark, mk_store,
+                                               monkeypatch):
+    """HYDRATE_ROWS_CAP is charged per row group read, not per file: a
+    cap above one hit row group's rows but below the docs file's rows
+    still serves a one-id page, and its row equals the docs table."""
+    import pyarrow.parquet as pq
+    st = mk_store("budget")
+    fp = _split_row_groups(st, 5)
+    indexed = set(pq.read_table(f"{st.path}/doclens", columns=["doc_id"])
+                  .column("doc_id").to_pylist())
+    pf = pq.ParquetFile(fp)
+    assert pf.metadata.num_rows > 5
+    d = next(d for d in pf.read_row_group(
+        pf.metadata.num_row_groups - 1, columns=["doc_id"])
+        .column("doc_id").to_pylist()[::-1] if d in indexed)
+    pf.close()
+    monkeypatch.setattr(sv, "HYDRATE_ROWS_CAP", 5)
+    got = sv.serve_doc_rows(st, [d])
+    assert got is not None
+    assert {k: (r["url_norm"], r["host"], r["path"], r["text"])
+            for k, r in got.items()} == _docs_rows(spark, st, [d])
+
+
+def test_meta_memo_sees_writes_through_another_instance(spark, mk_store,
+                                                        qterms):
+    """The read path parses meta.json once per file version. A write
+    through a second IndexStore on the same path must be seen by the
+    first instance's next request — count and relevances equal a fresh
+    instance's — while IndexStore.meta() keeps returning a new dict."""
+    from search_engine_skillbox_spark.operators.incremental import (
+        reindex_page)
+    from search_engine_skillbox_spark.operators.service import (
+        search_service)
+    a = mk_store("meta_memo")
+    query = f"{qterms[0]} {qterms[1]}"
+
+    def key(res):
+        return res["count"], [d["relevance"] for d in res["data"]]
+
+    before = search_service(spark, a, query, limit=50)
+    assert sv.store_meta(a) is sv.store_meta(a)
+    m1, m2 = a.meta(), a.meta()
+    assert m1 == m2 and m1 is not m2
+    b = IndexStore(a.path)
+    res = reindex_page(spark, b, {
+        "url": "https://newdoc.example/meta-memo",
+        "warc_ts": None, "html": None,
+        "text": f"{qterms[0]} {qterms[0]} {qterms[1]} another instance",
+        "lang": "en"})
+    assert not res["old_existed"] and not a.has_tombstones()
+    after = search_service(spark, a, query, limit=50)
+    fresh = search_service(spark, IndexStore(a.path), query, limit=50)
+    assert key(after) == key(fresh)
+    assert after["count"] == before["count"] + 1
+    assert sv.store_meta(a)["n_docs"] == a.meta()["n_docs"]
+
+
 def test_borrow_protects_held_entries_from_eviction(store):
     """ADVICE r4+r5: a FILE_HANDLE_CAP breach must close ONLY memo
     entries no active borrower holds — a borrower's touched handles
