@@ -10,30 +10,35 @@ stats here are maintained by exact ±deltas computed from the old/new
 token streams.
 
 Engine design (tombstone + generational append — the Iceberg
-merge-on-read shape):
+merge-on-read shape). There is ONE mutation, _reindex_batch_body:
+reindex_page is a batch of one page, delete_page a delete-only batch,
+and reindex_batch (the streaming foreachBatch body) any batch of pages.
 
   * every posting block carries `gen` (build = 0)
-  * reindex: append the new doc's postings as gen = G+1 blocks into the
-    affected term buckets; write a tombstone (doc_id, dead_gen = G)
-    killing all older generations of that doc; bump meta gen
-  * delete: tombstone only
+  * a batch appends its pages' postings as gen = G+1 blocks into the
+    affected term buckets, writes a tombstone (doc_id, dead_gen = G)
+    for every batch doc that already existed (killing all its older
+    generations) and bumps meta gen; a delete only tombstones
   * dictionaries: terms df/cf/max_tf updated by exact deltas (dynamic
     partition overwrite of the affected term buckets only); docs and
-    doclens rows replaced in the doc's hash bucket partition; meta
-    n_docs / sum_dl / avgdl adjusted exactly
+    doclens rows replaced or dropped in the batch docs' partitions;
+    meta n_docs / sum_dl / avgdl / per-host counts adjusted exactly
   * max_tf only ever grows (a removed high-tf doc would lower it, but a
     stale max keeps WAND bounds sound — merely less tight until
     compact())
   * compact(): full rebuild from the maintained docs table — the
     sandbox stand-in for Iceberg snapshot compaction
 
-Scale: one reindex touches ≤ |distinct terms of old ∪ new text| term
-buckets and exactly one doc bucket; nothing corpus-wide runs. Merges
-that rewrite a partition they also read (terms/docs/doclens/tombstones)
-are `localCheckpoint()`-ed first — the merged rows materialize to
-executor block storage, breaking the read-path dependency WITHOUT
-round-tripping rows through the driver (the round-1 driver-collect
-bottleneck); no collect() here scales with bucket or corpus size.
+Scale: a batch touches ≤ |distinct terms of old ∪ new texts| term
+buckets and only its docs' (host_bucket, doc_bucket) partitions, read
+by path; nothing corpus-wide runs. The driver collects two batch-sized
+frames (one row per batch doc, one per stored batch doc). Merges that
+rewrite partitions they also read (terms/docs/doclens) run through an
+exchange on the partition columns, whose map stage reads every input
+before the dynamic overwrite commits; the tombstones rewrite, which has
+no exchange, is `localCheckpoint()`-ed first. Merged rows never
+round-trip through the driver (the round-1 driver-collect bottleneck):
+no collect() here scales with bucket or corpus size.
 
 Crash consistency: each mutation records per-step lineage rows
 (plans/checkpoint.Lineage, build_id = "incr-g<gen>-<payload>" where
@@ -51,20 +56,15 @@ repair hammer (full rebuild from the maintained docs table).
 from __future__ import annotations
 
 import os
+import shutil
 from collections import Counter
+from functools import reduce
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import term_bucket
 from ..sources.pages import prepare_pages
-from .codec import encode_postings
 from .index_store import IndexStore
-
-
-def _tokenize_py(text: str) -> list[str]:
-    from ..functions.textprep import PY_TOKEN_SPLIT
-    return [t for t in PY_TOKEN_SPLIT.split((text or "").lower()) if t]
 
 
 def _incr_lineage(store: IndexStore):
@@ -135,120 +135,36 @@ def _step(lineage, build_id: str, pid: str, fn,
         raise
 
 
-def _doc_row(spark: SparkSession, store: IndexStore, doc_id: int):
-    from ..functions.hashing import doc_bucket
-    db = doc_bucket(doc_id, store.n_doc_buckets)
-    rows = (store.docs(spark)
-            .filter(F.col("doc_bucket") == db)  # partition pruning
-            .filter(F.col("doc_id") == doc_id)
-            .select("doc_id", "url", "url_norm", "host", "path", "text",
-                    "lang", "warc_ts").collect())
-    return rows[0] if rows else None
-
-
-def _append_blocks(spark: SparkSession, store: IndexStore,
-                   doc_id: int, counts: Counter, gen: int,
-                   avgdl: float = 0.0) -> None:
-    import numpy as np
-    dl = sum(counts.values())  # per-posting dl = the doc's length
-    rows = []
-    for term, tf in counts.items():
-        for blk in encode_postings(np.array([doc_id], np.int64),
-                                   np.array([tf], np.int64),
-                                   np.array([dl], np.int64), avgdl):
-            rows.append(Row(term=term, salt=0, tier=0, gen=gen,
-                            bucket=term_bucket(term, store.n_buckets),
-                            **blk))
-    if not rows:
-        return
-    # max_imp MUST ride along: dropping it here makes appended files
-    # diverge from the gen-0 schema (mixed parquet footers — reads then
-    # nondeterministically lose the column) and appended blocks would
-    # read NULL max_imp, permanently losing BM25 block pruning. Explicit
-    # schema: inference would fail on an all-None max_imp (avgdl=0 store).
-    df = spark.createDataFrame(
-        rows,
-        "term string, salt int, tier int, gen int, bucket int, "
-        "block_id long, n long, max_tf long, first_doc long, "
-        "last_doc long, docs binary, tfs binary, dls binary, "
-        "max_imp double").select(
-        "term", F.col("salt").cast("int").alias("salt"),
-        F.col("tier").cast("int").alias("tier"),
-        F.col("block_id").cast("int").alias("block_id"),
-        F.col("n").cast("int").alias("n"),
-        F.col("max_tf").cast("int").alias("max_tf"),
-        "first_doc", "last_doc", "docs", "tfs", "dls",
-        F.col("max_imp").cast("double").alias("max_imp"),
-        F.col("gen").cast("int").alias("gen"),
-        F.col("bucket").cast("int").alias("bucket"))
-    (df.coalesce(1).write.mode("append").partitionBy("bucket")
-     .parquet(os.path.join(store.path, "blocks")))
+def _arrow_df(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """A driver-built frame of batch-sized columns, shipped as Arrow: a
+    createDataFrame of Python rows runs a Python worker to decode them,
+    which measured ~1 s per write against ~0.2 s (4-core box)."""
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
 
 
 def _write_tombstones(spark: SparkSession, store: IndexStore,
-                      dead: list[tuple[int, int]]) -> None:
+                      dead: list[int], dead_gen: int) -> None:
     """Merge (doc_id, dead_gen) rows into the tombstone table, keeping
-    the max dead_gen per doc. The merge reads the path it overwrites →
+    the max dead_gen per doc: dead_gen = G is above every stored one
+    (written by earlier generations), so the merge replaces the dead
+    docs' rows. The merge reads the path it overwrites →
     localCheckpoint materializes it first (no driver round-trip)."""
     if not dead:
         return
     tomb_path = os.path.join(store.path, "tombstones")
-    old = store.tombstones(spark)
-    new = spark.createDataFrame(dead, "doc_id long, dead_gen int")
+    old = _read_parts(spark, tomb_path, [""])
+    merged = _arrow_df(spark, "doc_id long, dead_gen int", doc_id=dead,
+                       dead_gen=[dead_gen] * len(dead))
     if old is not None:
-        merged = (old.unionByName(new).groupBy("doc_id")
-                  .agg(F.max("dead_gen").cast("int").alias("dead_gen"))
-                  .localCheckpoint())
-    else:
-        merged = new
+        merged = (old.filter(~F.col("doc_id").isin(dead))
+                  .unionByName(merged).localCheckpoint())
     merged.coalesce(1).write.mode("overwrite").parquet(tomb_path)
-
-
-def _update_terms(spark: SparkSession, store: IndexStore,
-                  old_counts: Counter, new_counts: Counter) -> None:
-    """Exact df/cf deltas for affected terms; dynamic overwrite of the
-    affected bucket partitions of the terms table only."""
-    affected = set(old_counts) | set(new_counts)
-    if not affected:
-        return
-    deltas = []
-    for t in affected:
-        o, n = old_counts.get(t, 0), new_counts.get(t, 0)
-        deltas.append((t, (1 if n else 0) - (1 if o else 0), n - o, n))
-    ddf = spark.createDataFrame(
-        deltas, "term string, d_df long, d_cf long, new_tf long")
-    buckets = sorted({term_bucket(t, store.n_buckets) for t in affected})
-    cur = store.terms(spark).filter(F.col("bucket").isin(buckets))
-    upd = (cur.join(F.broadcast(ddf), "term", "full")
-           .select(
-               F.col("term"),
-               (F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("d_df"), F.lit(0))).alias("df"),
-               (F.coalesce(F.col("cf"), F.lit(0))
-                + F.coalesce(F.col("d_cf"), F.lit(0))).alias("cf"),
-               F.greatest(F.coalesce(F.col("max_tf"), F.lit(0)),
-                          F.coalesce(F.col("new_tf"), F.lit(0)))
-               .cast("int").alias("max_tf"),
-               # gen-0 salt layout is fixed at build: PRESERVE n_salt;
-               # brand-new terms only ever have salt-0 append blocks → 1
-               F.coalesce(F.col("n_salt"), F.lit(1)).cast("int")
-               .alias("n_salt"))
-           .filter(F.col("df") > 0))
-    upd = upd.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("term")),
-                         F.lit(store.n_buckets)).cast("int"))
-    # localCheckpoint (not collect): the merge reads terms/ and dynamic-
-    # overwrites the same path; materializing to executor block storage
-    # breaks the dependency without driver round-trips that would scale
-    # with bucket size (dictionary/n_buckets rows per touched bucket).
-    out = upd.localCheckpoint()
-    (out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(os.path.join(store.path, "terms")))
 
 
 def _dict_size(store: IndexStore) -> int:
     """Exact live-term count from the terms/ parquet FOOTERS (zero jobs,
-    zero data pages): _update_terms writes only df>0 rows and dynamic
+    zero data pages): the terms step writes only df>0 rows and dynamic
     overwrite replaces a touched bucket partition wholesale, so the
     dictionary's physical row count IS the distinct live-lemma count.
     Recomputed from committed state at meta-write time, it stays exact
@@ -282,279 +198,132 @@ def _dict_size(store: IndexStore) -> int:
     return total
 
 
-def _update_doc_tables(spark: SparkSession, store: IndexStore,
-                       doc_id: int, host: str, new_row: dict | None,
-                       new_dl: int | None) -> None:
-    """Replace (or drop) the doc's row in docs/ and doclens/ — reads and
-    rewrites ONLY the doc's partition, via a DIRECT overwrite of the
-    partition directory. Dynamic partition overwrite cannot be used
-    here: it never CLEARS a partition whose merged content is empty, so
-    deleting the last doc of a partition would leave a stale row that a
-    later re-add of the same url double-decrements the dictionaries
-    with. host is immutable per doc_id (doc_id = hash(url_norm), host
-    derived from url_norm), so the doc's (host_bucket, doc_bucket) is
-    stable across reindexes."""
-    from ..functions.hashing import doc_bucket, term_bucket
-    db = doc_bucket(doc_id, store.n_doc_buckets)
-    hb = term_bucket(host, store.n_host_buckets)  # pmod(xxhash64(host), n)
+def _read_parts(spark: SparkSession, table: str, parts,
+                part_cols: tuple[str, ...] = ()):
+    """Rows of the named partition dirs of a table ("" = all of an
+    unpartitioned one); dirs that do not exist are skipped, None when
+    none holds a file. Reading the dirs by path prunes without listing
+    the whole table, and the schema comes from a file footer (the
+    schema Spark wrote there): Spark's own inference costs a job."""
+    import json
 
-    docs_cur = (store.docs(spark)
-                .filter((F.col("host_bucket") == hb)
-                        & (F.col("doc_bucket") == db))  # pruned read
-                .filter(F.col("doc_id") != doc_id)
-                .select("doc_id", "url", "url_norm", "host", "path",
-                        "text", "lang", "warc_ts"))
-    if new_row is not None:
-        add = spark.createDataFrame(
-            [Row(**new_row)],
-            "doc_id long, url string, url_norm string, host string, "
-            "path string, text string, lang string, warc_ts timestamp")
-        docs_cur = docs_cur.unionByName(add)
-    # localCheckpoint: the merged partition (which includes full text
-    # rows) never round-trips through the driver; the read-path
-    # dependency on docs/ is cut before overwriting the same directory.
-    out = docs_cur.localCheckpoint()
-    (out.coalesce(1)
-     .sortWithinPartitions("host", "doc_id")  # keep host rg-stats tight
-     .write.mode("overwrite")
-     .parquet(os.path.join(store.path, "docs",
-                           f"host_bucket={hb}", f"doc_bucket={db}")))
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructType
 
-    dl_cur = (store.doclens(spark)
-              .filter(F.col("doc_bucket") == db)
-              .filter(F.col("doc_id") != doc_id)
-              .select("doc_id", F.col("dl").cast("int").alias("dl"),
-                      "host"))
-    if new_dl is not None and new_dl > 0:
-        dl_cur = dl_cur.unionByName(spark.createDataFrame(
-            [(doc_id, new_dl, host)], "doc_id long, dl int, host string"))
-    dl_out = dl_cur.localCheckpoint()
-    (dl_out.coalesce(1)
-     .sortWithinPartitions("doc_id")  # keep the point-read stats tight
-     .write.mode("overwrite")
-     .option("parquet.block.size", 1024 * 1024)
-     .parquet(os.path.join(store.path, "doclens", f"doc_bucket={db}")))
+    from .index_store import walk_parquet_files
+    dirs = sorted({os.path.join(table, p) for p in parts
+                   if os.path.isdir(os.path.join(table, p))})
+    first = next((f for d in dirs for f in walk_parquet_files(d)), None)
+    if first is None:
+        return None
+    schema = StructType.fromJson(json.loads(pq.read_schema(first).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"]))
+    for c in part_cols:
+        schema = schema.add(c, IntegerType())
+    return spark.read.schema(schema).option("basePath", table).parquet(*dirs)
+
+
+def _rewrite(df: DataFrame, table: str, part_cols: list[str],
+             sort_cols: list[str], parts, **options) -> None:
+    """Replace the touched partition dirs `parts` of a table with `df`,
+    their merged content, by dynamic partition overwrite. `df` comes
+    out of an exchange on the partition columns, so each written
+    partition is ONE file however many writes ran. That exchange is
+    also what makes reading the partitions being replaced safe: every
+    read happens in its map stage, and the overwrite commits after the
+    write stage that follows it. Dynamic overwrite never clears a
+    partition whose merged content is empty (the last doc of a
+    partition deleted): such a dir is one the write left as it was,
+    and it is removed — idempotent, so a crash replay stays exact."""
+    before = {}
+    for p in parts:
+        d = os.path.join(table, p)
+        if os.path.isdir(d):
+            before[d] = sorted(os.listdir(d))
+    w = (df.sortWithinPartitions(*part_cols, *sort_cols)
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic"))
+    for k, v in options.items():
+        w = w.option(k, v)
+    w.partitionBy(*part_cols).parquet(table)
+    for d, names in before.items():
+        if sorted(os.listdir(d)) == names:
+            shutil.rmtree(d)
+
+
+def _rows(df: DataFrame, k: str, **cols) -> DataFrame:
+    """`df` as rows of the two driver collects (one row per batch doc /
+    stored doc), the columns not given null; `k` says which frame a row
+    comes from (u: page, f: its postings, d: delete url, o: stored
+    doc)."""
+    return df.select(*[cols.get(c, F.lit(None)).cast(t).alias(c) for c, t in (
+        ("doc_id", "long"), ("host", "string"), ("th", "long"),
+        ("dl", "long"), ("n_terms", "int"), ("tbs", "array<int>"))],
+        F.lit(k).alias("k"))
 
 
 def reindex_page(spark: SparkSession, store: IndexStore,
                  page: dict) -> dict:
-    """page: {url, warc_ts, html(bytes|None), text(str|None), lang}.
-    Returns {doc_id, old_existed, n_terms}."""
-    try:
-        return _reindex_page_body(spark, store, page)
-    except BaseException:
-        # a crashed mutation may have overwritten partitions already —
-        # cached file listings are garbage (see reindex_batch wrapper)
-        store.invalidate_reads()
-        raise
-
-
-def _reindex_page_body(spark: SparkSession, store: IndexStore,
-                       page: dict) -> dict:
+    """page: {url, warc_ts, html(bytes|None), text(str|None), lang} — a
+    batch of one page. Returns {doc_id, old_existed, n_terms}."""
     pdf = spark.createDataFrame(
         [(page["url"], page.get("warc_ts"), page.get("html"),
           page.get("text"), page.get("lang"))],
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    prep = prepare_pages(pdf).collect()[0]
-    doc_id = prep["doc_id"]
-    new_text = prep["text"]
-    new_counts = Counter(_tokenize_py(new_text))
-
-    meta = store.meta()
-    gen = int(meta.get("gen", 0)) + 1
-
-    old = _doc_row(spark, store, doc_id)
-
-    lineage = _incr_lineage(store)
-    # content-keyed payload (same rationale as _payload_hash): a retry
-    # of the same url with DIFFERENT text must not done-skip into a
-    # mixed generation — it raises as a foreign half-applied gen instead
-    import hashlib
-    bid = _gen_bid(lineage, gen,
-                   f"doc{doc_id}-"
-                   + hashlib.sha1(new_text.encode()).hexdigest()[:12])
-    done = lineage.done_partitions(bid)  # same-payload crash replay
-    # PRE-mutation doc state, pinned in a lineage NOTE before any step
-    # runs: a replay that crashed between the docs/ step committing and
-    # the meta write would otherwise recompute old_dl from the ALREADY-
-    # OVERWRITTEN docs row (old == new → every meta delta nets to zero
-    # → silent permanent drift of n_docs/sum_dl/by-host counts). The
-    # note's values are from the original attempt, so the replay applies
-    # the original deltas. old_counts (the terms-step input) needs no
-    # note: whenever the terms step is NOT yet done, the docs step (which
-    # is ordered after it) hasn't run either, so the recompute below is
-    # still exact — and when it IS done the step is skipped.
-    note = lineage.get_note(bid, "oldstate")
-    if note is not None:
-        old_existed = bool(note["old_existed"])
-        old_dl = int(note["old_dl"])
-    else:
-        old_existed = old is not None
-        old_dl = (sum(Counter(_tokenize_py(old["text"])).values())
-                  if old is not None else 0)
-        lineage.note(bid, "oldstate", old_existed=old_existed,
-                     old_dl=old_dl)
-    old_counts = (Counter(_tokenize_py(old["text"]))
-                  if old is not None and "terms" not in done else Counter())
-    # 1. tombstone old generations (delete-if-exists, S9)
-    if old_existed:
-        _step(lineage, bid, "tombstones",
-              lambda: _write_tombstones(spark, store, [(doc_id, gen - 1)]),
-              done=done)
-    # 2. append new postings as generation `gen`
-    _step(lineage, bid, "blocks",
-          lambda: _append_blocks(spark, store, doc_id, new_counts, gen,
-                                 float(meta.get("avgdl", 0.0))),
-          done=done)
-    # 3. exact dictionary deltas
-    _step(lineage, bid, "terms",
-          lambda: _update_terms(spark, store, old_counts, new_counts),
-          done=done)
-    # 4. docs/doclens row replacement
-    new_row = {"doc_id": doc_id, "url": prep["url"],
-               "url_norm": prep["url_norm"], "host": prep["host"],
-               "path": prep["path"], "text": new_text,
-               "lang": prep["lang"], "warc_ts": prep["warc_ts"]}
-    new_dl = sum(new_counts.values())
-    _step(lineage, bid, "docs",
-          lambda: _update_doc_tables(spark, store, doc_id, prep["host"],
-                                     new_row, new_dl),
-          done=done)
-    # 5. meta: n_docs / avgdl / gen (old_dl from the oldstate note —
-    # exact even on a post-docs-step crash replay)
-    meta["gen"] = gen
-    # the appended blocks' max_imp used the PRE-update avgdl as basis
-    basis = float(meta.get("avgdl", 0.0))
-    if basis > 0:
-        meta["min_imp_basis"] = min(
-            float(meta.get("min_imp_basis", basis)), basis)
-    meta["n_docs"] = meta["n_docs"] - (1 if old_dl > 0 else 0) \
-        + (1 if new_dl > 0 else 0)
-    meta["sum_dl"] = meta.get("sum_dl", 0) - old_dl + new_dl
-    meta["n_dl"] = meta.get("n_dl", 0) - (1 if old_dl > 0 else 0) \
-        + (1 if new_dl > 0 else 0)
-    meta["avgdl"] = (meta["sum_dl"] / meta["n_dl"]) if meta["n_dl"] else 0.0
-    # exact per-host participating-doc count (the dashboard reads meta,
-    # never scans docs/): +1 when the doc starts participating, −1 when
-    # it stops (zero-term rewrite)
-    host = prep["host"]
-    by_host = meta.get("n_docs_by_host", {})
-    dh = (1 if new_dl > 0 else 0) - (1 if old_dl > 0 else 0)
-    if dh:
-        by_host[host] = by_host.get(host, 0) + dh
-        if by_host[host] <= 0:
-            by_host.pop(host)
-    meta["n_docs_by_host"] = by_host
-    if not old_existed:  # page rows count every saved page, zero-term or not
-        pages = meta.get("n_pages_by_host", {})
-        pages[host] = pages.get(host, 0) + 1
-        meta["n_pages_by_host"] = pages
-    meta["n_terms_total"] = _dict_size(store)
-    store.write_meta(meta)
-    store.invalidate_reads()
-    return {"doc_id": doc_id, "old_existed": old_existed,
-            "n_terms": len(new_counts)}
+    # one page is unique by url: no upsert exchange
+    res, n_terms, _ = _mutate(spark, store,
+                              prepare_pages(pdf, assume_unique=True))
+    ((doc_id, n),) = n_terms.items()
+    return {"doc_id": doc_id, "old_existed": res["reindexed"] == 1,
+            "n_terms": n}
 
 
 def delete_page(spark: SparkSession, store: IndexStore, url: str) -> dict:
-    """Delete a page: tombstone + exact dictionary decrements (the
-    reference's PageIndexingUtils.java:46-71, minus its float-truncation
-    bug)."""
-    try:
-        return _delete_page_body(spark, store, url)
-    except BaseException:
-        store.invalidate_reads()  # see reindex_batch wrapper
-        raise
-
-
-def _delete_page_body(spark: SparkSession, store: IndexStore,
-                      url: str) -> dict:
-    pdf = spark.createDataFrame([(url,)], "url string")
-    from ..functions.urlutils import normalize_url
-    url_norm = pdf.select(normalize_url(F.col("url")).alias("u")).first()["u"]
-    doc_id = (spark.createDataFrame([(url_norm,)], "u string")
-              .select(F.xxhash64("u").alias("h")).first()["h"])
-    old = _doc_row(spark, store, doc_id)
-    meta = store.meta()
-    gen = int(meta.get("gen", 0)) + 1
-    lineage = _incr_lineage(store)
-    bid = _gen_bid(lineage, gen, f"del{doc_id}")
-    # PRE-mutation state note (same rationale as _reindex_page_body): a
-    # replay that crashed after the docs step deleted the row would see
-    # old is None and return early WITHOUT applying the meta deltas —
-    # permanent n_docs/sum_dl/by-host drift. The note both records the
-    # original old_dl/host and marks "this delete was in flight".
-    note = lineage.get_note(bid, "oldstate")
-    if old is None and note is None:
-        return {"doc_id": doc_id, "deleted": False}
-    done = lineage.done_partitions(bid)  # same-payload crash replay:
-    # the terms decrement is non-idempotent — re-running it on a retry
-    # would subtract the doc's df/cf twice (deletes are content-free, so
-    # the bare doc_id payload is already a complete identity here)
-    if old is not None:
-        old_counts = Counter(_tokenize_py(old["text"]))
-        old_dl = sum(old_counts.values())
-        host = old["host"]
-    else:  # replay past the docs step — terms/docs are done-skipped
-        old_counts = Counter()
-        old_dl = int(note["old_dl"])
-        host = note["host"]
-    if note is None:
-        lineage.note(bid, "oldstate", old_dl=old_dl, host=host)
-    _step(lineage, bid, "tombstones",
-          lambda: _write_tombstones(spark, store, [(doc_id, gen - 1)]),
-          done=done)
-    _step(lineage, bid, "terms",
-          lambda: _update_terms(spark, store, old_counts, Counter()),
-          done=done)
-    _step(lineage, bid, "docs",
-          lambda: _update_doc_tables(spark, store, doc_id, host,
-                                     None, None),
-          done=done)
-    meta["gen"] = gen
-    meta["n_docs"] -= (1 if old_dl > 0 else 0)
-    meta["sum_dl"] = meta.get("sum_dl", 0) - old_dl
-    meta["n_dl"] = meta.get("n_dl", 0) - (1 if old_dl > 0 else 0)
-    meta["avgdl"] = (meta["sum_dl"] / meta["n_dl"]) if meta["n_dl"] else 0.0
-    h = host
-    if old_dl > 0:
-        by_host = meta.get("n_docs_by_host", {})
-        by_host[h] = by_host.get(h, 0) - 1
-        if by_host[h] <= 0:
-            by_host.pop(h)
-        meta["n_docs_by_host"] = by_host
-    pages = meta.get("n_pages_by_host", {})
-    if h in pages:
-        pages[h] -= 1
-        if pages[h] <= 0:
-            pages.pop(h)
-        meta["n_pages_by_host"] = pages
-    meta["n_terms_total"] = _dict_size(store)
-    store.write_meta(meta)
-    store.invalidate_reads()
-    return {"doc_id": doc_id, "deleted": True}
+    """Delete a page: a delete-only batch — tombstone + exact dictionary
+    decrements (the reference's PageIndexingUtils.java:46-71, minus its
+    float-truncation bug). An absent url changes nothing (gen is not
+    bumped) and returns deleted: False."""
+    res, _, dels = _mutate(spark, store, None, delete_urls=[url])
+    return {"doc_id": dels[0], "deleted": res is not None}
 
 
 def reindex_batch(spark: SparkSession, store: IndexStore,
                   raw_pages, idem_key: tuple[str, int] | None = None) -> dict:
-    """See _reindex_batch_body. This wrapper guarantees the store's
-    read caches are dropped even when a mutation DIES mid-way: the
-    crashed attempt may already have overwritten table partitions, so
-    cached file listings are garbage — exactly what a restarted process
-    would not have. (Found by the kill-and-restart stream test: the
-    replay read a pre-crash terms/ listing and hit deleted files.)"""
+    """Bulk reindex of a pages frame (see _reindex_batch_body); the
+    latest warc_ts wins among rows of one url."""
+    return _mutate(spark, store, prepare_pages(raw_pages),
+                   idem_key=idem_key)[0]
+
+
+def _mutate(spark: SparkSession, store: IndexStore, pages,
+            idem_key: tuple[str, int] | None = None, delete_urls=()):
+    """Run _reindex_batch_body, guaranteeing the store's read caches are
+    dropped even when a mutation DIES mid-way: the crashed attempt may
+    already have overwritten table partitions, so cached file listings
+    are garbage — exactly what a restarted process would not have.
+    (Found by the kill-and-restart stream test: the replay read a
+    pre-crash terms/ listing and hit deleted files.) The body's
+    persisted frames are dropped either way."""
+    cached: list[DataFrame] = []
     try:
-        return _reindex_batch_body(spark, store, raw_pages, idem_key)
+        return _reindex_batch_body(spark, store, pages, idem_key,
+                                   delete_urls, cached)
     except BaseException:
         store.invalidate_reads()
         raise
+    finally:
+        for df_ in cached:
+            df_.unpersist()
 
 
 def _reindex_batch_body(spark: SparkSession, store: IndexStore,
-                        raw_pages,
-                        idem_key: tuple[str, int] | None = None) -> dict:
-    """Distributed bulk reindex: the foreachBatch body of the streaming
-    ingest (streaming/ingest.py) and the bulk form of reindex_page.
+                        pages, idem_key: tuple[str, int] | None,
+                        delete_urls, cached: list):
+    """The one mutation: upsert the prepared `pages` (None: none)
+    and delete the pages of `delete_urls`. The foreachBatch body of the
+    streaming ingest (streaming/ingest.py), and the body of reindex_page
+    and delete_page. Returns (stats, {doc_id: n_terms} of the pages,
+    deleted urls' doc_ids); stats is None for a delete-only batch that
+    found nothing to delete.
 
     idem_key = (stream_id, batch_id): the foreachBatch replay guard.
     A batch whose id is ≤ the recorded progress for its stream is a
@@ -568,67 +337,132 @@ def _reindex_batch_body(spark: SparkSession, store: IndexStore,
     until check_consistency was run).
 
     Everything is DataFrame work — no per-row driver loops:
-      new postings   postings_flat over the prepared batch
-      old postings   postings_flat over the matching docs-table rows
+      new postings   the fused per-doc kernel over the prepared batch
+      old postings   the same kernel over the matching docs-table rows
                      (recomputed from stored text — cheaper than decoding
                      blocks, and exact by the byte-identity invariant)
       appends        standard encode pipeline at gen = G+1
-      tombstones     one row per pre-existing doc
-      dictionaries   groupBy deltas merged into the affected term buckets
-      docs/doclens   dynamic overwrite of the affected doc buckets
+      tombstones     one row per pre-existing batch doc
+      dictionaries   deltas merged into the affected term buckets
+      docs/doclens   the batch docs' partitions rewritten with the old
+                     rows replaced (pages) or dropped (deletes)
     """
-    from .build import postings_flat, term_stats
+    from .build import explode_postings, postings_fused_docs
+    from .index_store import BLOCKS_SCHEMA, make_block_encoder
+
+    def persist(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
+
+    def pmod(c, n: int):
+        return F.pmod(F.xxhash64(c), F.lit(n)).cast("int")
+
+    def fused_rows(fused: DataFrame) -> DataFrame:
+        return _rows(fused, "f", doc_id=F.col("doc_id"), dl=F.col("dl"),
+                     n_terms=F.size("terms"),
+                     tbs=F.array_distinct(F.transform(
+                         "terms", lambda t: pmod(t, store.n_buckets))))
 
     meta = store.meta()
     if idem_key is not None:
         rec = meta.get("stream_progress", {}).get(idem_key[0])
         if rec is not None and idem_key[1] <= rec["batch_id"]:
-            return {**rec["stats"], "replayed": True}
+            return {**rec["stats"], "replayed": True}, {}, []
     gen = int(meta.get("gen", 0)) + 1
 
-    prep = prepare_pages(raw_pages).persist()
-    batch_ids = prep.select("doc_id")
-
-    old_docs = (store.docs(spark)
-                .join(F.broadcast(batch_ids), "doc_id", "left_semi")
-                .persist())
-    new_posts = postings_flat(prep).persist()
-    old_posts = postings_flat(old_docs).persist()
+    # --- batch-sized collect 1: one row per page, per page with
+    # postings and per delete url (recomputable exactly on ANY replay —
+    # it comes from the batch, not from the mutable store)
+    frames = []
+    new_fused = None
+    if pages is not None:
+        pages = persist(pages)
+        new_fused = persist(postings_fused_docs(pages))
+        frames += [_rows(pages, "u", doc_id=F.col("doc_id"),
+                         host=F.col("host"),
+                         th=F.xxhash64(F.coalesce("text", F.lit("")))),
+                   fused_rows(new_fused)]
+    if delete_urls:
+        from ..functions.urlutils import normalize_url, url_host
+        u = normalize_url(F.col("url"))
+        frames.append(_rows(_arrow_df(spark, "url string",
+                                      url=list(delete_urls)),
+                            "d", doc_id=F.xxhash64(u), host=url_host(u)))
+    id_host, th, new_dl, n_terms, new_tbs, del_host = {}, {}, {}, {}, set(), {}
+    parts_of = {}  # doc_id → (host_bucket, doc_bucket)
+    for r in (reduce(DataFrame.unionByName, frames)
+              .withColumn("hb", pmod("host", store.n_host_buckets))
+              .withColumn("db", pmod("doc_id", store.n_doc_buckets))
+              .collect()):
+        if r["k"] != "f":
+            parts_of[r["doc_id"]] = (r["hb"], r["db"])
+        if r["k"] == "u":
+            id_host[r["doc_id"]], th[r["doc_id"]] = r["host"], r["th"]
+        elif r["k"] == "f":
+            new_dl[r["doc_id"]] = r["dl"]
+            n_terms[r["doc_id"]] = r["n_terms"]
+            new_tbs.update(r["tbs"])
+        else:
+            del_host[r["doc_id"]] = r["host"]
+    up_ids, del_ids = list(id_host), sorted(del_host)
+    id_host.update(del_host)
+    all_ids = list(id_host)
+    # a doc's (host_bucket, doc_bucket) is immutable: host derives from
+    # url_norm, doc_id = hash(url_norm)
+    docs_parts = {f"host_bucket={parts_of[d][0]}/doc_bucket={parts_of[d][1]}"
+                  for d in all_ids}
+    dl_parts = {f"doc_bucket={parts_of[d][1]}" for d in all_ids}
+    docs_path = os.path.join(store.path, "docs")
+    doclens_path = os.path.join(store.path, "doclens")
 
     lineage = _incr_lineage(store)
     # payload identity: the stream's (checkpoint path, batch id) when
     # present — stable across foreachBatch replays — else a content
-    # hash of the batch's doc ids (same input files → same key)
+    # hash of the batch (same input files → same key); deletes add a
+    # "d" part, so a delete's key never equals an upsert's
     if idem_key is not None:
         import hashlib
         sid = hashlib.sha1(idem_key[0].encode()).hexdigest()[:12]
         pkey = f"s{sid}b{idem_key[1]}"
     else:
-        pkey = "h" + _payload_hash(
-            (r["doc_id"], r["th"]) for r in
-            prep.select("doc_id",
-                        F.xxhash64(F.coalesce(F.col("text"), F.lit("")))
-                        .alias("th")).collect())
+        pkey = ("h" + _payload_hash((d, th[d]) for d in up_ids)
+                if pages is not None else "")
+        if del_ids:
+            pkey += "d" + _payload_hash((d, 0) for d in del_ids)
     bid = _gen_bid(lineage, gen, pkey)
     done = lineage.done_partitions(bid)  # partial-replay step skip
+    note = lineage.get_note(bid, "oldstate")
 
-    # batch-input collections (recomputable exactly on ANY replay —
-    # they come from the batch, not from the mutable store)
-    id_host = {r["doc_id"]: r["host"]
-               for r in prep.select("doc_id", "host").collect()}
-    all_ids = list(id_host)
+    # --- batch-sized collect 2: the batch docs' stored rows, read from
+    # their partitions only (exact whenever the terms step still has
+    # to run: docs/ is rewritten after it)
+    old_docs = old_fused = None
+    old_dl, old_tbs = {}, set()
+    cur = _read_parts(spark, docs_path, docs_parts,
+                      ("host_bucket", "doc_bucket"))
+    if cur is not None:
+        old_docs = persist(cur.filter(F.col("doc_id").isin(all_ids)))
+        old_fused = persist(postings_fused_docs(old_docs))
+        for r in (_rows(old_docs, "o", doc_id=F.col("doc_id"))
+                  .unionByName(fused_rows(old_fused)).collect()):
+            if r["k"] == "o":
+                old_dl.setdefault(r["doc_id"], 0)
+            else:
+                old_dl[r["doc_id"]] = r["dl"]
+                old_tbs.update(r["tbs"])
+    if pages is None and not old_dl and note is None:
+        return None, {}, del_ids  # nothing to delete: gen stays
 
-    # PRE-mutation oldstate note (crash-replay exactness — same
-    # rationale as _reindex_page_body): the OLD-state-dependent meta
-    # inputs must reflect the store BEFORE this generation's docs/
-    # overwrite; a replay recomputing them past that point reads the
-    # NEW rows (old ≡ new → every delta nets to zero → silent drift).
-    # The note pins only per-host AGGREGATES — O(distinct hosts in the
+    # PRE-mutation oldstate note (crash-replay exactness): the
+    # OLD-state-dependent meta inputs must reflect the store BEFORE this
+    # generation's docs/ overwrite; a replay recomputing them past that
+    # point reads the NEW rows (old ≡ new → every delta nets to zero →
+    # silent drift), and a delete's replay would find its row gone. The
+    # note pins only per-host AGGREGATES — O(distinct hosts in the
     # batch), never O(docs) — so a long-lived re-crawling stream does
     # not grow the lineage file per-doc (the per-doc olds list is only
     # needed by the tombstones step, which is ordered BEFORE docs: any
     # replay that can no longer recompute it has already committed it).
-    note = lineage.get_note(bid, "oldstate")
     if note is not None and "tombstones" in done:
         # Replay where docs/ MAY have been overwritten — aggregates
         # from the note. The guard is the TOMBSTONES step (the first
@@ -636,194 +470,172 @@ def _reindex_batch_body(spark: SparkSession, store: IndexStore,
         # have started after tombstones' DONE row landed. Keying on
         # "docs" in done left a window — crash after the docs overwrite
         # committed but before ITS done row — where the recompute read
-        # the already-overwritten rows (old ≡ new → zero deltas →
-        # silent meta drift). When tombstones is done, `olds` is never
-        # needed (its step is skipped) and the note is exact.
+        # the already-overwritten rows. When tombstones is done, `olds`
+        # is never needed (its step is skipped) and the note is exact.
         olds = None
         olds_by_host = {k: int(v)
                         for k, v in note["olds_by_host"].items()}
         had_by_host = {k: int(v) for k, v in note["had_by_host"].items()}
         old_dl_sum = int(note["old_dl_sum"])
+        n_del = int(note["n_del"])
     else:
-        # docs/ still holds the pre-batch rows → exact recompute
-        # (batch-sized driver collects — one long per doc in THIS
-        # batch, never corpus/bucket-sized)
-        olds = [r["doc_id"] for r in old_docs.select("doc_id").collect()]
-        old_dl = {r["doc_id"]: int(r["s"]) for r in
-                  old_posts.groupBy("doc_id")
-                  .agg(F.sum("tf").alias("s")).collect()}
+        olds = list(old_dl)
         olds_by_host = dict(Counter(id_host[d] for d in olds))
         had_by_host = dict(Counter(
-            id_host[d] for d in olds if old_dl.get(d, 0) > 0))
+            id_host[d] for d in olds if old_dl[d] > 0))
         old_dl_sum = sum(old_dl.values())
+        n_del = len(set(olds) & set(del_ids))
         if note is None:
             lineage.note(bid, "oldstate", olds_by_host=olds_by_host,
-                         had_by_host=had_by_host, old_dl_sum=old_dl_sum)
+                         had_by_host=had_by_host, old_dl_sum=old_dl_sum,
+                         n_del=n_del)
 
-    # --- 1. tombstones for every pre-existing doc
+    # --- 1. tombstones for every pre-existing batch doc
     _step(lineage, bid, "tombstones",
-          lambda: _write_tombstones(spark, store,
-                                    [(d, gen - 1) for d in olds]),
+          lambda: _write_tombstones(spark, store, olds, gen - 1),
           done=done)
 
     # --- 2. append new postings as gen blocks (same encode pipeline;
-    # dl joined on so the blocks stay join-free for BM25)
-    from .index_store import BLOCKS_SCHEMA, make_block_encoder
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    batch_dls = new_posts.groupBy("doc_id").agg(
-        F.sum("tf").cast("int").alias("dl"))
-    # impact basis = CURRENT avgdl; recorded in min_imp_basis so query-
-    # time pruning can correct if store-wide avgdl later drifts upward
+    # dl rides on every posting so the blocks stay join-free for BM25).
+    # Clustered on bucket: one file per touched bucket per write, and
+    # the encoder's (term, salt) runs stay whole (a term never
+    # straddles buckets). Impact basis = CURRENT avgdl; recorded in
+    # min_imp_basis so query-time pruning can correct if store-wide
+    # avgdl later drifts upward.
     enc_basis = float(meta.get("avgdl", 0.0))
-    enc = (new_posts.withColumn("salt", F.lit(0))
-           .join(F.broadcast(batch_dls), "doc_id")
-           .select("term", "salt", "doc_id", "tf", "dl")
-           .repartition(shuffle_parts, "term", "salt")
-           .sortWithinPartitions("term", "salt", "doc_id")
-           .mapInPandas(make_block_encoder(enc_basis), BLOCKS_SCHEMA)
-           .withColumn("gen", F.lit(gen))
-           .withColumn("bucket", F.pmod(F.xxhash64(F.col("term")),
-                                        F.lit(store.n_buckets)).cast("int")))
-    _step(lineage, bid, "blocks",
-          lambda: (enc.write.mode("append").partitionBy("bucket")
-                   .parquet(os.path.join(store.path, "blocks"))),
-          done=done)
 
-    # New-state meta inputs — from the batch input, exact on any replay
-    # (old-state inputs were pinned in the oldstate note above).
-    new_dl_rows = (new_posts.groupBy("doc_id")
-                   .agg(F.sum("tf").cast("int").alias("dl")).collect())
-    new_dl = {r["doc_id"]: r["dl"] for r in new_dl_rows}
+    def append_blocks():
+        if not new_tbs:
+            return
+        (explode_postings(new_fused)
+         .withColumn("salt", F.lit(0))
+         .withColumn("bucket", pmod("term", store.n_buckets))
+         .repartition("bucket")
+         .sortWithinPartitions("bucket", "term", "salt", "doc_id")
+         .select("term", "salt", "doc_id", "tf", "dl")
+         .mapInPandas(make_block_encoder(enc_basis), BLOCKS_SCHEMA)
+         .withColumn("gen", F.lit(gen))
+         .withColumn("bucket", pmod("term", store.n_buckets))
+         .write.mode("append").partitionBy("bucket")
+         .parquet(os.path.join(store.path, "blocks")))
+    _step(lineage, bid, "blocks", append_blocks, done=done)
 
-    # --- 3. dictionary deltas (affected term buckets only)
-    new_stats = term_stats(new_posts).withColumnRenamed("df", "ndf") \
-        .withColumnRenamed("cf", "ncf")
-    old_stats = term_stats(old_posts).withColumnRenamed("df", "odf") \
-        .withColumnRenamed("cf", "ocf")
-    new_max = new_posts.groupBy("term").agg(
-        F.max("tf").cast("int").alias("nmax"))
-    delta = (new_stats.join(old_stats, "term", "full")
-             .join(new_max, "term", "left").fillna(0))
-    abuckets = [r["b"] for r in delta.select(
-        F.pmod(F.xxhash64("term"), F.lit(store.n_buckets)).cast("int")
-        .alias("b")).distinct().collect()]
-    if abuckets:
-        cur = store.terms(spark).filter(F.col("bucket").isin(abuckets))
-        upd = (cur.join(delta, "term", "full")
-               .select(
-                   "term",
-                   (F.coalesce("df", F.lit(0)) + F.coalesce("ndf", F.lit(0))
-                    - F.coalesce("odf", F.lit(0))).cast("long").alias("df"),
-                   (F.coalesce("cf", F.lit(0)) + F.coalesce("ncf", F.lit(0))
-                    - F.coalesce("ocf", F.lit(0))).cast("long").alias("cf"),
-                   F.greatest(F.coalesce("max_tf", F.lit(0)),
-                              F.coalesce("nmax", F.lit(0)))
-                   .cast("int").alias("max_tf"),
-                   # preserve the build-time gen-0 salt layout (new terms
-                   # only ever gain salt-0 append blocks)
-                   F.coalesce("n_salt", F.lit(1)).cast("int")
-                   .alias("n_salt"))
-               .filter(F.col("df") > 0)
-               .withColumn("bucket",
-                           F.pmod(F.xxhash64("term"),
-                                  F.lit(store.n_buckets)).cast("int")))
-        # merged buckets materialize executor-side (localCheckpoint), not
-        # through the driver: the old path collected ~dictionary/32 rows
-        # per touched bucket — the round-1 scale-killer. The eager
-        # localCheckpoint is skipped on a replay whose step already
-        # committed (it would recompute the merge against the ALREADY-
-        # MERGED table — wasted work and a double-applied delta frame).
-        if "terms" not in done:
-            out = upd.localCheckpoint()
-            _step(lineage, bid, "terms",
-                  lambda: (out.write.mode("overwrite")
-                           .option("partitionOverwriteMode", "dynamic")
-                           .partitionBy("bucket")
-                           .parquet(os.path.join(store.path, "terms"))),
-                  done=done)
+    # --- 3. dictionary deltas (affected term buckets only): the
+    # bucket rows, +1/+tf per new posting and −1/−tf per old one,
+    # summed per term in ONE exchange clustered on bucket (so each
+    # rewritten bucket is one file). max_tf only grows; the build-time
+    # gen-0 salt layout is preserved (new terms only ever gain salt-0
+    # append blocks → n_salt 1).
+    abuckets = sorted(new_tbs | old_tbs)
+    terms_path = os.path.join(store.path, "terms")
 
-    # --- 4. docs + doclens (affected doc buckets). Safe under dynamic
-    # overwrite (unlike the single-doc delete path): reindex_batch never
-    # REMOVES docs, and a doc's (host_bucket, doc_bucket) is immutable,
-    # so every rewritten partition keeps ≥ its non-batch rows — no
-    # partition can end up empty-but-uncleared.
-    doc_bucket = F.pmod(F.xxhash64(F.col("doc_id")),
-                        F.lit(store.n_doc_buckets)).cast("int")
-    host_bucket = F.pmod(F.xxhash64(F.col("host")),
-                         F.lit(store.n_host_buckets)).cast("int")
-    new_rows = (prep.select("doc_id", "url", "url_norm", "host", "path",
-                            "text", "lang", "warc_ts")
-                .withColumn("doc_bucket", doc_bucket)
-                .withColumn("host_bucket", host_bucket))
-    dbuckets = [r["doc_bucket"] for r in
-                new_rows.select("doc_bucket").distinct().collect()]
-    keep = (store.docs(spark).filter(F.col("doc_bucket").isin(dbuckets))
-            .join(F.broadcast(batch_ids), "doc_id", "left_anti"))
-    # localCheckpoint (no driver collect): full doc rows INCLUDING text —
-    # the round-1 path shipped ~1/n_buckets of the corpus text through
-    # the driver per touched bucket; now the merge stays executor-side.
-    # Each eager merge is skipped when a replay finds its step DONE
-    # (the merge would read the already-overwritten partitions).
-    if "docs" not in done:
-        out_docs = (keep.select(new_rows.columns).unionByName(new_rows)
-                    .localCheckpoint())
-        _step(lineage, bid, "docs",
-              lambda: (out_docs
-                       .sortWithinPartitions("host_bucket", "doc_bucket",
-                                             "host", "doc_id")
-                       .write.mode("overwrite")
-                       .option("partitionOverwriteMode", "dynamic")
-                       .partitionBy("host_bucket", "doc_bucket")
-                       .parquet(os.path.join(store.path, "docs"))),
-              done=done)
+    def merge_terms():
+        if not abuckets:
+            return
+        terms_parts = [f"bucket={b}" for b in abuckets]
+        parts = []
+        cur = _read_parts(spark, terms_path, terms_parts, ("bucket",))
+        if cur is not None:
+            parts.append(cur.select(
+                "term", F.col("df").cast("long"), F.col("cf").cast("long"),
+                F.col("max_tf").cast("long"), F.col("n_salt").cast("int")))
+        for fused, sign in ((new_fused, 1), (old_fused, -1)):
+            if fused is not None:
+                tf = F.col("tf").cast("long")
+                parts.append(explode_postings(fused).select(
+                    "term", F.lit(sign).cast("long").alias("df"),
+                    (tf * sign).alias("cf"),
+                    (tf if sign > 0 else F.lit(0).cast("long"))
+                    .alias("max_tf"),
+                    F.lit(None).cast("int").alias("n_salt")))
+        merged = (reduce(DataFrame.unionByName, parts)
+                  .withColumn("bucket", pmod("term", store.n_buckets))
+                  .repartition("bucket")
+                  .groupBy("bucket", "term")
+                  .agg(F.sum("df").cast("long").alias("df"),
+                       F.sum("cf").cast("long").alias("cf"),
+                       F.max("max_tf").cast("int").alias("max_tf"),
+                       F.coalesce(F.max("n_salt"), F.lit(1)).cast("int")
+                       .alias("n_salt"))
+                  .filter(F.col("df") > 0)
+                  .select("term", "df", "cf", "max_tf", "n_salt", "bucket"))
+        # merged buckets stay executor-side, not through the driver:
+        # the old path collected ~dictionary/32 rows per touched
+        # bucket — the round-1 scale-killer
+        _rewrite(merged, terms_path, ["bucket"], ["term"], terms_parts)
+    _step(lineage, bid, "terms", merge_terms, done=done)
 
-    if "doclens" not in done:
-        new_dls = (spark.createDataFrame(
-            [(r["doc_id"], r["dl"], id_host[r["doc_id"]])
-             for r in new_dl_rows],
-            "doc_id long, dl int, host string")
-            .withColumn("doc_bucket", doc_bucket))
-        keep_dl = (store.doclens(spark)
-                   .filter(F.col("doc_bucket").isin(dbuckets))
-                   .join(F.broadcast(batch_ids), "doc_id", "left_anti"))
-        merged_dl = (keep_dl
-                     .select("doc_id", F.col("dl").cast("int").alias("dl"),
-                             "host",
-                             F.col("doc_bucket").cast("int")
-                             .alias("doc_bucket"))
-                     .unionByName(new_dls)
-                     .localCheckpoint())
-        _step(lineage, bid, "doclens",
-              lambda: (merged_dl
-                       .sortWithinPartitions("doc_bucket", "doc_id")
-                       .write.mode("overwrite")
-                       .option("partitionOverwriteMode", "dynamic")
-                       .option("parquet.block.size", 1024 * 1024)
-                       .partitionBy("doc_bucket")
-                       .parquet(os.path.join(store.path, "doclens"))),
-              done=done)
+    # --- 4. docs + doclens: the batch docs' partitions keep their other
+    # rows, with the pages' new rows added (full doc rows INCLUDING
+    # text merge executor-side — the round-1 path shipped ~1/n_buckets
+    # of the corpus text through the driver per touched bucket)
+    not_batch = ~F.col("doc_id").isin(all_ids)
+    doc_cols = ["doc_id", "url", "url_norm", "host", "path", "text",
+                "lang", "warc_ts", "host_bucket", "doc_bucket"]
+
+    def merge_docs():
+        rows = []
+        kept = _read_parts(spark, docs_path, docs_parts,
+                           ("host_bucket", "doc_bucket"))
+        if kept is not None:
+            rows.append(kept.filter(not_batch).select(doc_cols))
+        if pages is not None:
+            rows.append(pages
+                        .withColumn("doc_bucket",
+                                    pmod("doc_id", store.n_doc_buckets))
+                        .withColumn("host_bucket",
+                                    pmod("host", store.n_host_buckets))
+                        .select(doc_cols))
+        if rows:  # none: a replayed delete already removed the dir
+            _rewrite(reduce(DataFrame.unionByName, rows)
+                     .repartition("host_bucket", "doc_bucket"), docs_path,
+                     ["host_bucket", "doc_bucket"], ["host", "doc_id"],
+                     docs_parts)
+    _step(lineage, bid, "docs", merge_docs, done=done)
+
+    def merge_doclens():
+        ids = [d for d in up_ids if new_dl.get(d)]
+        # dl is a long, as the build writes it: a read takes its schema
+        # from one file, and a long column cannot be read as an int
+        rows = [_arrow_df(spark, "doc_id long, dl long, host string",
+                          doc_id=ids, dl=[new_dl[d] for d in ids],
+                          host=[id_host[d] for d in ids])
+                .withColumn("doc_bucket", pmod("doc_id", store.n_doc_buckets))]
+        kept = _read_parts(spark, doclens_path, dl_parts, ("doc_bucket",))
+        if kept is not None:
+            rows.append(kept.filter(not_batch).select(
+                "doc_id", F.col("dl").cast("long").alias("dl"), "host",
+                F.col("doc_bucket").cast("int").alias("doc_bucket")))
+        # small row groups keep the point-read stats tight
+        _rewrite(reduce(DataFrame.unionByName, rows)
+                 .repartition("doc_bucket"), doclens_path,
+                 ["doc_bucket"], ["doc_id"], dl_parts,
+                 **{"parquet.block.size": 1024 * 1024})
+    _step(lineage, bid, "doclens", merge_doclens, done=done)
 
     # --- 5. meta — aggregate deltas, equivalent to the per-doc loop
     # (n_docs/n_dl += Σ(new_dl>0) − Σ(had); sum_dl += Σnew − Σold;
-    # pages[h] += batch docs of h − pre-existing docs of h; by-host
-    # counts exact under the invariant had_h ≤ current count of h).
-    # Aggregate form so the REPLAY path (note-recovered aggregates) and
-    # the fresh path share one computation.
-    n_batch_by_host = Counter(id_host.values())
-    npos_by_host = Counter(id_host[d] for d in all_ids
-                           if new_dl.get(d, 0) > 0)
-    new_dl_sum = sum(new_dl.values())
+    # pages[h] += pages of h − pre-existing docs of h (deletes
+    # included); by-host counts exact under the invariant had_h ≤
+    # current count of h). Aggregate form so the REPLAY path
+    # (note-recovered aggregates) and the fresh path share one
+    # computation.
+    n_batch_by_host = Counter(id_host[d] for d in up_ids)
+    npos_by_host = Counter(id_host[d] for d in up_ids if new_dl.get(d))
     by_host = meta.get("n_docs_by_host", {})
-    pages = meta.get("n_pages_by_host", {})
-    for h, nb in n_batch_by_host.items():
-        fresh = nb - olds_by_host.get(h, 0)  # brand-new page rows
+    n_pages = meta.get("n_pages_by_host", {})
+    for h in set(n_batch_by_host) | set(olds_by_host):
+        fresh = n_batch_by_host.get(h, 0) - olds_by_host.get(h, 0)
         if fresh:
-            pages[h] = pages.get(h, 0) + fresh
-    meta["n_pages_by_host"] = pages
+            n_pages[h] = n_pages.get(h, 0) + fresh
+            if n_pages[h] <= 0:
+                n_pages.pop(h)
+    meta["n_pages_by_host"] = n_pages
     npos_total = sum(npos_by_host.values())
     had_total = sum(had_by_host.values())
     meta["n_docs"] += npos_total - had_total
-    meta["sum_dl"] = meta.get("sum_dl", 0) + new_dl_sum - old_dl_sum
+    meta["sum_dl"] = (meta.get("sum_dl", 0) + sum(new_dl.values())
+                      - old_dl_sum)
     meta["n_dl"] = meta.get("n_dl", 0) + npos_total - had_total
     for h in set(npos_by_host) | set(had_by_host):
         dh = npos_by_host.get(h, 0) - had_by_host.get(h, 0)
@@ -834,13 +646,12 @@ def _reindex_batch_body(spark: SparkSession, store: IndexStore,
     meta["n_docs_by_host"] = by_host
     meta["avgdl"] = (meta["sum_dl"] / meta["n_dl"]) if meta.get("n_dl") else 0.0
     meta["gen"] = gen
-    if enc_basis > 0:
+    if enc_basis > 0 and pages is not None:
         meta["min_imp_basis"] = min(
             float(meta.get("min_imp_basis", enc_basis)), enc_basis)
-    n_batch = len(all_ids)
-    n_olds = sum(olds_by_host.values())
-    result = {"batch_docs": n_batch, "gen": gen,
-              "reindexed": n_olds, "new": n_batch - n_olds}
+    reindexed = sum(olds_by_host.values()) - n_del
+    result = {"batch_docs": len(up_ids), "gen": gen,
+              "reindexed": reindexed, "new": len(up_ids) - reindexed}
     if idem_key is not None:
         # commit the stream progress in the SAME meta write as the gen
         # bump: a replay of any batch ≤ this id is then an exact no-op.
@@ -849,11 +660,8 @@ def _reindex_batch_body(spark: SparkSession, store: IndexStore,
         sp[idem_key[0]] = {"batch_id": idem_key[1], "stats": result}
     meta["n_terms_total"] = _dict_size(store)
     store.write_meta(meta)
-
     store.invalidate_reads()
-    for df_ in (prep, old_docs, new_posts, old_posts):
-        df_.unpersist()
-    return result
+    return result, {d: n_terms.get(d, 0) for d in up_ids}, del_ids
 
 
 def check_consistency(spark: SparkSession, store: IndexStore) -> dict:

@@ -140,28 +140,30 @@ def test_consistency_and_lineage(spark, store):
         if r["status"] == "DONE":
             g = r["build_id"].split("-")[1]
             by_gen_done.setdefault(g, set()).add(r["partition_id"])
-    assert by_gen_done["g1"] == {"tombstones", "blocks", "terms", "docs"}
-    assert by_gen_done["g2"] == {"blocks", "terms", "docs"}  # brand new
-    assert by_gen_done["g3"] == {"tombstones", "terms", "docs"}  # delete
+    # update, brand-new page and delete all run the one batch body:
+    # every step of every generation is DONE (a step with nothing to
+    # write still records its row)
+    for g in ("g1", "g2", "g3"):
+        assert by_gen_done[g] == {"tombstones", "blocks", "terms", "docs",
+                                  "doclens"}, g
     assert not [r for r in incr if r["status"] == "FAILED"]
 
 
 def test_no_scaling_collects():
-    """Grep-auditable VERDICT done-criterion: the bucket-merge paths
-    (terms/docs/doclens/tombstones rewrites) contain NO collect() — a
-    collect there scales with bucket/dictionary size, not batch size."""
+    """Grep-auditable VERDICT done-criterion: the one mutation body
+    collects exactly its two batch-sized frames (one row per batch doc,
+    one per stored batch doc), and the table merges (terms/docs/doclens/
+    tombstones rewrites) contain NO collect() — a collect there scales
+    with bucket/dictionary size, not batch size."""
     import inspect
 
     from search_engine_skillbox_spark.operators import incremental as inc
-    for fn in (inc._update_terms, inc._update_doc_tables,
-               inc._write_tombstones):
+    for fn in (inc._write_tombstones, inc._read_parts, inc._rewrite):
         assert ".collect()" not in inspect.getsource(fn), fn.__name__
-    # reindex_batch: merges go through localCheckpoint, never the driver
     src = inspect.getsource(inc._reindex_batch_body)
-    assert "localCheckpoint" in src
-    for banned in ("upd.collect", "merged_docs.collect", "merged.collect",
-                   ".unionByName(new_rows)\n        .collect"):
-        assert banned not in src, banned
+    assert src.count(".collect()") == 2
+    for fn in (inc.reindex_page, inc.delete_page, inc.reindex_batch):
+        assert ".collect()" not in inspect.getsource(fn), fn.__name__
 
 
 def test_compact_preserves_state(spark, store):
@@ -404,21 +406,31 @@ def test_compact_carries_original_warc_ts(spark, store):
     assert docs2 == docs1
 
 
-def _crash_then_retry(spark, store, monkeypatch, op):
-    """Run `op` with _update_doc_tables raising (crash after the
-    non-idempotent blocks/terms steps are lineage-DONE, before docs and
-    the meta write), then retry clean."""
-    import search_engine_skillbox_spark.operators.incremental as inc
-    real = inc._update_doc_tables
+def _crash_at(monkeypatch, hook: str, pid: str, op):
+    """Run `op` with the Lineage `hook` ("start" or "done") of step
+    `pid` of an incremental mutation raising, then retry clean. A crash
+    in "start" stops the mutation before the step runs; in "done",
+    after the step's writes committed but before its DONE row."""
+    from search_engine_skillbox_spark.plans.checkpoint import Lineage
+    real = getattr(Lineage, hook)
 
-    def boom(*a, **kw):
-        raise RuntimeError("synthetic crash before docs step")
+    def boom(self, build_id, partition_id, *a, **kw):
+        if partition_id == pid and build_id.startswith("incr-"):
+            raise RuntimeError(f"synthetic crash in {hook} of {pid}")
+        return real(self, build_id, partition_id, *a, **kw)
 
-    monkeypatch.setattr(inc, "_update_doc_tables", boom)
+    monkeypatch.setattr(Lineage, hook, boom)
     with pytest.raises(RuntimeError, match="synthetic crash"):
         op()
-    monkeypatch.setattr(inc, "_update_doc_tables", real)
+    monkeypatch.setattr(Lineage, hook, real)
     return op()
+
+
+def _crash_then_retry(spark, store, monkeypatch, op):
+    """Crash before the docs step — after the non-idempotent
+    blocks/terms steps are lineage-DONE, before docs and the meta
+    write — then retry clean."""
+    return _crash_at(monkeypatch, "start", "docs", op)
 
 
 def test_reindex_page_crash_replay_is_exactly_once(
@@ -454,16 +466,18 @@ def test_reindex_page_different_content_retry_raises(
     different text after a crash is a foreign half-applied generation
     (blocks hold the old text's postings) — it must raise, not stitch
     the two contents into one generation."""
-    import search_engine_skillbox_spark.operators.incremental as inc
-    real = inc._update_doc_tables
+    from search_engine_skillbox_spark.plans.checkpoint import Lineage
+    real = Lineage.start
 
-    def boom(*a, **kw):
-        raise RuntimeError("synthetic crash before docs step")
+    def boom(self, build_id, partition_id, *a, **kw):
+        if partition_id == "docs" and build_id.startswith("incr-"):
+            raise RuntimeError("synthetic crash before docs step")
+        return real(self, build_id, partition_id, *a, **kw)
 
-    monkeypatch.setattr(inc, "_update_doc_tables", boom)
+    monkeypatch.setattr(Lineage, "start", boom)
     with pytest.raises(RuntimeError, match="synthetic crash"):
         reindex_page(spark, store, NEW_PAGE)
-    monkeypatch.setattr(inc, "_update_doc_tables", real)
+    monkeypatch.setattr(Lineage, "start", real)
     fresher = dict(NEW_PAGE,
                    html=b"<html><body><p>fresher crawl text</p></body></html>")
     with pytest.raises(RuntimeError, match="compact"):
@@ -484,22 +498,11 @@ META_KEYS = ("n_docs", "sum_dl", "n_dl", "n_docs_by_host",
 
 
 def _crash_after_docs(spark, store, monkeypatch, op):
-    """Crash in the ADVICE-r4 drift window: AFTER _update_doc_tables
-    commits its partition overwrites, BEFORE the meta write — the
-    replay can then no longer recompute the original doc state from
-    docs/ (old ≡ new)."""
-    import search_engine_skillbox_spark.operators.incremental as inc
-    real = inc._update_doc_tables
-
-    def late_boom(*a, **kw):
-        real(*a, **kw)
-        raise RuntimeError("synthetic crash after docs overwrite")
-
-    monkeypatch.setattr(inc, "_update_doc_tables", late_boom)
-    with pytest.raises(RuntimeError, match="synthetic crash"):
-        op()
-    monkeypatch.setattr(inc, "_update_doc_tables", real)
-    return op()
+    """Crash in the ADVICE-r4 drift window: AFTER the docs step commits
+    its partition overwrites, BEFORE the meta write — the replay can
+    then no longer recompute the original doc state from docs/
+    (old ≡ new, or a deleted row gone)."""
+    return _crash_at(monkeypatch, "done", "docs", op)
 
 
 def test_reindex_crash_after_docs_meta_exact(
@@ -550,22 +553,11 @@ def test_reindex_batch_crash_after_docs_meta_exact(
     meta deltas exact even though old_posts now reads the new rows."""
     from search_engine_skillbox_spark.operators.incremental import (
         check_consistency, reindex_batch)
-    from search_engine_skillbox_spark.plans.checkpoint import Lineage
     from search_engine_skillbox_spark.sources import corpus as C
 
     batch = C.pages_df(spark, 20, seed=7, partitions=1)
-    real_done = Lineage.done
-
-    def boom_done(self, build_id, pid, *a, **kw):
-        if pid == "doclens" and build_id.startswith("incr-"):
-            raise RuntimeError("synthetic crash after docs step")
-        return real_done(self, build_id, pid, *a, **kw)
-
-    monkeypatch.setattr(Lineage, "done", boom_done)
-    with pytest.raises(RuntimeError, match="synthetic crash"):
-        reindex_batch(spark, store, batch)
-    monkeypatch.setattr(Lineage, "done", real_done)
-    reindex_batch(spark, store, batch)
+    _crash_at(monkeypatch, "done", "doclens",
+              lambda: reindex_batch(spark, store, batch))
 
     twin = mk_store("inc_twin_meta_batch")
     reindex_batch(spark, twin, C.pages_df(spark, 20, seed=7, partitions=1))
@@ -575,3 +567,164 @@ def test_reindex_batch_crash_after_docs_meta_exact(
     assert _live_flat(spark, store) == _live_flat(spark, twin)
     rep = check_consistency(spark, store)
     assert rep["consistent"], rep
+
+
+def _pages_frame(spark, pages):
+    return spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+         for p in pages],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+
+
+def _docs_rows(spark, st):
+    return {tuple(r) for r in st.docs(spark).select(
+        "doc_id", "url", "url_norm", "host", "path", "text", "lang",
+        "warc_ts", "host_bucket", "doc_bucket").collect()}
+
+
+def test_write_split_does_not_change_the_store(spark, mk_store):
+    """Aim 3: results do not depend on how a write is split. N pages
+    through reindex_page one at a time, then a delete_page, give the
+    same store as one reindex_batch of those pages followed by the same
+    delete_page."""
+    from search_engine_skillbox_spark.operators.incremental import (
+        reindex_batch)
+    other = dict(NEW_PAGE, url="https://beta.test/page/9",
+                 html=b"<html><body><p>beta zanzibar rewritten</p>"
+                      b"</body></html>")
+    batch = [NEW_PAGE, BRAND_NEW, other]
+    one, many = mk_store("split_one"), mk_store("split_batch")
+    for p in batch:
+        reindex_page(spark, one, p)
+    reindex_batch(spark, many, _pages_frame(spark, batch))
+    for st in (one, many):
+        assert delete_page(spark, st, BRAND_NEW["url"])["deleted"]
+    assert _live_flat(spark, one) == _live_flat(spark, many)
+    assert _terms_map(spark, one) == _terms_map(spark, many)
+    m1, m2 = one.meta(), many.meta()
+    for k in META_KEYS:
+        assert m1[k] == m2[k], k
+    assert _docs_rows(spark, one) == _docs_rows(spark, many)
+
+
+def _parquet_files(d):
+    import os
+    return sorted(f for f in os.listdir(d)
+                  if f.endswith(".parquet") and not f.startswith("."))
+
+
+def test_writes_keep_one_file_per_touched_partition(spark, store):
+    """Each write rewrites a touched docs/ and doclens/ partition as ONE
+    file (a union of kept and new rows would add files on every write),
+    and appends at most one blocks/ file per touched bucket."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from search_engine_skillbox_spark.operators.incremental import (
+        reindex_batch)
+    from search_engine_skillbox_spark.sources import corpus as C
+    from pyspark.sql import functions as F
+    pages = C.pages_df(spark, 30, seed=7, partitions=2)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    reindex_batch(spark, store, pages.where(half == 0))
+    reindex_batch(spark, store, pages.where(half == 1))
+    for table in ("docs", "doclens"):
+        parts = [d for d in glob.glob(
+            os.path.join(store.path, table, "**", "doc_bucket=*"),
+            recursive=True)]
+        assert parts, table
+        for d in parts:
+            assert len(_parquet_files(d)) == 1, d
+    for g in (1, 2):
+        for d in glob.glob(os.path.join(store.path, "blocks", "bucket=*")):
+            with_g = [f for f in _parquet_files(d) if g in set(
+                pq.read_table(os.path.join(d, f), columns=["gen"])
+                .column("gen").to_pylist())]
+            assert len(with_g) <= 1, (d, g, with_g)
+
+
+@pytest.fixture(scope="module")
+def bucketed_store_dir(spark, prepared, tmp_path_factory):
+    """A store with one doc bucket per doc (DOCS_PER_BUCKET = 1), so
+    the batch docs' partitions are a small share of docs/ and some
+    partitions hold a single doc."""
+    from search_engine_skillbox_spark.operators import index_store as IS
+    d = str(tmp_path_factory.mktemp("bucketed") / "idx")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IS, "DOCS_PER_BUCKET", 1)
+        st = IS.IndexStore(d, n_buckets=8, salt_threshold=50)
+        st.build(spark, prepared, build_id="base", checkpoint_groups=1)
+    assert st.n_doc_buckets > 16
+    st.close()
+    return d
+
+
+def test_old_doc_lookup_reads_only_the_batch_doc_buckets(
+        spark, bucketed_store_dir, tmp_path, monkeypatch):
+    """The old-doc lookup, and the docs/doclens merges, read only the
+    batch docs' partitions — not every docs partition."""
+    import os
+
+    from search_engine_skillbox_spark.functions.hashing import doc_bucket
+    from search_engine_skillbox_spark.operators import incremental as inc
+    from tests.conftest import clone_store
+    st = clone_store(bucketed_store_dir, str(tmp_path / "idx"))
+    real = inc._read_parts
+    reads = []
+
+    def spy(spark_, table, parts, part_cols=()):
+        df = real(spark_, table, parts, part_cols)
+        reads.append((os.path.basename(table), df))
+        return df
+
+    monkeypatch.setattr(inc, "_read_parts", spy)
+    res = reindex_page(spark, st, NEW_PAGE)
+    assert res["old_existed"]
+    db = f"doc_bucket={doc_bucket(res['doc_id'], st.n_doc_buckets)}/"
+    doc_reads = [df for t, df in reads if t in ("docs", "doclens")]
+    assert len(doc_reads) == 3  # the old-doc lookup, docs, doclens
+    for df in doc_reads:
+        files = df.inputFiles()
+        assert files and all(db in f for f in files), files
+
+
+def test_delete_removes_an_emptied_partition(spark, bucketed_store_dir,
+                                             tmp_path):
+    """Deleting the only doc of a docs/ and doclens/ partition removes
+    the partition dir (dynamic overwrite cannot clear it); a re-add
+    restores the row and the store stays consistent."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from search_engine_skillbox_spark.operators.incremental import (
+        check_consistency)
+    from tests.conftest import clone_store
+    st = clone_store(bucketed_store_dir, str(tmp_path / "idx"))
+    # a doc alone in its docs/ partition AND in its doclens/ partition
+    docs_of, dl_of = {}, {}
+    for r in st.docs(spark).select("doc_id", "host_bucket",
+                                   "doc_bucket").collect():
+        docs_of.setdefault((r["host_bucket"], r["doc_bucket"]),
+                           []).append(r["doc_id"])
+    for r in st.doclens(spark).select("doc_id", "doc_bucket").collect():
+        dl_of.setdefault(r["doc_bucket"], []).append(r["doc_id"])
+    (hb, db) = next(k for k, ids in sorted(docs_of.items())
+                    if len(ids) == 1 and dl_of.get(k[1]) == ids)
+    row = (st.docs(spark).filter(F.col("doc_id") == docs_of[(hb, db)][0])
+           .select("doc_id", "url", "warc_ts", "text", "lang").first())
+    docs_dir = os.path.join(st.path, "docs", f"host_bucket={hb}",
+                            f"doc_bucket={db}")
+    dl_dir = os.path.join(st.path, "doclens", f"doc_bucket={db}")
+    assert delete_page(spark, st, row["url"])["deleted"]
+    assert not os.path.exists(docs_dir) and not os.path.exists(dl_dir)
+    assert st.docs(spark).filter(F.col("doc_id") == row["doc_id"]).count() == 0
+    assert check_consistency(spark, st)["consistent"]
+    reindex_page(spark, st, {"url": row["url"], "warc_ts": row["warc_ts"],
+                             "html": None, "text": row["text"],
+                             "lang": row["lang"]})
+    assert st.docs(spark).filter(F.col("doc_id") == row["doc_id"]).count() == 1
+    assert check_consistency(spark, st)["consistent"]
