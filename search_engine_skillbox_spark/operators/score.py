@@ -71,7 +71,7 @@ def upper_bound_bm25(max_tf: float, idf: float,
 
 # ---- the MaxScore/block-max top-k plan ----------------------------------
 # One definition of the per-query plan that both top-k executors run:
-# wand.wand_topk turns it into Column predicates, serving._serve_topk
+# wand.wand_topk turns it into Column predicates, serving.serve_topk
 # into numpy masks over block metadata.
 
 EXHAUSTIVE_POSTINGS_BUDGET = 200_000  # Σ df at or below → one full decode

@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 from ..functions.textprep import distinct_query_terms, query_words
 from ..functions.urlutils import site_name_py
+from . import serving as SV
 from .index_store import IndexStore
 from .present import build_result_url, build_snippet, build_title
-from .serving import serving_enabled, store_meta
 from .wand import site_topk, wand_topk
 
 
@@ -42,7 +42,7 @@ def search_service(spark: SparkSession, store: IndexStore, query: str,
     q_terms = distinct_query_terms(query)
     if not q_terms:
         return {"result": True, "count": 0, "data": []}
-    meta = store_meta(store)
+    meta = SV.store_meta(store)
     site = site.strip() if site else None
     if site:
         n_scope = int(meta.get("n_docs_by_host", {}).get(site, 0))
@@ -55,61 +55,50 @@ def search_service(spark: SparkSession, store: IndexStore, query: str,
     offset = max(0, offset)
     k = offset + limit
 
-    serving_on = serving_enabled()
     has_tomb = store.has_tombstones()
 
-    # top-k: serving tier FIRST, called directly — wand_topk/site_topk
-    # would wrap the served rows back into a DataFrame whose collect()
-    # schedules one Spark job (a local-rows createDataFrame is RDD-
-    # backed in Spark 4), which was the only job left in an otherwise
-    # driver-side request. None → the distributed plan.
-    rows = None
-    if serving_on and not has_tomb:
-        if site:
-            from .serving import serve_site_topk
-            rows = serve_site_topk(store, q_terms, k, site, mode)
-        else:
-            from .serving import serve_topk
-            rows = serve_topk(store, q_terms, k, mode)
-        if rows is not None:
-            rows = [{"doc_id": int(d), "score": float(s)}
-                    for d, s in rows]
-    if rows is None:
-        if site:
-            topk = site_topk(spark, store, q_terms, k, site, mode,
-                             serving=False)
-        else:
-            topk = wand_topk(spark, store, q_terms, k, mode,
-                             serving=False)
-        rows = topk.collect()
+    # Every stage tries the serving tier first (operators/serving.py,
+    # looked up on the module at call time, so perfbench's wrapped
+    # entries are the ones called): each entry
+    # checks its own preconditions (serving enabled, a tombstone-free
+    # store for the posting readers) and returns None on any decline,
+    # which sends that stage to its Spark fallback below.
+    # top-k: served rows are used directly — wand_topk/site_topk would
+    # wrap them back into a DataFrame whose collect() schedules one
+    # Spark job (a local-rows createDataFrame is RDD-backed in Spark 4).
+    if site:
+        rows = SV.serve_site_topk(store, q_terms, k, site, mode)
+    else:
+        rows = SV.serve_topk(store, q_terms, k, mode)
+    if rows is not None:
+        rows = [{"doc_id": int(d), "score": float(s)} for d, s in rows]
+    elif site:
+        rows = site_topk(spark, store, q_terms, k, site, mode,
+                         serving=False).collect()
+    else:
+        rows = wand_topk(spark, store, q_terms, k, mode,
+                         serving=False).collect()
 
     # total match count (reference returns total matches, not page size):
     # single term → df straight from the terms dictionary (zero decode);
     # multi-term → count-distinct over doc_ids only (tf bytes never read)
-    # dictionary rows: driver-side pyarrow lookup when serving is on
-    # (correct regardless of tombstones — terms/ is maintained exactly
-    # by every mutation), Spark bucket-pruned scan otherwise. With the
-    # serving top-k, count and hydrate paths this makes the whole
-    # tombstone-free search_service a ZERO-Spark-job request.
-    trows = None
-    if serving_on:
-        from .serving import terms_rows_arrow
-        tmap = terms_rows_arrow(store, q_terms)
-        if tmap is not None:
-            trows = [tmap[t] for t in q_terms if tmap[t] is not None]
-    if trows is None:
+    # dictionary rows: driver-side pyarrow lookup (correct regardless
+    # of tombstones — terms/ is maintained exactly by every mutation),
+    # Spark bucket-pruned scan on a decline. With the serving top-k,
+    # count and hydrate paths the whole tombstone-free search_service
+    # is a ZERO-Spark-job request.
+    tmap = SV.terms_rows_arrow(store, q_terms)
+    if tmap is not None:
+        trows = [tmap[t] for t in q_terms if tmap[t] is not None]
+    else:
         trows = store.query_terms_rows(spark, q_terms)
-    # serving tier: the total-match count is a bounded distinct-union
-    # over the query terms' doc_ids — answered driver-side on
-    # tombstone-free stores (operators/serving.py), Spark fallback on
-    # any bound breach. The single-term no-site total stays the free
-    # dictionary df (no decode at all).
+    # the total-match count is a bounded distinct-union over the query
+    # terms' doc_ids, answered by serve_match_count. The single-term
+    # no-site total stays the free dictionary df (no decode at all).
     total = None
-    needs_count_job = bool(site) or len(q_terms) > 1 or has_tomb
-    if trows and needs_count_job and not has_tomb and serving_on:
-        from .serving import serve_match_count
-        total = serve_match_count(store, q_terms, site or None)
-    if total is None:  # distributed fallback (serving declined / off)
+    if trows and (site or len(q_terms) > 1 or has_tomb):
+        total = SV.serve_match_count(store, q_terms, site or None)
+    if total is None:  # distributed fallback (serving declined)
         if not trows:
             total = 0
         elif site:
@@ -145,10 +134,7 @@ def search_service(spark: SparkSession, store: IndexStore, query: str,
     # zero Spark jobs, zero corpus-size dependence). Title/snippet/url
     # are pure Python over the k rows (present.py), identical to the
     # pandas-UDF fallback by construction (same functions).
-    hyd_rows = None
-    if serving_on:
-        from .serving import serve_doc_rows
-        hyd_rows = serve_doc_rows(store, ids)
+    hyd_rows = SV.serve_doc_rows(store, ids)
     if hyd_rows is None:
         # distributed fallback — doc_bucket partition pruning computed
         # driver-side, so even the Spark plan never scans more than the
@@ -198,7 +184,7 @@ def statistics_service(spark: SparkSession, store: IndexStore) -> dict:
     import os as _os
 
     from ..plans.checkpoint import Lineage
-    meta = store_meta(store)
+    meta = SV.store_meta(store)
     life = Lineage(_os.path.join(store.path, "lineage.jsonl")).summary()
     # dashboard pages = ALL saved pages (the reference counts page rows,
     # including zero-term docs that never enter the index)

@@ -21,13 +21,24 @@ tie-breaks — pinned by equality tests against both the plain scorer
 and the distributed WAND path (tests/test_index_store.py).
 
 Scale discipline (what keeps this 100 TB-safe):
-  * gated OFF for tombstoned stores (deletes must be observed by every
-    read; the distributed path joins tombstones).
-  * every read is bounded BEFORE it happens: per-term block metadata
-    ≤ META_ROWS_CAP rows, decoded postings ≤ DECODE_CAP, candidate
-    lists ≤ lookup_cand_cap; any violation returns None and the caller
-    runs the distributed path. Bounds are computed from the terms
-    dictionary (df, n_salt) and block metadata (`n`), never guessed.
+  * one work budget per public call: every read charges WORK_BUDGET
+    for the elements it materializes BEFORE it happens — terms-file
+    rows, block-metadata row groups, postings to decode (counted from
+    the metadata `n`, never guessed), host-slice and hydrate row
+    groups, hydrate ids. A memo hit reads nothing and charges nothing.
+  * one serve cache per store: the terms, block-metadata, host-slice
+    and docs-probe memos share SERVE_CACHE_BYTES (each entry charged
+    its bytes), reset wholesale when an insert would pass it. Open
+    file handles are bounded separately (FILE_HANDLE_CAP: fds, not
+    bytes).
+  * one way to decline: any depth raises Decline(reason). Each public
+    entry (terms_rows_arrow, serve_topk, serve_site_topk,
+    serve_match_count, serve_doc_rows) catches it once, counts
+    (entry, reason) in declines(store) and returns None; the caller
+    then runs the distributed path. The entries check their own
+    preconditions: serving_enabled(), and a tombstone-free store for
+    the posting readers (deletes must be observed by every read; the
+    distributed path joins tombstones).
   * parquet row-group statistics do the block-skipping: bucket files
     are (term, tier, bound)-sorted with ~4 MB row groups at build time
     (index_store.py), so a term's metadata is a few footer-pruned
@@ -37,7 +48,9 @@ Scale discipline (what keeps this 100 TB-safe):
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
 import threading
 import time
 from contextlib import contextmanager, nullcontext
@@ -48,45 +61,61 @@ from . import score as S
 from .codec import decode_blocks_batch_threaded
 from .index_store import IndexStore
 
-# Hard read bounds for the serving path (per query). Exceeding any of
-# them returns None → distributed WAND. ~2M decoded postings is ≈50 MB
-# of int64 numpy — an index-node-sized working set, not a driver OOM.
-META_ROWS_CAP = 2_000_000
-DECODE_CAP = 2_000_000
-# distinct terms memoized in the block-metadata cache before a
-# wholesale reset (bounds driver memory in a long-lived service)
-META_MEMO_TERMS = 10_000
-# same policy for the terms-dictionary memo (small rows — entry count
-# is the right bound) and the per-host doc-id memo (arrays up to
-# SITE_SLICE_CAP int64 each — bound TOTAL cached elements, not entries)
-TERMS_MEMO_TERMS = 50_000
-HOSTDOCS_MEMO_ELEMS = 16_000_000  # ≈128 MB of int64 across all hosts
-# open ParquetFile handles memoized across queries before a wholesale
-# close-and-reset (a long-lived service over a many-bucket store must
-# not accumulate fds up to the process limit)
+# elements one public call may materialize across all its reads. The
+# largest single-phase bound it replaces was the site decode's (~8M
+# postings ≈ 160 MB of transient numpy): an index-node-sized working
+# set, not a driver OOM.
+WORK_BUDGET = 8_000_000
+# bytes held by the serve cache's memos (per store), at least the sum
+# of the two 16M-element int64 memos it replaced (host slices, docs
+# probes: 2 × 128 MB) plus room for block metadata and terms rows
+SERVE_CACHE_BYTES = 512 * 1024 * 1024
+# open ParquetFile handles memoized across queries; past it every
+# handle no active borrower holds is closed (a long-lived service over
+# a many-bucket store must not accumulate fds up to the process limit)
 FILE_HANDLE_CAP = 256
-# terms-dictionary bucket files larger than this are not scanned
-# driver-side (the Spark lookup bucket-prunes and pushes isin instead)
-TERMS_BUCKET_ROWS_CAP = 5_000_000
-# docs/ host-bucket slices larger than this are left to the
-# distributed site path (partition-pruned Spark scan)
-SITE_SLICE_CAP = 4_000_000
-# site queries get a larger decode budget than the global path: when a
-# host is a large fraction of the corpus (df comparable to |site|, so
-# the point-lookup strategy doesn't apply), the EXACT plan is a full
-# decode + isin against the host slice — still a bounded, sequential
-# driver read (~8M postings ≈ 160 MB transient numpy), and ~5-10×
-# faster than the distributed fallback whose cost is per-job scheduling
-SITE_DECODE_CAP = 8_000_000
 # threads overlapping row-group reads in a full-list decode (pyarrow
 # drops the GIL for IO/decompression; varint decode stays sequential)
 DECODE_READ_THREADS = 4
 # don't open an ad-hoc shard handle for fewer row groups than this —
 # a footer re-parse must be amortized over real read work
 MIN_SPANS_PER_SHARD = 2
+# thread the membership test past this many probe values: searchsorted
+# releases the GIL, and the binary searches are cache-miss-bound, so
+# value-chunked threads scale near-linearly (microbenched 4M probes vs
+# a 1M-id host slice: 1 thread 1.7 s, 4 → 0.41, 8 → 0.21, min-of-5)
+MEMBER_THREAD_MIN = 500_000
+# a site-query term takes the point-lookup path once its global posting
+# list is this many times bigger than the host's doc set (a lookup
+# touches ~1 block per host doc and tier)
+SITE_LOOKUP_FACTOR = 64
 
 META_COLS = ["term", "salt", "tier", "gen", "n", "max_tf",
              "first_doc", "last_doc", "max_imp"]
+TERM_COLS = ["term", "df", "cf", "max_tf", "n_salt"]
+
+
+class Decline(Exception):
+    """The serving tier will not answer this call; `reason` says why:
+
+      work_budget   a read would pass the call's WORK_BUDGET
+      cache_budget  one memo entry alone would pass SERVE_CACHE_BYTES
+      layout        a store file predates what serving reads (a
+                    pre-format-6 doclens file without `host`)
+      exactness     the pruned plan cannot prove its answer exact: a
+                    zero-idf big list, pathological candidate volume,
+                    or a below-k / zero-score k-th row
+      tombstones    the store holds deletes the point reads don't mask
+      disabled      SPARK_GRAFT_NO_SERVING=1"""
+
+    REASONS = ("work_budget", "cache_budget", "layout", "exactness",
+               "tombstones", "disabled")
+
+    def __init__(self, reason: str):
+        if reason not in self.REASONS:
+            raise ValueError(f"unknown decline reason {reason!r}")
+        super().__init__(reason)
+        self.reason = reason
 
 
 def serving_enabled() -> bool:
@@ -96,19 +125,12 @@ def serving_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_NO_SERVING") != "1"
 
 
-def _scache(store: IndexStore) -> dict:
-    c = getattr(store, "_serve_cache", None)
-    if c is None:
-        c = store._serve_cache = {}
-    return c
-
-
 _SLOCK_INIT = threading.Lock()  # guards first-time _serve_lock creation
 
 
 def _slock(store: IndexStore) -> threading.RLock:
-    """One lock per IndexStore guarding the file-handle memo. Lives on
-    the store OBJECT (not inside _serve_cache, which invalidate_reads
+    """One lock per IndexStore guarding the serve cache. Lives on the
+    store OBJECT (not inside _serve_cache, which invalidate_reads
     replaces wholesale) so concurrent serves always agree on it.
     Creation is double-checked under a module lock — a bare
     getattr→assign would let two first-callers mint DIFFERENT locks
@@ -120,6 +142,136 @@ def _slock(store: IndexStore) -> threading.RLock:
             if lk is None:
                 lk = store._serve_lock = threading.RLock()
     return lk
+
+
+def _scache(store: IndexStore) -> dict:
+    """The store's serve cache: `files` (relpath → handles), `memo`
+    ((kind, key) → value, `memo_bytes` of them) and `meta_json`.
+    invalidate_reads resets it to {}, which the next call replaces."""
+    c = getattr(store, "_serve_cache", None)
+    if not c:
+        with _slock(store):
+            c = getattr(store, "_serve_cache", None)
+            if not c:
+                c = store._serve_cache = {"files": {}, "memo": {},
+                                          "memo_bytes": 0}
+    return c
+
+
+_MISS = object()
+
+
+def _nbytes(v) -> int:
+    """Bytes a memo entry holds: nbytes for arrays, the interpreter's
+    object sizes for rows, dicts and absent markers."""
+    if isinstance(v, np.ndarray):
+        return v.nbytes
+    if isinstance(v, dict):
+        return sys.getsizeof(v) + sum(_nbytes(x) for x in v.values())
+    if isinstance(v, (tuple, list)):
+        return sys.getsizeof(v) + sum(_nbytes(x) for x in v)
+    return sys.getsizeof(v)
+
+
+def _memo_get(store: IndexStore, c: dict, key):
+    with _slock(store):
+        return c["memo"].get(key, _MISS)
+
+
+def _memo_put(store: IndexStore, c: dict, key, value) -> None:
+    """Insert into cache `c` (the one the caller looked up in, so a
+    value loaded before a concurrent reset never lands in the new
+    cache). One eviction rule: an insert that would pass
+    SERVE_CACHE_BYTES first clears the memo wholesale (reloads are
+    footer-pruned point reads, no LRU bookkeeping needed)."""
+    size = _nbytes(value)
+    if size > SERVE_CACHE_BYTES:
+        raise Decline("cache_budget")
+    with _slock(store):
+        memo = c["memo"]
+        if key in memo:
+            return
+        if c["memo_bytes"] + size > SERVE_CACHE_BYTES:
+            memo.clear()
+            c["memo_bytes"] = 0
+        memo[key] = value
+        c["memo_bytes"] += size
+
+
+def _memo(store: IndexStore, kind: str, key, load):
+    """The value memoized under (kind, key), or load()'s, memoized.
+    Returns the value it found or loaded — it never re-reads the memo,
+    which a concurrent insert may have reset meanwhile."""
+    c = _scache(store)
+    hit = _memo_get(store, c, (kind, key))
+    if hit is not _MISS:
+        return hit
+    value = load()
+    _memo_put(store, c, (kind, key), value)
+    return value
+
+
+_WORK = threading.local()  # .left: the current public call's budget
+
+
+def _work_left() -> int:
+    left = getattr(_WORK, "left", None)
+    return WORK_BUDGET if left is None else left
+
+
+def _charge(n: int) -> None:
+    """Charge n elements against the running public call's WORK_BUDGET,
+    before the read that materializes them. Outside a public entry (a
+    test calling a helper directly) nothing is charged."""
+    left = getattr(_WORK, "left", None)
+    if left is None:
+        return
+    left -= int(n)
+    if left < 0:
+        raise Decline("work_budget")
+    _WORK.left = left
+
+
+def _count_decline(store: IndexStore, entry: str, reason: str) -> None:
+    with _slock(store):
+        counts = getattr(store, "_serve_declines", None)
+        if counts is None:
+            counts = store._serve_declines = {}
+        counts[(entry, reason)] = counts.get((entry, reason), 0) + 1
+
+
+def declines(store: IndexStore) -> dict[tuple[str, str], int]:
+    """{(entry, reason): count} of every call the serving tier declined
+    on this store object (kept across invalidate_reads)."""
+    with _slock(store):
+        return dict(getattr(store, "_serve_declines", {}))
+
+
+def _entry(tombstone_free: bool):
+    """Decorator of the public serving entries: checks the entry's
+    preconditions (serving enabled; a tombstone-free store when
+    `tombstone_free`), runs the body under borrow_files and a fresh
+    WORK_BUDGET, and turns a Decline raised at any depth into a counted
+    None."""
+    def deco(body):
+        @functools.wraps(body)
+        def entry(store: IndexStore, *args, **kwargs):
+            prev = getattr(_WORK, "left", None)
+            try:
+                if not serving_enabled():
+                    raise Decline("disabled")
+                if tombstone_free and store.has_tombstones():
+                    raise Decline("tombstones")
+                _WORK.left = WORK_BUDGET
+                with borrow_files(store):
+                    return body(store, *args, **kwargs)
+            except Decline as d:
+                _count_decline(store, body.__name__, d.reason)
+                return None
+            finally:
+                _WORK.left = prev
+        return entry
+    return deco
 
 
 def _read(pf, columns, rg: int | list[int] | None = None):
@@ -174,22 +326,16 @@ def borrow_files(store: IndexStore):
     (relpaths) it has touched; a FILE_HANDLE_CAP breach evicts and
     closes ONLY entries no active borrower holds — a concurrent serve's
     handles stay open (reads on a closed handle raise), while unheld
-    entries are reclaimed immediately. Unlike the round-4/5 design
-    (defer the WHOLESALE close until a single-borrower moment — under
-    sustained concurrent serving the memo could exceed the cap
-    indefinitely, ADVICE r5), the memo now exceeds FILE_HANDLE_CAP only
-    by entries actively referenced right now, which is the correct
-    bound: those fds cannot be closed without breaking an in-flight
-    read. Every serving entry point (including terms_rows_arrow) wraps
-    itself in this guard, so single-threaded use costs one lock
-    acquisition and nothing else.
+    entries are reclaimed immediately. So the memo exceeds
+    FILE_HANDLE_CAP only by entries actively referenced right now:
+    those fds cannot be closed without breaking an in-flight read.
+    Every public entry runs under this guard (_entry).
 
     The borrow registry lives on the store OBJECT (like the lock), NOT
     inside _serve_cache: invalidate_reads swaps the cache dict
     wholesale, and a registry kept there would lose borrowers
-    registered before the swap (a breach after the swap would then
-    close handles a pre-swap borrower still reads). Nested borrows on
-    one thread share a depth-counted entry."""
+    registered before the swap. Nested borrows on one thread share a
+    depth-counted entry."""
     lk = _slock(store)
     tid = threading.get_ident()
     with lk:
@@ -209,26 +355,19 @@ def borrow_files(store: IndexStore):
                 store._serve_borrows[tid] = (depth - 1, touched)
 
 
-def _close_files_locked(store: IndexStore) -> None:
-    cache = getattr(store, "_serve_cache", None)
-    if not cache:
-        return
-    for files in cache.get("files", {}).values():
-        for pf in files:
-            try:
-                pf.close()
-            except Exception:  # double-close / already-invalid handles
-                pass
-    cache["files"] = {}
-
-
 def close_files(store: IndexStore) -> None:
     """Close every memoized ParquetFile handle (fd lifecycle — a
     long-lived service must bound open descriptors). Called by
     IndexStore.close() and by invalidate_reads() before the serve
     cache is dropped; safe to call repeatedly."""
     with _slock(store):
-        _close_files_locked(store)
+        files = _scache(store)["files"]
+        for pf in (pf for fs in files.values() for pf in fs):
+            try:
+                pf.close()
+            except Exception:  # double-close / already-invalid handles
+                pass
+        files.clear()
 
 
 def _close_unheld_locked(store: IndexStore, files_memo: dict) -> None:
@@ -254,7 +393,7 @@ def _drop_serve_cache(store: IndexStore) -> None:
     with _slock(store):
         old = _scache(store)
         store._serve_cache = {}
-        _close_unheld_locked(store, old.get("files", {}))
+        _close_unheld_locked(store, old["files"])
 
 
 def _dir_files(store: IndexStore, relpath: str):
@@ -269,8 +408,7 @@ def _dir_files(store: IndexStore, relpath: str):
     open."""
     import pyarrow.parquet as pq
     with _slock(store):
-        c = _scache(store)
-        cache = c.setdefault("files", {})
+        cache = _scache(store)["files"]
         if relpath not in cache:
             if sum(len(v) for v in cache.values()) >= FILE_HANDLE_CAP:
                 _close_unheld_locked(store, cache)
@@ -301,76 +439,61 @@ def _bucket_files(store: IndexStore, table: str, bucket: int):
     return _dir_files(store, f"{table}/bucket={bucket}")
 
 
+@_entry(tombstone_free=False)
 def terms_rows_arrow(store: IndexStore, q_terms: list[str]):
-    with borrow_files(store):
-        return _terms_rows_arrow(store, q_terms)
+    """{term: row-dict|None} from the terms dictionary with no Spark
+    job, or None on a decline (→ the Spark lookup). Correct on
+    tombstoned stores: terms/ is maintained exactly by every mutation."""
+    return _terms_rows(store, q_terms)
 
 
-def _terms_rows_arrow(store: IndexStore, q_terms: list[str]):
-    """Dictionary lookup without a Spark job: read the query terms'
-    bucket files of terms/ via pyarrow (same bucket pruning as
-    query_terms_rows). Returns {term: row-dict|None} or None when a
-    bucket file exceeds TERMS_BUCKET_ROWS_CAP (→ use the Spark path).
-    Memoized per term, invalidated with the store's read caches."""
+def _terms_rows(store: IndexStore, q_terms: list[str]) -> dict:
+    """Dictionary lookup: read the query terms' bucket files of terms/
+    via pyarrow (same bucket pruning as query_terms_rows). Memoized per
+    term in the serve cache, an absent term as None."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from ..functions.hashing import term_bucket
-    cache = _scache(store).setdefault("terms", {})
-    if len(cache) >= TERMS_MEMO_TERMS:
-        # same wholesale-reset policy as the _term_meta memo: bounds a
-        # long-lived service's driver memory over many distinct terms
-        cache.clear()
-    missing = sorted({t for t in q_terms if t not in cache})
-    if missing:
-        by_bucket: dict[int, list[str]] = {}
-        for t in missing:
+    c = _scache(store)
+    out: dict = {}
+    by_bucket: dict[int, list[str]] = {}
+    for t in sorted(set(q_terms)):
+        row = _memo_get(store, c, ("terms", t))
+        if row is _MISS:
             by_bucket.setdefault(term_bucket(t, store.n_buckets), []).append(t)
-        for b, terms in by_bucket.items():
-            want = set(terms)
-            for pf in _bucket_files(store, "terms", b):
-                if pf.metadata.num_rows > TERMS_BUCKET_ROWS_CAP:
-                    return None
-                tbl = _read(pf, ["term", "df", "cf", "max_tf", "n_salt"])
-                mask = pc.is_in(tbl.column("term"),
-                                value_set=pa.array(terms))
-                hit = tbl.filter(mask)
-                for i in range(hit.num_rows):
-                    t = hit.column("term")[i].as_py()
-                    if t in want:
-                        cache[t] = {
-                            "term": t,
-                            "df": hit.column("df")[i].as_py(),
-                            "cf": hit.column("cf")[i].as_py(),
-                            "max_tf": hit.column("max_tf")[i].as_py(),
-                            "n_salt": hit.column("n_salt")[i].as_py(),
-                        }
-            for t in terms:
-                cache.setdefault(t, None)
-    return {t: cache[t] for t in q_terms}
+        else:
+            out[t] = row
+    for b, terms in by_bucket.items():
+        found = {}
+        for pf in _bucket_files(store, "terms", b):
+            _charge(pf.metadata.num_rows)
+            tbl = _read(pf, TERM_COLS)
+            hit = tbl.filter(pc.is_in(tbl.column("term"),
+                                      value_set=pa.array(terms)))
+            found.update((r["term"], r) for r in hit.to_pylist())
+        for t in terms:
+            out[t] = found.get(t)
+            _memo_put(store, c, ("terms", t), out[t])
+    return {t: out[t] for t in q_terms}
 
 
-def _term_meta(store: IndexStore, term: str):
+def _term_meta(store: IndexStore, term: str) -> dict:
     """Block metadata of ONE term as numpy arrays + row locators,
-    reading only row groups whose footer term-range admits the term
+    memoized in the serve cache."""
+    return _memo(store, "meta", term, lambda: _load_term_meta(store, term))
+
+
+def _load_term_meta(store: IndexStore, term: str) -> dict:
+    """Reads only row groups whose footer term-range admits the term
     (bucket files are term-sorted — typically 1-2 row groups for a
-    normal term). Returns None when the term's metadata exceeds
-    META_ROWS_CAP rows. Memoized per term."""
+    normal term), each charged to the work budget before it is read."""
     import pyarrow.compute as pc
 
     from ..functions.hashing import term_bucket
-    cache = _scache(store).setdefault("meta", {})
-    if term in cache:
-        return cache[term]
-    if len(cache) >= META_MEMO_TERMS:
-        # bound driver memory in a long-lived service process: the memo
-        # grows with DISTINCT queried terms — reset wholesale (reloads
-        # are cheap footer-pruned reads, no LRU bookkeeping needed)
-        cache.clear()
     b = term_bucket(term, store.n_buckets)
     cols: dict[str, list] = {c: [] for c in META_COLS if c != "term"}
     loc_f, loc_rg, loc_row = [], [], []
-    total = 0
     files = _bucket_files(store, "blocks", b)
     for fi, pf in enumerate(files):
         md = pf.metadata
@@ -381,32 +504,27 @@ def _term_meta(store: IndexStore, term: str):
             if (st is not None and st.has_min_max
                     and not (st.min <= term <= st.max)):
                 continue
+            _charge(md.row_group(rg).num_rows)
             tbl = _read(pf, META_COLS, rg)
             idxs = np.flatnonzero(
                 pc.equal(tbl.column("term"), term).to_numpy(
                     zero_copy_only=False))
             if idxs.size == 0:
                 continue
-            total += int(idxs.size)
-            if total > META_ROWS_CAP:
-                cache[term] = None
-                return None
             for c in cols:
                 cache_col = tbl.column(c).take(idxs)
                 cols[c].append(cache_col.to_numpy(zero_copy_only=False))
             loc_f.append(np.full(idxs.size, fi, np.int32))
             loc_rg.append(np.full(idxs.size, rg, np.int32))
             loc_row.append(idxs.astype(np.int64))
-    if total == 0:
+    if not loc_f:
         out = {c: np.empty(0) for c in cols}
         out.update(fi=np.empty(0, np.int32), rg=np.empty(0, np.int32),
                    row=np.empty(0, np.int64), bucket=b)
-        cache[term] = out
         return out
     out = {c: np.concatenate(cols[c]) for c in cols}
     out.update(fi=np.concatenate(loc_f), rg=np.concatenate(loc_rg),
                row=np.concatenate(loc_row), bucket=b)
-    cache[term] = out
     return out
 
 
@@ -415,12 +533,15 @@ def _decode_selected(store: IndexStore, metas: list[tuple[dict, np.ndarray]],
     """Decode the selected blocks' binaries. metas: [(term_meta, mask)].
     Binary columns are read per touched row group with .take(rows) —
     untouched row groups' binaries are never materialized.
-    Returns [(doc_ids, tfs, dls)] per (term_meta, mask) input.
+    Returns [(doc_ids, tfs, dls)] per (term_meta, mask) input. The
+    selected blocks' postings (metadata `n`) are charged to the work
+    budget before any binary is read.
 
     need_dls=False skips the dls column at BOTH layers (parquet binary
     read and varint decode; dls comes back None): compat scoring and
     match counts never use document lengths, and on a large-site
     full-list decode the dl stream is a third of the byte volume."""
+    _charge(sum(int(tm["n"][mask].sum()) for tm, mask in metas))
     cols = ["docs", "tfs"] + (["dls"] if need_dls else [])
     results = []
     for tm, mask in metas:
@@ -568,13 +689,6 @@ def _topk(ids: np.ndarray, scores: np.ndarray, k: int):
     return [(int(ids[i]), float(scores[i])) for i in order]
 
 
-# thread the membership test past this many probe values: searchsorted
-# releases the GIL, and the binary searches are cache-miss-bound, so
-# value-chunked threads scale near-linearly (microbenched 4M probes vs
-# a 1M-id host slice: 1 thread 1.7 s, 4 → 0.41, 8 → 0.21, min-of-5)
-MEMBER_THREAD_MIN = 500_000
-
-
 def _sorted_membership(sorted_small: np.ndarray, values: np.ndarray):
     """Boolean mask: values ∈ sorted_small. O(n log m) searchsorted
     against the already-sorted host slice instead of np.isin, which
@@ -630,12 +744,9 @@ def _lookup_postings(store: IndexStore, term: str, n_salt: int,
     """Point lookup: (doc_ids, tfs, dls) of `term` restricted to the
     sorted, unique cand_ids. Decodes only the blocks that cover a
     candidate (_covering_blocks) — ~1 block per candidate per tier,
-    whatever the term's df. Returns None when the term's metadata
-    exceeds META_ROWS_CAP rows (→ the distributed path). `stats`, when
-    given, receives blocks_decoded / postings_decoded."""
+    whatever the term's df. `stats`, when given, receives
+    blocks_decoded / postings_decoded."""
     tm = _term_meta(store, term)
-    if tm is None:
-        return None
     mask = _covering_blocks(tm, cand_ids, n_salt)
     (ids, tfs, dls), = _decode_selected(store, [(tm, mask)], need_dls)
     if stats is not None:
@@ -645,35 +756,28 @@ def _lookup_postings(store: IndexStore, term: str, n_salt: int,
     return ids[keep], tfs[keep], (dls[keep] if dls is not None else None)
 
 
-def _host_doc_ids(store: IndexStore, host: str):
+def _host_doc_ids(store: IndexStore, host: str) -> np.ndarray:
     """Sorted doc_ids of one host, read driver-side from the docs/
     host-bucket slice (only the doc_id + host columns of the
     (host_bucket, doc_bucket)-partitioned table are materialized —
     same partition pruning the distributed path pushes into Spark).
-    Returns None when the slice exceeds SITE_SLICE_CAP rows. Memoized;
-    invalidated with the store's read caches."""
+    Memoized in the serve cache."""
+    return _memo(store, "hostdocs", host,
+                 lambda: _load_host_doc_ids(store, host))
+
+
+def _load_host_doc_ids(store: IndexStore, host: str) -> np.ndarray:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from ..functions.hashing import term_bucket
-    cache = _scache(store).setdefault("hostdocs", {})
-    if host in cache:
-        return cache[host]
-    if sum(v.size for v in cache.values()
-           if v is not None) >= HOSTDOCS_MEMO_ELEMS:
-        # wholesale reset (META_MEMO policy): entries are arrays up to
-        # SITE_SLICE_CAP int64 each, so the bound is on total elements
-        cache.clear()
+    from .index_store import walk_parquet_files
     hb = term_bucket(host, store.n_host_buckets)
     base = os.path.join(store.path, "docs", f"host_bucket={hb}")
-    from .index_store import walk_parquet_files
     pfs = []
     if os.path.isdir(base):
         pfs = [pq.ParquetFile(fp) for fp in walk_parquet_files(base)]
     try:
-        if sum(pf.metadata.num_rows for pf in pfs) > SITE_SLICE_CAP:
-            cache[host] = None
-            return None
         ids = []
         for pf in pfs:
             md = pf.metadata
@@ -686,15 +790,14 @@ def _host_doc_ids(store: IndexStore, host: str):
                 if (st is not None and st.has_min_max
                         and not (st.min <= host <= st.max)):
                     continue
+                _charge(md.row_group(rg).num_rows)
                 tbl = pf.read_row_group(rg, columns=["doc_id", "host"],
                                         use_threads=False)
                 mask = pc.equal(tbl.column("host"), host)
                 ids.append(tbl.column("doc_id").filter(mask).to_numpy(
                     zero_copy_only=False).astype(np.int64))
-        out = (np.sort(np.concatenate(ids)) if ids
-               else np.empty(0, np.int64))
-        cache[host] = out
-        return out
+        return (np.sort(np.concatenate(ids)) if ids
+                else np.empty(0, np.int64))
     finally:
         for pf in pfs:  # ad-hoc handles: close immediately, never memoized
             try:
@@ -703,26 +806,16 @@ def _host_doc_ids(store: IndexStore, host: str):
                 pass
 
 
-# choose the point-lookup path for a site-query term once its global
-# posting list is this many times bigger than the host's doc set (a
-# lookup touches ~1 block ≈ BLOCK_LOOKUP_EST postings per host doc)
-SITE_LOOKUP_FACTOR = 64
-BLOCK_LOOKUP_EST = 256
-# candidate doc ids shipped into a driver-side point lookup per term
-SITE_LOOKUP_IDS_CAP = 500_000
-
-
 def _site_term_postings(store: IndexStore, term: str, trow: dict,
-                        host_ids, mode_budget: list,
-                        lookup_factor: int = SITE_LOOKUP_FACTOR,
+                        host_ids, lookup_factor: int = SITE_LOOKUP_FACTOR,
                         debug: dict | None = None,
                         need_dls: bool = True):
     """(doc_ids, tfs, dls) of `term` restricted to the host's docs,
     by the cheaper of two EXACT strategies:
 
       decode  decode the term's full posting list, then a searchsorted
-              membership test against the (sorted) host ids — right when df_global is comparable to (or
-              smaller than) the site.
+              membership test against the (sorted) host ids — right when
+              df_global is comparable to (or smaller than) the site.
       lookup  parquet point reads keyed by the HOST's doc ids
               (_lookup_postings): each host doc lives in exactly
               one gen-0 salt, so only blocks whose [first_doc,last_doc]
@@ -732,29 +825,20 @@ def _site_term_postings(store: IndexStore, term: str, trow: dict,
               (the round-3 scale-killer: site+stopword used to decode
               the stopword's full global list).
 
-    mode_budget = [remaining_decode_budget]; mutated. Returns None on a
-    budget/cap breach → the caller falls back to distributed."""
+    The lookup ships the host ids into the point reader, so it is taken
+    only while they fit the call's remaining work budget."""
     df_g = int(trow["df"])
     if (df_g > lookup_factor * host_ids.size
-            and host_ids.size <= SITE_LOOKUP_IDS_CAP):
-        est = min(df_g, BLOCK_LOOKUP_EST * host_ids.size)
-        mode_budget[0] -= est
-        if mode_budget[0] < 0:
-            return None
+            and host_ids.size <= _work_left()):
         stats: dict = {}
         got = _lookup_postings(store, term, max(1, int(trow["n_salt"])),
                                host_ids, need_dls, stats)
-        if got is not None and debug is not None:
+        if debug is not None:
             debug.setdefault("serve_site_lookup", {})[term] = {
                 "matched": int(got[0].size), "df": df_g, **stats}
         return got
-    mode_budget[0] -= df_g
-    if mode_budget[0] < 0:
-        return None
     t0 = time.monotonic()
     tm = _term_meta(store, term)
-    if tm is None:
-        return None
     t1 = time.monotonic()
     (res,) = _decode_selected(store, [(tm, np.ones(tm["fi"].size, bool))],
                               need_dls=need_dls)
@@ -772,57 +856,41 @@ def _site_term_postings(store: IndexStore, term: str, trow: dict,
     return ids[keep], tfs[keep], (dls[keep] if dls is not None else None)
 
 
+@_entry(tombstone_free=True)
 def serve_site_topk(store: IndexStore, q_terms: list[str], k: int,
                     host: str, mode: str = "compat",
                     debug: dict | None = None,
                     lookup_factor: int = SITE_LOOKUP_FACTOR):
-    with borrow_files(store):
-        return _serve_site_topk(store, q_terms, k, host, mode, debug,
-                                lookup_factor)
-
-
-def _serve_site_topk(store: IndexStore, q_terms: list[str], k: int,
-                     host: str, mode: str = "compat",
-                     debug: dict | None = None,
-                     lookup_factor: int = SITE_LOOKUP_FACTOR):
     """Driver-side twin of wand.site_topk (T9/J2): within-site df and
     N(site) recomputed exactly like the reference's site JPQL
     (IndexRepository.java:41-50) — df_site = per-term distinct doc
     count among the host's docs, N(site) from build-time meta. The
-    dimension side is the host-bucket docs slice (≤ SITE_SLICE_CAP);
-    the candidate side is gathered per term by _site_term_postings —
-    full decode for site-sized terms, HOST-KEYED point lookups for
-    stopword-scale terms, so cost is bounded by Σ min(df, ~|site|)
-    instead of Σ df. Returns [(doc_id, score)] or None → distributed
+    dimension side is the host-bucket docs slice; the candidate side is
+    gathered per term by _site_term_postings — full decode for
+    site-sized terms, HOST-KEYED point lookups for stopword-scale
+    terms, so cost is bounded by Σ min(df, ~|site|) instead of Σ df.
+    Returns [(doc_id, score)] or None on a decline → distributed
     site_topk."""
     meta = store_meta(store)
     avgdl = float(meta.get("avgdl", 0.0) or 0.0)
     n_site = int(meta.get("n_docs_by_host", {}).get(host, 0))
     if n_site <= 0:
         return []
-    tmap = terms_rows_arrow(store, q_terms)
-    if tmap is None:
-        return None
+    tmap = _terms_rows(store, q_terms)
     present = [t for t in q_terms if tmap.get(t) is not None]
     if not present:
         return []
     t_h0 = time.monotonic()
     host_ids = _host_doc_ids(store, host)
     t_hostslice = time.monotonic() - t_h0
-    if host_ids is None:
-        return None
     if host_ids.size == 0:
         return []
     idf_py = S.idf_compat_py if mode == "compat" else S.idf_bm25_py
-    budget = [SITE_DECODE_CAP]
     parts_i, parts_c = [], []
     for t in present:
-        got = _site_term_postings(store, t, tmap[t], host_ids, budget,
-                                  lookup_factor, debug,
-                                  need_dls=(mode != "compat"))
-        if got is None:
-            return None
-        ids_t, tfs_t, dls_t = got
+        ids_t, tfs_t, dls_t = _site_term_postings(
+            store, t, tmap[t], host_ids, lookup_factor, debug,
+            need_dls=(mode != "compat"))
         # within-site df: docs are unique within a term's live postings
         # (tombstone-free store), so the match count IS the distinct
         # count — the reference's countDocsByLemmaAndSite
@@ -839,20 +907,9 @@ def _serve_site_topk(store: IndexStore, q_terms: list[str], k: int,
     return _topk(uids, tot, k)
 
 
-# the count path's own (smaller) decode budget: a total-match count is
-# a single scalar per request — it must not justify a DECODE_CAP-sized
-# driver allocation the way a top-k answer does (VERDICT r3 #6)
-MATCH_COUNT_CAP = 500_000
-
-
+@_entry(tombstone_free=True)
 def serve_match_count(store: IndexStore, q_terms: list[str],
                       host: str | None = None):
-    with borrow_files(store):
-        return _serve_match_count(store, q_terms, host)
-
-
-def _serve_match_count(store: IndexStore, q_terms: list[str],
-                       host: str | None = None):
     """Driver-side twin of the service layer's total-match count
     (live_docids ∪ distinct — the reference returns TOTAL matches, not
     page size). OR semantics: distinct docs containing ANY query term,
@@ -860,80 +917,44 @@ def _serve_match_count(store: IndexStore, q_terms: list[str],
     are the dictionary df (zero decode — postings are doc-unique on a
     tombstone-free store); site-restricted counts gather per term via
     _site_term_postings (stopword terms cost ~|site| point reads, not a
-    full-list decode). Returns int or None on a bound breach
-    (decoded postings > MATCH_COUNT_CAP / slice too big) → distributed
-    count."""
-    tmap = terms_rows_arrow(store, q_terms)
-    if tmap is None:
-        return None
+    full-list decode), under the same work budget as serve_site_topk:
+    the count is a strict subset of that gather (ids only). Returns int
+    or None on a decline → distributed count."""
+    tmap = _terms_rows(store, q_terms)
     present = [t for t in q_terms if tmap.get(t) is not None]
     if not present:
         return 0
     if host is None:
         if len(present) == 1:
             return int(tmap[present[0]]["df"])
-        if sum(int(tmap[t]["df"]) for t in present) > MATCH_COUNT_CAP:
-            return None
-        metas = []
-        for t in present:
-            tm = _term_meta(store, t)
-            if tm is None:
-                return None
-            metas.append((tm, np.ones(tm["fi"].size, bool)))
+        metas = [(tm, np.ones(tm["fi"].size, bool))
+                 for tm in (_term_meta(store, t) for t in present)]
         parts = [ids for ids, _tfs, _dls in
                  _decode_selected(store, metas, need_dls=False)]
-        if not parts:
+    else:
+        host_ids = _host_doc_ids(store, host)
+        if host_ids.size == 0:
             return 0
-        return int(np.unique(np.concatenate(parts)).size)
-    host_ids = _host_doc_ids(store, host)
-    if host_ids is None:
-        return None
-    if host_ids.size == 0:
-        return 0
-    # site counts run under the SAME budget as serve_site_topk: the
-    # count is a strict subset of the topk gather (ids only), so a
-    # tighter cap here would just push mid-size sites onto the
-    # distributed fallback for no protection the topk path lacks
-    budget = [SITE_DECODE_CAP]
-    parts = []
-    for t in present:
-        got = _site_term_postings(store, t, tmap[t], host_ids, budget,
-                                  need_dls=False)
-        if got is None:
-            return None
-        parts.append(got[0])
-    if not parts:
-        return 0
+        parts = [_site_term_postings(store, t, tmap[t], host_ids,
+                                     need_dls=False)[0] for t in present]
     return int(np.unique(np.concatenate(parts)).size)
 
 
+@_entry(tombstone_free=True)
 def serve_topk(store: IndexStore, q_terms: list[str], k: int,
                mode: str = "compat",
                exhaustive_budget: int = S.EXHAUSTIVE_POSTINGS_BUDGET,
                lookup_min_df: int = S.LOOKUP_MIN_DF,
                lookup_cand_cap: int = S.LOOKUP_CAND_CAP,
                debug: dict | None = None):
-    with borrow_files(store):
-        return _serve_topk(store, q_terms, k, mode, exhaustive_budget,
-                           lookup_min_df, lookup_cand_cap, debug)
-
-
-def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
-                mode: str = "compat",
-                exhaustive_budget: int = S.EXHAUSTIVE_POSTINGS_BUDGET,
-                lookup_min_df: int = S.LOOKUP_MIN_DF,
-                lookup_cand_cap: int = S.LOOKUP_CAND_CAP,
-                debug: dict | None = None):
     """Bounded driver-side top-k. Returns [(doc_id, score)] (possibly
-    empty) or None when any read bound would be exceeded / the result
-    needs the zero-score tier — the caller then runs distributed WAND.
-    Caller guarantees the store has no tombstones."""
+    empty) or None on a decline — a read past the work budget, or a
+    result the pruned plan cannot prove exact — and the caller then
+    runs distributed WAND."""
     meta = store_meta(store)
     avgdl = float(meta.get("avgdl", 0.0) or 0.0)
 
-    tmap = terms_rows_arrow(store, q_terms)
-    if tmap is None:
-        return None
+    tmap = _terms_rows(store, q_terms)
     present = [t for t in q_terms if tmap.get(t) is not None]
     if not present:
         return []
@@ -947,15 +968,10 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         if debug is not None:
             debug[f"serve_{name}"] = extra or True
 
-    small = plan.sum_df <= min(exhaustive_budget, DECODE_CAP)
+    small = plan.sum_df <= min(exhaustive_budget, _work_left())
     if not small and plan.zero_bound:
-        return None  # zero-idf over a big list → distributed exhaustive
-    tmeta: dict[str, dict] = {}
-    for t in present:
-        tm = _term_meta(store, t)
-        if tm is None:
-            return None
-        tmeta[t] = tm
+        raise Decline("exactness")  # zero-idf over a big list
+    tmeta = {t: _term_meta(store, t) for t in present}
 
     # ---- small: exhaustive decode of every query-term list (bounded by
     # Σ df ≤ budget; includes score-0 docs — the reference's OR
@@ -972,16 +988,12 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         return _topk(uids, tot, k)
 
     # ---- seed: hot tier (tier = 0) of t*; bounded a priori by
-    # n_salt·TIER_SIZE postings, checked against DECODE_CAP via the
-    # metadata `n` before any binary is read
+    # n_salt·TIER_SIZE postings, charged via the metadata `n` before
+    # any binary is read
     t_star = plan.t_star
     ts = tmeta[t_star]
-    seed_mask = ts["tier"] == 0
-    budget_left = DECODE_CAP - int(ts["n"][seed_mask].sum())
-    if budget_left < 0:
-        return None
     (seed_ids, seed_tfs, seed_dls), = _decode_selected(
-        store, [(ts, seed_mask)], need_dls)
+        store, [(ts, ts["tier"] == 0)], need_dls)
     p1_ids, p1_tot = _aggregate(
         [seed_ids], [_contrib(seed_tfs, seed_dls, idf[t_star], mode,
                               avgdl)])
@@ -1007,9 +1019,6 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         if cut.skip_hot:
             mask &= tm["tier"] != 0  # hot tier already decoded
         sel.append((tm, mask))
-        budget_left -= int(tm["n"][mask].sum())
-        if budget_left < 0:
-            return None
     parts_i: list[np.ndarray] = [p1_ids]
     parts_c: list[np.ndarray] = [p1_tot]
     for t, (ids, tfs, dls) in zip(ess, _decode_selected(store, sel,
@@ -1027,7 +1036,7 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         # cand_* is a complete candidate set (the wand_topk argument)
         keep = cand_tot >= (theta - ne_sum)
         if int(keep.sum()) >= lookup_cand_cap:
-            return None  # pathological volume → distributed exhaustive
+            raise Decline("exactness")  # pathological candidate volume
         lk_ids = cand_ids[keep]
         lk_tot = cand_tot[keep]
         order = np.lexsort((lk_ids, -lk_tot))
@@ -1038,12 +1047,8 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
         live = lk_tot >= (theta2 - ne_sum)
         lk_ids, lk_tot = lk_ids[live], lk_tot[live]
         for t in non_ess:
-            got = _lookup_postings(store, t,
-                                   max(1, int(tmap[t]["n_salt"])),
-                                   lk_ids, need_dls)
-            if got is None:
-                return None
-            ids_a, tfs_a, dls_a = got
+            ids_a, tfs_a, dls_a = _lookup_postings(
+                store, t, max(1, int(tmap[t]["n_salt"])), lk_ids, need_dls)
             np.add.at(lk_tot, np.searchsorted(lk_ids, ids_a),
                       _contrib(tfs_a, dls_a, idf[t], mode, avgdl))
         rows = _topk(lk_ids, lk_tot, k)
@@ -1053,37 +1058,25 @@ def _serve_topk(store: IndexStore, q_terms: list[str], k: int,
     # k-th score is positive — hand the rare case to the distributed
     # exhaustive fallback
     if len(rows) < k or (rows and rows[-1][1] <= 0):
-        return None
+        raise Decline("exactness")
     return rows
 
 
 # ---- hydrate: driver-side doc point reads --------------------------------
-# bounds for the hydrate path (per request): ids per call (one result
-# page — the service passes k = offset+limit ids) and total rows
-# materialized across the doclens/docs row-group reads
-HYDRATE_IDS_CAP = 1024
-HYDRATE_ROWS_CAP = 5_000_000
-# docs/ doc_id probe arrays memoized for hydrate: same wholesale-reset
-# policy as HOSTDOCS_MEMO_ELEMS, and a file whose doc_id column alone
-# exceeds it is left to the Spark fallback
-DOCPROBE_MEMO_ELEMS = 16_000_000
 
-
-def _hosts_for_ids(store: IndexStore, doc_ids: list[int]):
+def _hosts_for_ids(store: IndexStore, doc_ids: list[int]) -> dict[int, str]:
     """doc_id → host via doclens/ point reads (format 6: doclens files
     are doc_id-sorted with ~1 MB row groups and carry host). Partition
     pruning on doc_bucket is computed driver-side; row-group pruning
     comes from the doc_id min/max footer stats, so each id costs ~1
     small (doc_id, host) row-group read regardless of corpus size; a
-    file's admitted row groups are read in one call. Returns None on a
-    cap breach or a pre-format-6 layout (no host column) → caller falls
-    back to the pruned Spark scan."""
+    file's admitted row groups are read in one call. A pre-format-6
+    file (no host column) declines with reason `layout`."""
     from ..functions.hashing import doc_bucket as _db
     by_db: dict[int, list[int]] = {}
     for d in doc_ids:
         by_db.setdefault(_db(int(d), store.n_doc_buckets), []).append(int(d))
     out: dict[int, str] = {}
-    budget = HYDRATE_ROWS_CAP
     for db, ids in by_db.items():
         want = np.sort(np.array(ids, np.int64))
         for pf in _dir_files(store, f"doclens/doc_bucket={db}"):
@@ -1091,7 +1084,7 @@ def _hosts_for_ids(store: IndexStore, doc_ids: list[int]):
             names = [md.schema.column(i).name
                      for i in range(md.num_columns)]
             if "host" not in names:
-                return None  # pre-format-6 file snuck in — Spark path
+                raise Decline("layout")
             dcol = names.index("doc_id")
             rgs = []
             for rg in range(md.num_row_groups):
@@ -1103,9 +1096,7 @@ def _hosts_for_ids(store: IndexStore, doc_ids: list[int]):
                 rgs.append(rg)
             if not rgs:
                 continue
-            budget -= sum(md.row_group(rg).num_rows for rg in rgs)
-            if budget < 0:
-                return None
+            _charge(sum(md.row_group(rg).num_rows for rg in rgs))
             out.update((r["doc_id"], r["host"]) for r in
                        _rows_with_ids(pf, ["doc_id", "host"], rgs, want))
     return out
@@ -1125,28 +1116,19 @@ def _rows_with_ids(pf, cols: list[str], rgs: list[int], want: np.ndarray):
 def _doc_probe(store: IndexStore, pf):
     """(doc_ids, starts) of one memoized docs/ handle: its whole doc_id
     column and the first row of each row group (starts[-1] = num_rows).
-    Read once per handle and store generation — keyed by the handle, so
-    an evicted and reopened file is probed again. None when the file
-    exceeds DOCPROBE_MEMO_ELEMS rows (→ Spark fallback)."""
-    md = pf.metadata
-    if md.num_rows > DOCPROBE_MEMO_ELEMS:
-        return None
-    hit = _scache(store).get("docprobe", {}).get(pf)
-    if hit is not None:
-        return hit
-    ids = _read(pf, ["doc_id"]).column("doc_id").to_numpy(
-        zero_copy_only=False)
-    starts = np.cumsum([0] + [md.row_group(i).num_rows
-                              for i in range(md.num_row_groups)])
-    with _slock(store):  # the size sum iterates the memo
-        memo = _scache(store).setdefault("docprobe", {})
-        if (sum(v[0].size for v in memo.values()) + ids.size
-                > DOCPROBE_MEMO_ELEMS):
-            memo.clear()
-        memo[pf] = (ids, starts)
-    return ids, starts
+    Read once per handle and serve-cache generation — keyed by the
+    handle, so an evicted and reopened file is probed again."""
+    def load():
+        md = pf.metadata
+        _charge(md.num_rows)
+        ids = _read(pf, ["doc_id"]).column("doc_id").to_numpy(
+            zero_copy_only=False)
+        return ids, np.cumsum([0] + [md.row_group(i).num_rows
+                                     for i in range(md.num_row_groups)])
+    return _memo(store, "docprobe", pf, load)
 
 
+@_entry(tombstone_free=False)
 def serve_doc_rows(store: IndexStore, doc_ids: list[int]):
     """Driver-side hydrate (J3): full doc rows for a top-k id page as
     bounded parquet point reads — ZERO Spark jobs and, unlike the old
@@ -1161,50 +1143,38 @@ def serve_doc_rows(store: IndexStore, doc_ids: list[int]):
          file's memoized doc_id column (_doc_probe) names the row groups
          holding a hit, and their full columns (text included) are read
          in one call and the hit rows taken and converted as one batch.
-    HYDRATE_ROWS_CAP is charged for the row groups actually read, so a
-    large file holding one hit costs that hit's row group, not the file.
-    Cost is O(k) row groups independent of corpus size — the index-node
-    point-read shape (the reference hydrates the same way via MySQL PK
-    lookups, SearchServiceImpl.java:139-160). Correct on tombstoned
-    stores too: docs/ is replaced synchronously by every mutation
-    (tombstones only mask posting generations).
+    The work budget is charged for the ids and for the row groups
+    actually read, so a large file holding one hit costs that hit's row
+    group, not the file. Cost is O(k) row groups independent of corpus
+    size — the index-node point-read shape (the reference hydrates the
+    same way via MySQL PK lookups, SearchServiceImpl.java:139-160).
+    Correct on tombstoned stores too: docs/ is replaced synchronously
+    by every mutation (tombstones only mask posting generations).
 
-    Returns {doc_id: {url_norm, host, path, text}} or None on any cap
-    breach / pre-format-6 layout → caller uses the doc_bucket-pruned
-    Spark fallback. Ids absent from the store are simply absent from
-    the result."""
-    if len(doc_ids) > HYDRATE_IDS_CAP:
-        return None
+    Returns {doc_id: {url_norm, host, path, text}} or None on a decline
+    → caller uses the doc_bucket-pruned Spark fallback. Ids absent from
+    the store are simply absent from the result."""
+    from ..functions.hashing import doc_bucket as _dbf
+    from ..functions.hashing import term_bucket as _tbf
     if not doc_ids:
         return {}
-    with borrow_files(store):
-        from ..functions.hashing import doc_bucket as _dbf
-        from ..functions.hashing import term_bucket as _tbf
-        hosts = _hosts_for_ids(store, doc_ids)
-        if hosts is None:
-            return None
-        by_part: dict[tuple[int, int], list[int]] = {}
-        for d, h in hosts.items():
-            key = (_tbf(h, store.n_host_buckets), _dbf(d, store.n_doc_buckets))
-            by_part.setdefault(key, []).append(d)
-        out: dict[int, dict] = {}
-        budget = HYDRATE_ROWS_CAP
-        cols = ["doc_id", "url_norm", "host", "path", "text"]
-        for (hb, db), ids in by_part.items():
-            want = np.sort(np.array(ids, np.int64))
-            for pf in _dir_files(
-                    store, f"docs/host_bucket={hb}/doc_bucket={db}"):
-                probe = _doc_probe(store, pf)
-                if probe is None:
-                    return None
-                got, starts = probe
-                hits = np.flatnonzero(_sorted_membership(want, got))
-                if hits.size == 0:
-                    continue
-                rgs = np.unique(np.searchsorted(starts, hits, "right") - 1)
-                budget -= int((starts[rgs + 1] - starts[rgs]).sum())
-                if budget < 0:
-                    return None
-                out.update((r["doc_id"], r) for r in
-                           _rows_with_ids(pf, cols, rgs.tolist(), want))
-        return out
+    _charge(len(doc_ids))
+    by_part: dict[tuple[int, int], list[int]] = {}
+    for d, h in _hosts_for_ids(store, doc_ids).items():
+        key = (_tbf(h, store.n_host_buckets), _dbf(d, store.n_doc_buckets))
+        by_part.setdefault(key, []).append(d)
+    out: dict[int, dict] = {}
+    cols = ["doc_id", "url_norm", "host", "path", "text"]
+    for (hb, db), ids in by_part.items():
+        want = np.sort(np.array(ids, np.int64))
+        for pf in _dir_files(
+                store, f"docs/host_bucket={hb}/doc_bucket={db}"):
+            got, starts = _doc_probe(store, pf)
+            hits = np.flatnonzero(_sorted_membership(want, got))
+            if hits.size == 0:
+                continue
+            rgs = np.unique(np.searchsorted(starts, hits, "right") - 1)
+            _charge(int((starts[rgs + 1] - starts[rgs]).sum()))
+            out.update((r["doc_id"], r) for r in
+                       _rows_with_ids(pf, cols, rgs.tolist(), want))
+    return out

@@ -43,7 +43,7 @@ import logging
 from . import score as S
 from .codec import decode_block
 from .index_store import IndexStore
-from .serving import SITE_LOOKUP_FACTOR, serving_enabled
+from .serving import SITE_LOOKUP_FACTOR
 
 log = logging.getLogger(__name__)
 
@@ -196,9 +196,10 @@ def site_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
 
     # serving tier (operators/serving.py): bounded site queries answer
     # driver-side — host-bucket docs slice point read + per-term
-    # decode-or-point-lookup, zero Spark jobs; None on any bound
-    # breach → the distributed partition-pruned path below
-    if serving and serving_enabled() and not store.has_tombstones():
+    # decode-or-point-lookup, zero Spark jobs; None on any decline
+    # (serving off, tombstones, budget) → the distributed
+    # partition-pruned path below
+    if serving:
         from .serving import serve_site_topk
         served = serve_site_topk(store, q_terms, k, host, mode,
                                  debug=debug)
@@ -406,9 +407,9 @@ def wand_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
     # serving shape (the reference serves every query from B-tree
     # lookups the same way, IndexRepository.java:26-50). serve_topk
     # runs the same score.MaxScorePlan (same phases, same float64 math,
-    # equality-pinned in tests) and returns None on any bound breach
-    # or the zero-score tier → the distributed path below runs.
-    if serving and serving_enabled() and not store.has_tombstones():
+    # equality-pinned in tests) and returns None on any decline (see
+    # serving.Decline) → the distributed path below runs.
+    if serving:
         from .serving import serve_topk
         served = serve_topk(store, q_terms, k, mode,
                             exhaustive_budget=exhaustive_budget,

@@ -34,44 +34,5 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prewarm_python_workers(spark)
     return spark
 
-
-# sessions whose worker pool has been pre-forked (keyed by the JVM
-# context id so a getOrCreate() returning an existing session skips it)
-_PREWARMED: set[str] = set()
-
-
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Fork the Python worker pool once at session init.
-
-    With spark.python.worker.reuse (default true) workers persist across
-    jobs, but the FIRST Python-evaluated stage of a session pays one
-    fork + pandas/pyarrow import per core (measured 5.1 s cold vs 0.76 s
-    warm for an identity mapInPandas on local[32]) — interpreter
-    startup, not data work. A long-running service pays it once at
-    startup; batch entry points here do the same so the first real
-    operator measures its own compute. Runs one trivial task per core;
-    opt out with SPARK_GRAFT_PREWARM=0."""
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
-        return
-    key = spark.sparkContext.applicationId
-    if key in _PREWARMED:
-        return
-    _PREWARMED.add(key)
-
-    def _ident(batches):
-        import pandas  # noqa: F401 — pull the heavy imports into the worker
-        import pyarrow  # noqa: F401
-        for b in batches:
-            yield b
-
-    n = spark.sparkContext.defaultParallelism
-    try:
-        spark.sparkContext.setJobDescription("session init: prewarm "
-                                             "python workers")
-        (spark.range(0, n, 1, n).mapInPandas(_ident, "id long")
-         .write.format("noop").mode("overwrite").save())
-    finally:
-        spark.sparkContext.setJobDescription(None)

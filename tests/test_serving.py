@@ -38,22 +38,33 @@ def test_terms_rows_arrow_matches_spark(spark, store, qterms):
             (w["df"], w["cf"], w["max_tf"], w["n_salt"])
 
 
+def _declined(store, entry, reason):
+    return sv.declines(store).get((entry, reason), 0)
+
+
 def test_cap_breach_falls_back_to_distributed(spark, store, qterms,
                                               monkeypatch):
-    """Any bound breach must return None from serve_topk, and wand_topk
-    must still answer correctly via the distributed path."""
+    """A read past the work budget declines serve_topk (None, counted
+    as work_budget), and wand_topk still answers correctly via the
+    distributed path. On a cold cache the first read (the terms file)
+    declines; on a warm one memo hits charge nothing and the decode's
+    charge declines."""
     want = [(r["doc_id"], r["score"]) for r in
             wand_topk(spark, store, qterms, 10, serving=False).collect()]
-    monkeypatch.setattr(sv, "META_ROWS_CAP", 0)
-    store.invalidate_reads()  # drop memoized metadata built pre-patch
-    assert sv.serve_topk(store, qterms, 10,
-                         exhaustive_budget=0) is None
+    n0 = _declined(store, "serve_topk", "work_budget")
+    store.invalidate_reads()  # cold cache
+    monkeypatch.setattr(sv, "WORK_BUDGET", 0)
+    assert sv.serve_topk(store, qterms, 10, exhaustive_budget=0) is None
     got = [(r["doc_id"], r["score"]) for r in
            wand_topk(spark, store, qterms, 10).collect()]
     assert got == want
-    monkeypatch.setattr(sv, "DECODE_CAP", 0)
-    store.invalidate_reads()
-    assert sv.serve_topk(store, qterms, 10) is None
+    assert _declined(store, "serve_topk", "work_budget") == n0 + 2
+    monkeypatch.undo()
+    two = qterms[:2]  # positive idf: the plan cannot decline exactness
+    assert sv.serve_topk(store, two, 10) is not None  # warms every memo
+    monkeypatch.setattr(sv, "WORK_BUDGET", 0)
+    assert sv.serve_topk(store, two, 10) is None
+    assert _declined(store, "serve_topk", "work_budget") == n0 + 3
 
 
 def test_serving_sees_appended_generation(spark, store, qterms, oracle):
@@ -238,23 +249,30 @@ def test_fd_lifecycle_close_and_memo_reset(spark, store, qterms,
     # reads after close() reopen transparently and stay exact
     assert sv.serve_topk(store, qterms, 10) == base
 
-    # force memo resets on tiny caps: many distinct terms, fd count must
-    # stay bounded and answers stay exact
-    monkeypatch.setattr(sv, "META_MEMO_TERMS", 3)
-    monkeypatch.setattr(sv, "TERMS_MEMO_TERMS", 3)
-    monkeypatch.setattr(sv, "FILE_HANDLE_CAP", 4)
-    store.invalidate_reads()
+    # force memo resets on a serve cache of ~3 entries and a tiny
+    # handle cap: many distinct terms, fd count must stay bounded, the
+    # memo within its bytes, and answers stay exact
     vocab = [r["term"] for r in store.terms(spark).select("term")
              .limit(40).collect()]
-    fd_high = 0
+    for t in vocab:
+        sv.serve_topk(store, [t], 5)
+    entry = max(sv._nbytes(v) for v in sv._scache(store)["memo"].values())
+    budget = 3 * entry
+    monkeypatch.setattr(sv, "SERVE_CACHE_BYTES", budget)
+    monkeypatch.setattr(sv, "FILE_HANDLE_CAP", 4)
+    store.invalidate_reads()
+    n_cache = _declined(store, "serve_topk", "cache_budget")
+    fd_high = mem_high = 0
     for t in vocab:
         sv.serve_topk(store, [t], 5)
         fd_high = max(fd_high, store_fds())
+        mem_high = max(mem_high, sv._scache(store)["memo_bytes"])
     # the handle memo close-resets at the cap: open fds never exceed
     # cap + one freshly-opened bucket's files
     assert fd_high <= 4 + 8, fd_high
-    meta_cache = sv._scache(store).get("meta", {})
-    assert len(meta_cache) <= 3  # memo reset actually engaged
+    assert 0 < mem_high <= budget
+    assert len(sv._scache(store)["memo"]) < 2 * len(vocab)  # resets ran
+    assert _declined(store, "serve_topk", "cache_budget") == n_cache
     assert sv.serve_topk(store, qterms, 10) == base
 
 
@@ -303,15 +321,18 @@ def test_serve_doc_rows_matches_docs_table(spark, store):
 
 
 def test_serve_doc_rows_cap_declines(spark, store, monkeypatch):
-    """Any bound breach returns None (→ the doc_bucket-pruned Spark
-    fallback), never a partial answer."""
-    assert sv.serve_doc_rows(store, list(range(sv.HYDRATE_IDS_CAP + 1))) \
-        is None
+    """A work-budget breach returns None (→ the doc_bucket-pruned Spark
+    fallback), never a partial answer: an id page larger than the
+    budget, and a page whose ids fit but whose row reads do not."""
     ids = [r["doc_id"] for r in
            store.docs(spark).select("doc_id").limit(3).collect()]
-    monkeypatch.setattr(sv, "HYDRATE_ROWS_CAP", 0)
+    n0 = _declined(store, "serve_doc_rows", "work_budget")
     store.invalidate_reads()
+    monkeypatch.setattr(sv, "WORK_BUDGET", len(ids) - 1)
     assert sv.serve_doc_rows(store, ids) is None
+    monkeypatch.setattr(sv, "WORK_BUDGET", len(ids))
+    assert sv.serve_doc_rows(store, ids) is None
+    assert _declined(store, "serve_doc_rows", "work_budget") == n0 + 2
 
 
 def _split_row_groups(st, rows: int) -> str:
@@ -377,23 +398,26 @@ def test_serve_doc_rows_takes_hits_from_every_row_group(spark, mk_store):
 
 def test_hydrate_budget_charges_hit_row_groups(spark, mk_store,
                                                monkeypatch):
-    """HYDRATE_ROWS_CAP is charged per row group read, not per file: a
-    cap above one hit row group's rows but below the docs file's rows
-    still serves a one-id page, and its row equals the docs table."""
+    """Hydrate charges the work budget per row group read, not per
+    file: with the docs file's doc_id probe memoized, a budget of the
+    id plus one 5-row doclens and one 5-row docs row group, below the
+    docs file's rows, still serves a one-id page, and its row equals
+    the docs table."""
     import pyarrow.parquet as pq
     st = mk_store("budget")
     fp = _split_row_groups(st, 5)
     indexed = set(pq.read_table(f"{st.path}/doclens", columns=["doc_id"])
                   .column("doc_id").to_pylist())
     pf = pq.ParquetFile(fp)
-    assert pf.metadata.num_rows > 5
+    assert pf.metadata.num_rows > 1 + 5 + 5
     d = next(d for d in pf.read_row_group(
         pf.metadata.num_row_groups - 1, columns=["doc_id"])
         .column("doc_id").to_pylist()[::-1] if d in indexed)
     pf.close()
-    monkeypatch.setattr(sv, "HYDRATE_ROWS_CAP", 5)
+    assert sv.serve_doc_rows(st, [d]) is not None  # memoizes the probe
+    monkeypatch.setattr(sv, "WORK_BUDGET", 1 + 5 + 5)
     got = sv.serve_doc_rows(st, [d])
-    assert got is not None
+    assert got is not None and sv.declines(st) == {}
     assert {k: (r["url_norm"], r["host"], r["path"], r["text"])
             for k, r in got.items()} == _docs_rows(spark, st, [d])
 
@@ -523,24 +547,6 @@ def test_site_heavy_semijoin_plans_hash_join(spark, store, qterms):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_serve_doc_rows_after_reindex_tombstoned(spark, store):
-    """(Keep LAST in this module: mutates the shared store with a
-    TOMBSTONING reindex.) docs/ is replaced synchronously by every
-    mutation, so the driver-side hydrate stays exact on tombstoned
-    stores — the one serving component that doesn't need the tombstone
-    gate."""
-    from search_engine_skillbox_spark.operators.incremental import (
-        reindex_page)
-    row = store.docs(spark).select("url").first()
-    res = reindex_page(spark, store, {
-        "url": row["url"], "warc_ts": None, "html": None,
-        "text": "replaced hydrate body text", "lang": "en"})
-    assert res["old_existed"] and store.has_tombstones()
-    got = sv.serve_doc_rows(store, [res["doc_id"]])
-    assert got is not None
-    assert got[res["doc_id"]]["text"] == "replaced hydrate body text"
-
-
 def test_staging_files_never_served(spark, mk_store):
     """A crashed Spark write leaves `_temporary/**` attempt files; the
     driver-side walkers (dictionary counts, hydrate point reads, host
@@ -632,3 +638,129 @@ def test_concurrent_serving_consistent(spark, store, qterms):
     assert getattr(store, "_serve_borrows", {}) == {}
     sv.close_files(store)
     assert sv._scache(store).get("files", {}) == {}
+
+
+def test_concurrent_memo_resets_consistent(spark, store, monkeypatch):
+    """The serve cache under concurrent wholesale resets: 8 threads
+    over 240 distinct single-term top-k queries plus dictionary lookups,
+    with a serve cache of a few entries and the interpreter switching
+    threads every microsecond, must give exactly the single-threaded
+    answers and raise nothing. A lookup returns the value it found or
+    loaded itself; re-reading the memo after a concurrent reset (or
+    marking an already-read term absent) gives KeyErrors and wrong
+    rows here."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    vocab = [r["term"] for r in store.terms(spark).select("term")
+             .orderBy("term").limit(240).collect()]
+    assert len(vocab) == 240
+    store.invalidate_reads()
+
+    def one(i):
+        t, u = vocab[i % len(vocab)], vocab[(i * 7 + 3) % len(vocab)]
+        rows = sv.terms_rows_arrow(store, [t, u, "zzzabsent"])
+        top = sv.serve_topk(store, [t], 5)
+        return (i, tuple(sorted((k, tuple(sorted(v.items())) if v else None)
+                                for k, v in rows.items())),
+                tuple(top) if top is not None else None)
+
+    want = [one(i) for i in range(480)]
+    assert all(w[2] for w in want)  # every query served, none declined
+    entry = max(sv._nbytes(v) for v in sv._scache(store)["memo"].values())
+    monkeypatch.setattr(sv, "SERVE_CACHE_BYTES", 3 * entry)
+    store.invalidate_reads()
+    n0 = sv.declines(store)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(one, range(480), timeout=600))
+    finally:
+        sys.setswitchinterval(old)
+    assert got == want
+    assert sv.declines(store) == n0
+
+
+def test_each_decline_reason_is_named(spark, mk_store, monkeypatch,
+                                      qterms):
+    """Every decline reason is raised by its condition and counted per
+    (entry, reason) in declines(store), while the entry returns None."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from search_engine_skillbox_spark.operators.incremental import (
+        reindex_page)
+    from search_engine_skillbox_spark.operators.index_store import (
+        walk_parquet_files)
+    st = mk_store("declines")
+    rare, mid = qterms[0], qterms[1]
+    ids = [r["doc_id"] for r in
+           st.docs(spark).select("doc_id").limit(3).collect()]
+
+    monkeypatch.setenv("SPARK_GRAFT_NO_SERVING", "1")
+    assert sv.serve_topk(st, [mid], 5) is None
+    assert sv.terms_rows_arrow(st, [mid]) is None
+    monkeypatch.undo()
+
+    monkeypatch.setattr(sv, "WORK_BUDGET", 0)
+    assert sv.serve_match_count(st, [rare, mid]) is None
+    monkeypatch.undo()
+
+    monkeypatch.setattr(sv, "SERVE_CACHE_BYTES", 0)
+    st.invalidate_reads()
+    assert sv.terms_rows_arrow(st, [mid]) is None
+    monkeypatch.undo()
+
+    # the pruned plan's below-k tier: fewer matches than k
+    df_rare = int(sv.terms_rows_arrow(st, [rare])[rare]["df"])
+    assert sv.serve_topk(st, [rare], df_rare + 5,
+                         exhaustive_budget=0) is None
+    assert sv.declines(st) == {("serve_topk", "disabled"): 1,
+                               ("terms_rows_arrow", "disabled"): 1,
+                               ("serve_match_count", "work_budget"): 1,
+                               ("terms_rows_arrow", "cache_budget"): 1,
+                               ("serve_topk", "exactness"): 1}
+
+    row = st.docs(spark).select("url").first()
+    reindex_page(spark, st, {"url": row["url"], "warc_ts": None,
+                             "html": None, "text": f"{mid} replaced",
+                             "lang": "en"})
+    assert st.has_tombstones()
+    assert sv.serve_topk(st, [mid], 5) is None
+    assert sv.serve_site_topk(st, [mid], 5, "alpha.test") is None
+    assert sv.serve_match_count(st, [rare, mid]) is None
+    for entry in ("serve_topk", "serve_site_topk", "serve_match_count"):
+        assert sv.declines(st)[(entry, "tombstones")] == 1
+
+    # a pre-format-6 doclens file: no host column
+    for fp in walk_parquet_files(f"{st.path}/doclens"):
+        pq.write_table(pq.read_table(fp).drop(["host"]), fp)
+        crc = os.path.join(os.path.dirname(fp),
+                           f".{os.path.basename(fp)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    st.invalidate_reads()
+    assert sv.serve_doc_rows(st, ids) is None
+    assert sv.declines(st)[("serve_doc_rows", "layout")] == 1
+    assert {r for _, r in sv.declines(st)} == set(sv.Decline.REASONS)
+
+
+def test_serve_doc_rows_after_reindex_tombstoned(spark, store):
+    """(Keep LAST in this module: mutates the shared store with a
+    TOMBSTONING reindex, after which the posting readers decline.)
+    docs/ is replaced synchronously by every mutation, so the
+    driver-side hydrate stays exact on tombstoned
+    stores — the one serving component that doesn't need the tombstone
+    gate."""
+    from search_engine_skillbox_spark.operators.incremental import (
+        reindex_page)
+    row = store.docs(spark).select("url").first()
+    res = reindex_page(spark, store, {
+        "url": row["url"], "warc_ts": None, "html": None,
+        "text": "replaced hydrate body text", "lang": "en"})
+    assert res["old_existed"] and store.has_tombstones()
+    got = sv.serve_doc_rows(store, [res["doc_id"]])
+    assert got is not None
+    assert got[res["doc_id"]]["text"] == "replaced hydrate body text"
