@@ -32,7 +32,6 @@ LEVELS = tuple(int(x) for x in
                os.environ.get("PSCALE_LEVELS", "2,8").split(","))
 BEST_OF = int(os.environ.get("PSCALE_BEST_OF", "2"))
 OUT_TAG = os.environ.get("PSCALE_TAG", "")
-FUSED = bool(os.environ.get("PSCALE_FUSED"))  # cache-boundary variant
 
 
 def main() -> None:
@@ -46,8 +45,7 @@ def main() -> None:
             # reported separately (gen_sec), outside the chain timing
             attempts.append(spark_submit(
                 cpus, "jobs/pipeline_bench.py", "--docs", str(DOCS),
-                "--workdir", f"/tmp/pscale_{cpus}",
-                *(["--fused"] if FUSED else [])))
+                "--workdir", f"/tmp/pscale_{cpus}"))
         best = min(attempts, key=lambda a: a["value"])
         best["attempts_sec"] = [a["value"] for a in attempts]
         results[cpus] = best

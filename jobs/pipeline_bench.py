@@ -29,10 +29,6 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=1_000_000)
     ap.add_argument("--workdir", default="/tmp/pipeline_bench")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--fused", action="store_true",
-                    help="clean_corpus_fused: cache boundaries instead "
-                         "of per-stage parquet barriers (no per-stage "
-                         "timings; the barrier-cost A/B)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -73,8 +69,7 @@ def main() -> None:
 
     # the chain runs through the RESUMABLE operator (clean_corpus:
     # per-stage lineage rows, crash-restart skips committed stages) so
-    # the bench measures exactly what a production corpus build runs;
-    # --fused swaps in the cache-boundary variant (the barrier A/B).
+    # the bench measures exactly what a production corpus build runs.
     # gopher_structural_only: the synthetic corpus has no real en/ru
     # stopwords, so the stopword-presence cue would zero the composite.
     # decontam_broadcast=True pins the plan the recorded BENCH/
@@ -83,26 +78,18 @@ def main() -> None:
     # 100 TB-safe choice but a different dataflow)
     chain_stages = P.default_clean_stages(gopher_structural_only=True,
                                           decontam_broadcast=True)
-    if args.fused:
-        t0 = time.time()
-        res = P.clean_corpus_fused(spark, path("raw"), path("work_out"),
-                                   stages=chain_stages)
-        total = round(time.time() - t0, 1)
-        stages = []
-        n_cur = res["rows_out"]
-    else:
-        res = P.clean_corpus(spark, path("raw"), path("work"),
-                             stages=chain_stages)
-        n_in = args.docs
-        stages = []
-        for s in res["stages"]:
-            stages.append({"stage": s["stage"], "sec": round(s["sec"], 1),
-                           "rows_in": n_in, "rows_out": s["rows_out"],
-                           "docs_per_sec": round(n_in / s["sec"], 1)
-                           if s["sec"] else None})
-            n_in = s["rows_out"]
-        n_cur = n_in
-        total = round(sum(s["sec"] for s in stages), 1)
+    res = P.clean_corpus(spark, path("raw"), path("work"),
+                         stages=chain_stages)
+    n_in = args.docs
+    stages = []
+    for s in res["stages"]:
+        stages.append({"stage": s["stage"], "sec": round(s["sec"], 1),
+                       "rows_in": n_in, "rows_out": s["rows_out"],
+                       "docs_per_sec": round(n_in / s["sec"], 1)
+                       if s["sec"] else None})
+        n_in = s["rows_out"]
+    n_cur = n_in
+    total = round(sum(s["sec"] for s in stages), 1)
     print(json.dumps({
         "metric": "pipeline_end_to_end_sec", "value": total,
         "unit": "sec", "docs": args.docs, "gen_sec": gen_sec,

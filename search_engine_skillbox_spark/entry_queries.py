@@ -1169,11 +1169,11 @@ def q_clean_corpus_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference their input more than once and an unpersisted lazy chain
     recomputes the whole upstream per reference.
 
-    Cache hygiene mirrors clean_corpus_fused's materialize-then-release
-    (VERDICT r7 #5): each stage is eagerly count()ed and its
-    predecessor unpersisted, so ONE cached frame (the returned result)
-    rides through the rest of the 36-query gate session instead of six
-    corpus-sized ones."""
+    Cache hygiene (VERDICT r7 #5): each stage is eagerly count()ed and
+    only then is its predecessor unpersisted — the predecessor's last
+    consumer has run, so at most two stages are cached at once, and
+    ONE cached frame (the returned result) rides through the rest of
+    the 36-query gate session instead of six corpus-sized ones."""
     from .operators.pipeline import default_clean_stages
     df = _docs(spark, sf_dir).select("doc_id", "text", "lang")
     prev = None

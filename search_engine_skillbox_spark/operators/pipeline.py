@@ -344,25 +344,32 @@ def _marker_count(before, after, marker: str):
             / F.lit(len(marker))).cast("long")
 
 
+def _pii_columns(text):
+    """(clean text, n_emails, n_phones) columns of the `text` column:
+    emails → [EMAIL], then phone-like digit runs → [PHONE], with the
+    per-doc match counts. Emails are replaced BEFORE phones so a
+    digit-bearing local-part is not double-counted. Counts are derived
+    from the marker deltas (_marker_count) so each PII regex runs ONCE
+    (the replace), not twice (count + replace) — bit-identical to
+    regexp_count, pinned by the pii_redact and clean_corpus_chain
+    oracle rows."""
+    no_email = F.regexp_replace(text, EMAIL_RE, "[EMAIL]")
+    clean = F.regexp_replace(no_email, PHONE_RE, "[PHONE]")
+    return (clean,
+            _marker_count(text, no_email, "[EMAIL]").alias("n_emails"),
+            _marker_count(no_email, clean, "[PHONE]").alias("n_phones"))
+
+
 def pii_redact(docs: DataFrame, doc_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
     """(doc_id, clean_text, n_emails, n_phones): emails → [EMAIL],
     phone-like digit runs → [PHONE], with per-doc match counts for
-    scrub-rate monitoring. Pure column expressions, codegen'd — the
-    100 TB shape is a projection, no shuffle, no Python. Emails are
-    counted and replaced BEFORE phones so a digit-bearing local-part
-    is not double-counted. Counts are derived from the marker deltas
-    (_marker_count) so each PII regex runs ONCE (the replace), not
-    twice (count + replace) — bit-identical to regexp_count, pinned by
-    the pii_redact oracle row."""
-    c = F.col(text_col)
-    no_email = F.regexp_replace(c, EMAIL_RE, "[EMAIL]")
-    clean = F.regexp_replace(no_email, PHONE_RE, "[PHONE]")
-    return docs.select(
-        F.col(doc_col).alias("doc_id"),
-        clean.alias("clean_text"),
-        _marker_count(c, no_email, "[EMAIL]").alias("n_emails"),
-        _marker_count(no_email, clean, "[PHONE]").alias("n_phones"))
+    scrub-rate monitoring (_pii_columns). Pure column expressions,
+    codegen'd — the 100 TB shape is a projection, no shuffle, no
+    Python."""
+    clean, n_emails, n_phones = _pii_columns(F.col(text_col))
+    return docs.select(F.col(doc_col).alias("doc_id"),
+                       clean.alias("clean_text"), n_emails, n_phones)
 
 
 # ---------------------------------------------------------------------------
@@ -450,21 +457,14 @@ def default_clean_stages(*, gopher_structural_only: bool = False,
         return sample_by_hash(df, sample_rate, strata=strata)
 
     def redact(df: DataFrame) -> DataFrame:
-        # inline pii_redact's expressions instead of joining its output
-        # back on doc_id — redaction is a pure projection, and the join
-        # formulation was a self-join (input computed twice + two
-        # exchanges + sort-merge) for what one select does
-        # counts from literal marker deltas (_marker_count): each PII
-        # regex runs once, not twice — the redact stage's regex CPU was
-        # the chain's worst scaler at 4M docs (VERDICT r7 #4)
-        c = F.col("text")
-        no_email = F.regexp_replace(c, EMAIL_RE, "[EMAIL]")
-        clean = F.regexp_replace(no_email, PHONE_RE, "[PHONE]")
+        # pii_redact's expressions in one select instead of joining its
+        # output back on doc_id — redaction is a pure projection, and
+        # the join formulation was a self-join (input computed twice +
+        # two exchanges + sort-merge) for what one select does
+        clean, n_emails, n_phones = _pii_columns(F.col("text"))
         other = [x for x in df.columns if x not in ("doc_id", "text")]
-        return df.select(
-            "doc_id", *other, clean.alias("text"),
-            _marker_count(c, no_email, "[EMAIL]").alias("n_emails"),
-            _marker_count(no_email, clean, "[PHONE]").alias("n_phones"))
+        return df.select("doc_id", *other, clean.alias("text"),
+                         n_emails, n_phones)
 
     out = _StageList([("gopher_filter", gopher),
                       ("exact_dedup", dedup_keep_first),
@@ -611,62 +611,3 @@ def clean_corpus(spark, input_path: str, workdir: str,
         cur = out
     return {"build_id": build_id, "final_path": cur, "stages": results}
 
-
-def clean_corpus_fused(spark, input_path: str, out_path: str,
-                       stages=None, storage_level: str = "MEMORY_AND_DISK"):
-    """The same cleaning chain WITHOUT per-stage parquet barriers:
-    stage results are persist()ed — cache boundaries replace the six
-    write→commit→read→count barriers — and only the FINAL result is
-    written. The persists are load-bearing, not an optimization knob:
-    three stages reference their input twice (minhash/decontaminate
-    anti-joins, the self-derived benchmark slice), and an unpersisted
-    lazy chain would recompute the whole upstream pipeline once per
-    reference — exponential across the chain.
-
-    Trade-off vs clean_corpus, stated plainly: NO mid-chain resume (a
-    crash re-runs the whole chain — one lineage unit, not six) and the
-    working set must fit the cluster's cache tier (MEMORY_AND_DISK
-    spills, so "fit" means local disk at worst). Use clean_corpus for
-    the 100 TB production shape; use this for low-latency interactive
-    runs — and as the A/B that QUANTIFIES the barrier cost: the staged
-    chain's scaling ceiling was attributed to per-stage serial/driver
-    work (BENCH/pipeline_scaling_diag.json), and this variant is the
-    experiment that tests that attribution by deleting the barriers.
-
-    Cache working set is capped at TWO stages, not six: each stage is
-    eagerly materialized (count()) and its predecessor unpersisted the
-    moment its last consumer has run — six corpora pinned in the cache
-    tier through the final write was the unbounded-memory shape. The
-    count() is a cache-to-cache pass (the work happens exactly once;
-    the final write then reads cache), and a later eviction of an
-    unpersisted ancestor only costs lineage recompute, never
-    correctness. All unpersists run in try/finally, so a mid-chain
-    failure releases every persisted frame instead of pinning them
-    until session end (pytest-pinned both ways,
-    test_pipeline::test_fused_unpersists_on_success_and_failure).
-
-    Result equivalence with the staged chain is pytest-pinned
-    (test_pipeline::test_fused_equals_staged)."""
-    from pyspark import StorageLevel
-    if stages is None:
-        stages = default_clean_stages()
-    lvl = getattr(StorageLevel, storage_level)
-    cached: list = []
-    cur = spark.read.parquet(input_path)
-    try:
-        prev = None
-        for _name, fn in stages:
-            cur = fn(cur).persist(lvl)
-            cached.append(cur)
-            cur.count()  # materialize this stage's cache NOW so the
-            # predecessor's last consumer has run and it can be freed
-            if prev is not None:
-                prev.unpersist()
-                cached.remove(prev)
-            prev = cur
-        cur.write.mode("overwrite").parquet(out_path)
-    finally:
-        for df in cached:
-            df.unpersist()
-    rows, nbytes = _parquet_stats(out_path)
-    return {"final_path": out_path, "rows_out": rows, "bytes_out": nbytes}

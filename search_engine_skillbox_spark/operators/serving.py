@@ -42,8 +42,14 @@ Scale discipline (what keeps this 100 TB-safe):
   * parquet row-group statistics do the block-skipping: bucket files
     are (term, tier, bound)-sorted with ~4 MB row groups at build time
     (index_store.py), so a term's metadata is a few footer-pruned
-    row-group reads and survivors' binaries a few .take() calls —
-    the point-read I/O shape, independent of corpus size.
+    row-group reads and survivors' binaries one read per touched
+    bucket file plus a .take() — the point-read I/O shape, independent
+    of corpus size.
+  * reads run on the calling thread, through the memoized handles
+    (_dir_files, _read): a request starts no thread for I/O, as the
+    reference answers on its request thread. Only the CPU kernels
+    shard across a pool, past their size thresholds
+    (codec.decode_blocks_batch_threaded, _sorted_membership).
 """
 
 from __future__ import annotations
@@ -53,7 +59,7 @@ import os
 import sys
 import threading
 import time
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -74,12 +80,6 @@ SERVE_CACHE_BYTES = 512 * 1024 * 1024
 # handle no active borrower holds is closed (a long-lived service over
 # a many-bucket store must not accumulate fds up to the process limit)
 FILE_HANDLE_CAP = 256
-# threads overlapping row-group reads in a full-list decode (pyarrow
-# drops the GIL for IO/decompression; varint decode stays sequential)
-DECODE_READ_THREADS = 4
-# don't open an ad-hoc shard handle for fewer row groups than this —
-# a footer re-parse must be amortized over real read work
-MIN_SPANS_PER_SHARD = 2
 # thread the membership test past this many probe values: searchsorted
 # releases the GIL, and the binary searches are cache-miss-bound, so
 # value-chunked threads scale near-linearly (microbenched 4M probes vs
@@ -276,17 +276,18 @@ def _entry(tombstone_free: bool):
 
 def _read(pf, columns, rg: int | list[int] | None = None):
     """One row group, a list of row groups (one concatenated table) or,
-    with rg=None, the whole file, serialized per handle: one pyarrow
-    ParquetFile's reader state is not safe under concurrent reads
-    (distinct handles are). Memoized handles carry _sx_lock; ad-hoc
-    per-call handles are single-threaded by construction and need none.
+    with rg=None, the whole file of a memoized handle (_dir_files),
+    serialized by its _sx_lock: one pyarrow ParquetFile's reader state
+    is not safe under concurrent reads, and concurrent requests share
+    the handle.
 
     Reads run on the calling thread (use_threads=False): a serving read
     is a few hundred rows, where pyarrow's thread-pool dispatch costs
     more than the decode it parallelizes (one 167-row, 5-column docs row
-    group: 0.89 ms threaded, 0.55 ms unthreaded). The only parallelism
-    inside a request is _decode_selected's DECODE_READ_THREADS sharding."""
-    with getattr(pf, "_sx_lock", None) or nullcontext():
+    group: 0.89 ms threaded, 0.55 ms unthreaded). No read inside a
+    request starts a thread; only the CPU kernels past their size
+    thresholds do (decode_blocks_batch_threaded, _sorted_membership)."""
+    with pf._sx_lock:
         if rg is None:
             return pf.read(columns=columns, use_threads=False)
         if isinstance(rg, list):
@@ -422,9 +423,6 @@ def _dir_files(store: IndexStore, relpath: str):
                     # pyarrow handle's reader state is NOT safe under
                     # concurrent reads (distinct handles are)
                     pf._sx_lock = threading.Lock()
-                    # lets _decode_selected open EXTRA ad-hoc handles on
-                    # the same file to shard a big intra-file decode
-                    pf._sx_path = fp
                     files.append(pf)
             cache[relpath] = files
         ent = getattr(store, "_serve_borrows", {}).get(
@@ -487,7 +485,8 @@ def _term_meta(store: IndexStore, term: str) -> dict:
 def _load_term_meta(store: IndexStore, term: str) -> dict:
     """Reads only row groups whose footer term-range admits the term
     (bucket files are term-sorted — typically 1-2 row groups for a
-    normal term), each charged to the work budget before it is read."""
+    normal term), each charged to the work budget before it is read.
+    Blocks come out in (file `fi`, row group `rg`, `row`) order."""
     import pyarrow.compute as pc
 
     from ..functions.hashing import term_bucket
@@ -531,8 +530,10 @@ def _load_term_meta(store: IndexStore, term: str) -> dict:
 def _decode_selected(store: IndexStore, metas: list[tuple[dict, np.ndarray]],
                      need_dls: bool = True):
     """Decode the selected blocks' binaries. metas: [(term_meta, mask)].
-    Binary columns are read per touched row group with .take(rows) —
-    untouched row groups' binaries are never materialized.
+    Binary columns are read with one call per touched blocks file (its
+    touched row groups, through the memoized handle, on the calling
+    thread) and the selected rows taken — untouched row groups'
+    binaries are never materialized.
     Returns [(doc_ids, tfs, dls)] per (term_meta, mask) input. The
     selected blocks' postings (metadata `n`) are charged to the work
     budget before any binary is read.
@@ -546,119 +547,38 @@ def _decode_selected(store: IndexStore, metas: list[tuple[dict, np.ndarray]],
     results = []
     for tm, mask in metas:
         rows_sel = np.flatnonzero(mask)
-        docs_bufs: list = []
-        tfs_bufs: list = []
-        dls_bufs: list = []
-        if rows_sel.size:
-            files = _bucket_files(store, "blocks", tm["bucket"])
-            order = np.lexsort((tm["row"][rows_sel], tm["rg"][rows_sel],
-                                tm["fi"][rows_sel]))
-            rows_sel = rows_sel[order]
-            spans = []  # (fi, rg, take) in buffer order (fi-major)
-            i = 0
-            while i < rows_sel.size:
-                fi = int(tm["fi"][rows_sel[i]])
-                rg = int(tm["rg"][rows_sel[i]])
-                j = i
-                while (j < rows_sel.size
-                       and int(tm["fi"][rows_sel[j]]) == fi
-                       and int(tm["rg"][rows_sel[j]]) == rg):
-                    j += 1
-                spans.append((fi, rg, tm["row"][rows_sel[i:j]]))
-                i = j
-
-            # one memoized ParquetFile handle is not thread-safe, so
-            # same-handle reads serialize (_read lock); distinct
-            # handles on the same file ARE independent readers. Group
-            # spans by file, and when the files alone can't saturate
-            # the pool (the large-site shape: ONE bucket file, many row
-            # groups — round-5 profile had its whole 1.87 s t_decode on
-            # a single thread), shard big groups across EXTRA ad-hoc
-            # handles: a footer re-parse (~ms) buys parallel IO +
-            # decompression (pyarrow drops the GIL inside each read).
-            # spans are fi-major after the lexsort, so unit order keeps
-            # buffer order.
-            groups: list[list] = []
-            for s in spans:
-                if groups and groups[-1][0][0] == s[0]:
-                    groups[-1].append(s)
-                else:
-                    groups.append([s])
-            units: list[tuple] = []  # (fi, span chunk, shard path|None)
-            for grp in groups:
-                fi = grp[0][0]
-                path = getattr(files[fi], "_sx_path", None)
-                shards = min(DECODE_READ_THREADS,
-                             len(grp) // MIN_SPANS_PER_SHARD)
-                if (len(groups) < DECODE_READ_THREADS and shards > 1
-                        and path is not None):
-                    size = -(-len(grp) // shards)
-                    for ci in range(0, len(grp), size):
-                        units.append((fi, grp[ci:ci + size], path))
-                else:
-                    units.append((fi, grp, None))
-
-            def _read_unit(unit):
-                fi, chunk, path = unit
-                if path is not None:
-                    # ad-hoc shard handle: this thread owns it
-                    # exclusively, no lock needed — but a re-open BY
-                    # PATH can see a REPLACED file if a concurrent
-                    # mutation overwrote the bucket (the memoized
-                    # handle's open fd pins the original inode; a new
-                    # path-open does not). Guard: footer must match the
-                    # memoized snapshot, else read through the memoized
-                    # handle (serialized but fd-pinned-correct).
-                    import pyarrow.parquet as pq
-                    try:
-                        pf = pq.ParquetFile(path)
-                    except Exception:  # replaced/unlinked mid-query
-                        pf = None
-                    if pf is not None:
-                        try:
-                            am, mm = pf.metadata, files[fi].metadata
-                            if (am.num_rows == mm.num_rows
-                                    and am.num_row_groups
-                                    == mm.num_row_groups
-                                    and am.serialized_size
-                                    == mm.serialized_size):
-                                return [pf.read_row_group(
-                                            rg, columns=cols,
-                                            use_threads=False).take(take)
-                                        for _, rg, take in chunk]
-                        finally:
-                            try:
-                                pf.close()
-                            except Exception:
-                                pass
-                return [_read(files[fi], cols, rg).take(take)
-                        for _, rg, take in chunk]
-            if len(units) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-                with ThreadPoolExecutor(DECODE_READ_THREADS) as pool:
-                    tbl_groups = list(pool.map(_read_unit, units))
-            else:
-                tbl_groups = [_read_unit(u) for u in units]
-            for btbl in (t for grp in tbl_groups for t in grp):
-                docs_bufs.extend(btbl.column("docs").to_pylist())
-                tfs_bufs.extend(btbl.column("tfs").to_pylist())
-                if need_dls:
-                    dls_bufs.extend(btbl.column("dls").to_pylist())
-        if docs_bufs:
-            # vectorized passes over the joined streams — per-block
-            # decode_block calls are call-overhead-bound at full-list
-            # scale (a stopword is tens of thousands of ~128-posting
-            # blocks); rows_sel is already in buffer order after the
-            # lexsort, so metadata `n` aligns with the buffers. The
-            # threaded wrapper shards big streams across block chunks
-            # (numpy releases the GIL in the kernel — measured ~6× on
-            # the round-5 large-site profile's 1.9 s varint phase)
-            results.append(decode_blocks_batch_threaded(
-                docs_bufs, tfs_bufs, dls_bufs if need_dls else None,
-                tm["n"][rows_sel]))
-        else:
+        if rows_sel.size == 0:
             e = np.empty(0, np.int64)
             results.append((e, e, e if need_dls else None))
+            continue
+        # {file: {row group: [rows]}} in the metadata's (fi, rg, row)
+        # order — the order of the buffers below, so metadata `n` lines
+        # up with them
+        touched: dict[int, dict[int, list[int]]] = {}
+        for fi, rg, row in zip(tm["fi"][rows_sel].tolist(),
+                               tm["rg"][rows_sel].tolist(),
+                               tm["row"][rows_sel].tolist()):
+            touched.setdefault(fi, {}).setdefault(rg, []).append(row)
+        files = _bucket_files(store, "blocks", tm["bucket"])
+        bufs: dict[str, list] = {c: [] for c in cols}
+        for fi, rows_by_rg in touched.items():
+            md = files[fi].metadata
+            take, base = [], 0  # positions in the row groups' concatenation
+            for rg, rows in rows_by_rg.items():
+                take += [base + r for r in rows]
+                base += md.row_group(rg).num_rows
+            tbl = _read(files[fi], cols, list(rows_by_rg)).take(take)
+            for c in cols:
+                bufs[c].extend(tbl.column(c).to_pylist())
+        # vectorized passes over the joined streams — per-block
+        # decode_block calls are call-overhead-bound at full-list
+        # scale (a stopword is tens of thousands of ~128-posting
+        # blocks). The threaded wrapper shards big streams across
+        # block chunks (numpy releases the GIL in the kernel — measured
+        # ~6× on the round-5 large-site profile's 1.9 s varint phase)
+        results.append(decode_blocks_batch_threaded(
+            bufs["docs"], bufs["tfs"], bufs.get("dls"),
+            tm["n"][rows_sel]))
     return results
 
 
@@ -1152,8 +1072,11 @@ def serve_doc_rows(store: IndexStore, doc_ids: list[int]):
     by every mutation (tombstones only mask posting generations).
 
     Returns {doc_id: {url_norm, host, path, text}} or None on a decline
-    → caller uses the doc_bucket-pruned Spark fallback. Ids absent from
-    the store are simply absent from the result."""
+    → caller uses the doc_bucket-pruned Spark fallback. An id with no
+    doclens/ row is absent from the result: an id absent from the
+    store, and also a zero-term page, which docs/ holds but doclens/
+    does not (hop 1 resolves hosts from doclens/ only). Search never
+    hydrates such a page — it is never a top-k hit."""
     from ..functions.hashing import doc_bucket as _dbf
     from ..functions.hashing import term_bucket as _tbf
     if not doc_ids:

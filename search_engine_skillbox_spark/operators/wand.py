@@ -33,6 +33,9 @@ query.py) on every fixture query.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -207,17 +210,39 @@ def site_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
             return local_rows_df(
                 spark, [(int(d), float(s)) for d, s in served], empty)
 
+    with _site_inputs(spark, store, q_terms, host) as site:
+        if site is None:
+            return spark.createDataFrame([], empty)
+        return _site_topk_dist(spark, store, site, k, mode,
+                               lookup_factor, debug)
+
+
+class _Site(NamedTuple):
+    """What the distributed site plans know about one (query, host)."""
+    meta: dict
+    n_site: int
+    present: list[str]  # query terms found in the dictionary
+    df_g: dict[str, int]  # term → global df
+    n_salt0: dict[str, int]  # term → gen-0 salt count
+    dhost: DataFrame  # the host's doc_ids, persisted
+
+
+@contextmanager
+def _site_inputs(spark: SparkSession, store: IndexStore,
+                 q_terms: list[str], host: str):
+    """The shared preamble of the distributed site top-k and site match
+    count. N(site) comes from the per-host doc counts persisted at
+    build time (meta.json n_docs_by_host, zero jobs); the host's doc
+    ids are read from docs/ with host_bucket PARTITION PRUNING plus a
+    pushed host filter, persisted for the with-block and unpersisted
+    when it exits, also on error. Yields None when the host has no docs
+    or no query term is in the dictionary: the answer is empty."""
     meta = store.meta()
     n_site = int(meta.get("n_docs_by_host", {}).get(host, 0))
-    if n_site <= 0:
-        return spark.createDataFrame([], empty)
-    trows = store.query_terms_rows(spark, q_terms)
-    present = [r["term"] for r in trows]
-    if not present:
-        return spark.createDataFrame([], empty)
-    df_g = {r["term"]: int(r["df"]) for r in trows}
-    n_salt0 = {r["term"]: max(1, int(r["n_salt"])) for r in trows}
-
+    trows = store.query_terms_rows(spark, q_terms) if n_site > 0 else []
+    if not trows:
+        yield None
+        return
     from ..functions.hashing import term_bucket
     hb = term_bucket(host, store.n_host_buckets)  # driver-side, zero jobs
     dhost = (store.docs(spark)
@@ -226,23 +251,25 @@ def site_topk(spark: SparkSession, store: IndexStore, q_terms: list[str],
              .select("doc_id")).persist()
     try:  # opened right after persist: a plan-construction error must
         # still unpersist dhost (same leak class as dedup's skew cap)
-        return _site_topk_dist(spark, store, meta, present, k,
-                               mode, lookup_factor, debug, dhost,
-                               df_g, n_salt0, n_site)
+        yield _Site(meta, n_site, [r["term"] for r in trows],
+                    {r["term"]: int(r["df"]) for r in trows},
+                    {r["term"]: max(1, int(r["n_salt"])) for r in trows},
+                    dhost)
     finally:
         dhost.unpersist()
 
 
-def _site_candidates(spark, store, present, dhost, df_g, n_salt0,
-                     n_site, lookup_factor, debug=None):
+def _site_candidates(spark, store, site: _Site, lookup_factor,
+                     debug=None):
     """Site-restricted live postings of the query terms: the shared
     candidate plan of the distributed site top-k AND the distributed
     site match count (both must prune stopword-scale terms with the
     block-coverage semi-join — counting is not a license to decode a
     global posting list)."""
+    present, dhost = site.present, site.dhost
     heavy = [t for t in present
-             if df_g[t] > lookup_factor * n_site
-             and n_site <= SITE_HIT_JOIN_CAP]
+             if site.df_g[t] > lookup_factor * site.n_site
+             and site.n_site <= SITE_HIT_JOIN_CAP]
     light = [t for t in present if t not in heavy]
     if debug is not None:
         debug["site_dist"] = {"heavy": list(heavy), "light": list(light)}
@@ -264,7 +291,7 @@ def _site_candidates(spark, store, present, dhost, df_g, n_salt0,
         # nested-loop join.
         cs = dhost.withColumn(
             "csalt", F.pmod(F.xxhash64("doc_id"),
-                            F.lit(n_salt0[t])).cast("int"))
+                            F.lit(site.n_salt0[t])).cast("int"))
         rng = ((F.col("b.first_doc") <= F.col("c.doc_id"))
                & (F.col("c.doc_id") <= F.col("b.last_doc")))
         tb = qblocks.filter(F.col("term") == t)
@@ -289,37 +316,20 @@ def site_match_count(spark: SparkSession, store: IndexStore,
     the host containing ANY query term) with the same block-coverage
     pruning as site_topk — the service layer's fallback when
     serve_match_count declines (big site / tombstones / caps)."""
-    meta = store.meta()
-    n_site = int(meta.get("n_docs_by_host", {}).get(host, 0))
-    if n_site <= 0:
-        return 0
-    trows = store.query_terms_rows(spark, q_terms)
-    present = [r["term"] for r in trows]
-    if not present:
-        return 0
-    df_g = {r["term"]: int(r["df"]) for r in trows}
-    n_salt0 = {r["term"]: max(1, int(r["n_salt"])) for r in trows}
-    from ..functions.hashing import term_bucket
-    hb = term_bucket(host, store.n_host_buckets)
-    dhost = (store.docs(spark)
-             .filter(F.col("host_bucket") == hb)  # partition pruning
-             .filter(F.col("host") == host)
-             .select("doc_id")).persist()
-    try:
-        allp = _site_candidates(spark, store, present, dhost, df_g,
-                                n_salt0, n_site, lookup_factor)
-        return (allp.join(dhost, "doc_id")
+    with _site_inputs(spark, store, q_terms, host) as site:
+        if site is None:
+            return 0
+        return (_site_candidates(spark, store, site, lookup_factor)
+                .join(site.dhost, "doc_id")
                 .select("doc_id").distinct().count())
-    finally:
-        dhost.unpersist()
 
 
-def _site_topk_dist(spark, store, meta, present, k, mode,
-                    lookup_factor, debug, dhost, df_g, n_salt0, n_site):
+def _site_topk_dist(spark, store, site: _Site, k, mode, lookup_factor,
+                    debug):
     empty = "doc_id long, score double"
-    allp = _site_candidates(spark, store, present, dhost, df_g,
-                            n_salt0, n_site, lookup_factor, debug)
-    cand = allp.join(dhost, "doc_id").persist()
+    present, n_site = site.present, site.n_site
+    allp = _site_candidates(spark, store, site, lookup_factor, debug)
+    cand = allp.join(site.dhost, "doc_id").persist()
     try:
         site_df = {r["term"]: r["df"] for r in
                    cand.groupBy("term")
@@ -332,7 +342,8 @@ def _site_topk_dist(spark, store, meta, present, k, mode,
         if mode == "compat":
             w = S.tf_weight_compat(F.col("tf"))
         else:
-            w = S.tf_weight_bm25(F.col("tf"), F.col("dl"), meta["avgdl"])
+            w = S.tf_weight_bm25(F.col("tf"), F.col("dl"),
+                                 site.meta["avgdl"])
         rows = (c.select("doc_id", (w * F.col("idf")).alias("contrib"))
                 .groupBy("doc_id").agg(F.sum("contrib").alias("score"))
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

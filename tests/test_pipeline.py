@@ -251,62 +251,6 @@ def test_clean_corpus_resume(spark, tmp_path):
     assert _dir_fingerprint(raw) != fp
 
 
-def test_fused_equals_staged(spark, tmp_path):
-    """clean_corpus_fused (cache boundaries, final write only) must
-    produce exactly the staged chain's final table."""
-    from search_engine_skillbox_spark.operators.pipeline import (
-        clean_corpus, clean_corpus_fused, default_clean_stages)
-    raw = _clean_input(spark, tmp_path, n=250)
-    staged = clean_corpus(spark, raw, str(tmp_path / "staged"),
-                          stages=default_clean_stages(
-                              gopher_structural_only=True))
-    fused = clean_corpus_fused(spark, raw, str(tmp_path / "fused"),
-                               stages=default_clean_stages(
-                                   gopher_structural_only=True))
-    got = sorted((r["doc_id"], r["text"]) for r in
-                 spark.read.parquet(fused["final_path"]).collect())
-    want = sorted((r["doc_id"], r["text"]) for r in
-                  spark.read.parquet(staged["final_path"]).collect())
-    assert got == want and len(got) > 0
-    assert fused["rows_out"] == len(want)
-
-
-def test_fused_unpersists_on_success_and_failure(spark, tmp_path):
-    """VERDICT r6: clean_corpus_fused must leave ZERO persisted frames
-    behind — after a clean run (working set capped by per-stage
-    unpersist) AND after an injected mid-chain failure (try/finally,
-    not success-path-only cleanup)."""
-    from search_engine_skillbox_spark.operators.pipeline import (
-        clean_corpus_fused, default_clean_stages)
-
-    def n_cached():
-        # count persisted frames EXCLUDING localCheckpoint blocks:
-        # _drop_big_buckets' tiny checkpointed key set is GC-managed
-        # with the plan that references it (by design), not a leak
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return sum(1 for e in jmap.entrySet()
-                   if not e.getValue().rdd().isLocallyCheckpointed())
-
-    raw = _clean_input(spark, tmp_path, n=200)
-    base = n_cached()
-    stages = default_clean_stages(gopher_structural_only=True)
-    res = clean_corpus_fused(spark, raw, str(tmp_path / "ok"),
-                             stages=stages)
-    assert res["rows_out"] > 0
-    assert n_cached() == base
-
-    stages = default_clean_stages(gopher_structural_only=True)
-    name3, _fn3 = stages[3]
-
-    def boom(df):
-        raise RuntimeError("synthetic mid-chain failure")
-    stages[3] = (name3, boom)
-    with pytest.raises(RuntimeError, match="synthetic mid-chain"):
-        clean_corpus_fused(spark, raw, str(tmp_path / "fail"),
-                           stages=stages)
-    assert n_cached() == base
-
-
 def test_dir_fingerprint_nanosecond_and_count(tmp_path):
     """ADVICE r6: an in-place rewrite within the same SECOND (same
     names/sizes) must still change the fingerprint — mtime is folded

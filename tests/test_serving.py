@@ -5,6 +5,8 @@ test_index_store.py."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 
@@ -40,6 +42,24 @@ def test_terms_rows_arrow_matches_spark(spark, store, qterms):
 
 def _declined(store, entry, reason):
     return sv.declines(store).get((entry, reason), 0)
+
+
+@contextmanager
+def _thread_starts():
+    """The names of the threads the body starts from the calling
+    thread (threading.Thread.start is patched for the body)."""
+    import threading
+    caller, real, started = threading.get_ident(), threading.Thread.start, []
+
+    def start(self):
+        if threading.get_ident() == caller:
+            started.append(self.name)
+        return real(self)
+    threading.Thread.start = start
+    try:
+        yield started
+    finally:
+        threading.Thread.start = real
 
 
 def test_cap_breach_falls_back_to_distributed(spark, store, qterms,
@@ -86,7 +106,11 @@ def test_serving_sees_appended_generation(spark, store, qterms, oracle):
         "text": f"{rare} {rare} {rare} fresh appended document",
         "lang": "en"})
     assert not res["old_existed"] and not store.has_tombstones()
-    after = sv.serve_topk(store, [rare], 50)
+    # the term's blocks now span two files of its bucket; the decode
+    # still reads them on this thread
+    with _thread_starts() as started:
+        after = sv.serve_topk(store, [rare], 50)
+    assert started == []
     assert after is not None
     docs_after = {d for d, _ in after}
     assert res["doc_id"] in docs_after
@@ -335,10 +359,11 @@ def test_serve_doc_rows_cap_declines(spark, store, monkeypatch):
     assert _declined(store, "serve_doc_rows", "work_budget") == n0 + 2
 
 
-def _split_row_groups(st, rows: int) -> str:
-    """Rewrite every docs/ and doclens/ file of `st` with `rows`-row row
-    groups (same rows, same order) and return the docs file with the
-    most rows — a store whose hydrate files have many row groups."""
+def _split_row_groups(st, rows: int,
+                      tables=("docs", "doclens")) -> str | None:
+    """Rewrite every file of `tables` in `st` with `rows`-row row groups
+    (same rows, same order) and return the docs file with the most rows
+    — a store whose files have many row groups."""
     import os
 
     import pyarrow.parquet as pq
@@ -346,7 +371,7 @@ def _split_row_groups(st, rows: int) -> str:
     from search_engine_skillbox_spark.operators.index_store import (
         walk_parquet_files)
     biggest, most = None, 0
-    for table in ("docs", "doclens"):
+    for table in tables:
         for fp in walk_parquet_files(f"{st.path}/{table}"):
             tbl = pq.read_table(fp)
             pq.write_table(tbl, fp, row_group_size=rows)
@@ -420,6 +445,56 @@ def test_hydrate_budget_charges_hit_row_groups(spark, mk_store,
     assert got is not None and sv.declines(st) == {}
     assert {k: (r["url_norm"], r["host"], r["path"], r["text"])
             for k, r in got.items()} == _docs_rows(spark, st, [d])
+
+
+def test_serving_reads_stay_on_calling_thread(spark, mk_store, qterms,
+                                              monkeypatch):
+    """On a store whose blocks/ files hold many row groups each, the
+    served top-k, site top-k (lookup and decode branches) and match
+    counts equal the distributed answers; every blocks/ file is opened
+    once (its memoized handle), and no serving call starts a thread."""
+    import pyarrow.parquet as pq
+
+    from search_engine_skillbox_spark.operators.index_store import (
+        walk_parquet_files)
+    from search_engine_skillbox_spark.operators.wand import (
+        live_docids, site_match_count, site_topk)
+    st = mk_store("split_blocks")
+    _split_row_groups(st, 1, tables=("blocks",))
+    host, two = "alpha.test", qterms[:2]
+    assert pq.read_metadata(next(walk_parquet_files(
+        f"{st.path}/blocks"))).num_row_groups >= 8
+    want_topk = [(r["doc_id"], r["score"]) for r in
+                 wand_topk(spark, st, two, 10, serving=False).collect()]
+    want_site = [(r["doc_id"], r["score"]) for r in
+                 site_topk(spark, st, qterms, 10, host,
+                           serving=False).collect()]
+    want_count = (live_docids(spark, st, st.query_blocks(spark, qterms))
+                  .distinct().count())
+    want_site_count = site_match_count(spark, st, qterms, host)
+
+    opened = []
+    real_pf = pq.ParquetFile
+
+    def parquet_file(path, *args, **kwargs):
+        opened.append(path)
+        return real_pf(path, *args, **kwargs)
+    monkeypatch.setattr(pq, "ParquetFile", parquet_file)
+    with _thread_starts() as started:
+        topk = sv.serve_topk(st, two, 10)
+        sites = [sv.serve_site_topk(st, qterms, 10, host, lookup_factor=0),
+                 sv.serve_site_topk(st, qterms, 10, host)]
+        counts = (sv.serve_match_count(st, qterms),
+                  sv.serve_match_count(st, qterms, host))
+    monkeypatch.undo()
+    assert started == []
+    blocks = [p for p in opened if "/blocks/" in p]
+    assert blocks and len(blocks) == len(set(blocks)), blocks
+    for got, want in [(topk, want_topk)] + [(g, want_site) for g in sites]:
+        assert got is not None and len(got) == len(want) > 0
+        for (gd, gs), (wd, ws) in zip(got, want):
+            assert gd == wd and np.isclose(gs, ws, rtol=1e-12)
+    assert counts == (want_count, want_site_count)
 
 
 def test_meta_memo_sees_writes_through_another_instance(spark, mk_store,
@@ -528,22 +603,12 @@ def test_site_heavy_semijoin_plans_hash_join(spark, store, qterms):
     has no equi key and silently degrades to a BroadcastNestedLoopJoin
     of n_blocks × |site| predicate evaluations (the plan-shape
     regression this pins)."""
-    from pyspark.sql import functions as F
-
-    from search_engine_skillbox_spark.functions.hashing import term_bucket
-    from search_engine_skillbox_spark.operators.wand import _site_candidates
-    host = "alpha.test"
-    hb = term_bucket(host, store.n_host_buckets)
-    dhost = (store.docs(spark).filter(F.col("host_bucket") == hb)
-             .filter(F.col("host") == host).select("doc_id"))
-    trows = store.query_terms_rows(spark, qterms)
-    present = [r["term"] for r in trows]
-    df_g = {r["term"]: int(r["df"]) for r in trows}
-    n_salt0 = {r["term"]: max(1, int(r["n_salt"])) for r in trows}
-    n_site = int(store.meta()["n_docs_by_host"][host])
-    allp = _site_candidates(spark, store, present, dhost, df_g, n_salt0,
-                            n_site, lookup_factor=0)  # all terms heavy
-    plan = allp._jdf.queryExecution().executedPlan().toString()
+    from search_engine_skillbox_spark.operators.wand import (
+        _site_candidates, _site_inputs)
+    with _site_inputs(spark, store, qterms, "alpha.test") as site:
+        allp = _site_candidates(spark, store, site,
+                                lookup_factor=0)  # all terms heavy
+        plan = allp._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
 
 
